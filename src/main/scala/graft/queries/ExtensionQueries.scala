@@ -14591,7 +14591,7 @@ object ExtensionQueries {
     * STREAMING path — x3/x4's semantics (Test1.cs:187-209) re-run under
     * micro-batch re-evaluation. s5 already streams a `v_*` glob; this
     * gate adds the two remaining DSL capture shapes the StAX expressions
-    * memo-cache per row (XmlStax.children): the `tag` accessor inside an
+    * memo-cache per row (graft.xml.XmlRowMemo): the `tag` accessor inside an
     * array bind (child names are DATA — `q_<returnflag>` — recovered via
     * glob + Tag()) and a computed alternatives column
     * (`coalesce(item1, item2*10)`) whose member expressions re-read the

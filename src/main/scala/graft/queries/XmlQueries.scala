@@ -280,7 +280,7 @@ object XmlQueries {
       |FROM documents ORDER BY doc_id""".stripMargin
 
   /** Ops #1/#9 at the FILE level: a wildcard spec read from a multi-file
-    * directory on disk through [[graft.xml.XmlElementInputFormat]] (the
+    * directory on disk through the `graft-xml` FileFormat (the
     * splittable rowTag scanner — the distributed form of the reference's
     * glob dispatch, Parser.cs:175-187). The XML is first materialized to
     * text files from `orders`, so the oracle can compute the same result
@@ -319,7 +319,7 @@ object XmlQueries {
   /** x7's file-level read over GZIPPED shards: the text is written with
     * gzip compression (many `part-*.txt.gz` files), and the rowTag scanner
     * reads each through its codec as a single split
-    * ([[graft.xml.XmlElementInputFormat]] `isSplitable` = false for
+    * (the `graft-xml` FileFormat's `isSplitable` = false for
     * compressed paths — serial per file, parallel across files, the
     * standard Hadoop contract for non-splittable codecs). The oracle
     * computes the same result straight from `customer`, so a hash match

@@ -16,8 +16,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * This is the one custom operator the native XML source cannot express
   * (SURVEY.md §7.3): the reference's wildcard dispatch + `Tag()` capture +
   * per-child array emit (reference Parser.cs:166-187, 257-316). Evaluation is
-  * a single StAX pass per value (CodegenFallback — the XML tokenization
-  * dominates, codegen of the wrapper would not help).
+  * one byte-level fast scan or one StAX pass per value
+  * ([[XmlChildrenExpr.evalJava]]).
   *
   * Scale: embarrassingly parallel per row; no state, no shuffle. The returned
   * children carry re-parsable outer XML so downstream exact-member binding
@@ -31,10 +31,9 @@ case class XmlChildrenExpr(child: Expression, patterns: Seq[String],
   override def nullable: Boolean = true
   override def prettyName: String = "xml_children"
 
-  // computed once per instance; the hot memo path then hashes only the
-  // xml string (see XmlStax.specKey)
+  // computed once per instance; the hot path then hashes only the row
   @transient private lazy val specKey: String =
-    XmlStax.specKey(patterns, fromRoot, needOuter, needValue)
+    XmlChildrenExpr.siteKey(patterns, fromRoot, needOuter, needValue)
 
   override def nullSafeEval(input: Any): Any =
     XmlChildrenExpr.evalJava(input.asInstanceOf[UTF8String], patterns,
@@ -72,54 +71,37 @@ object XmlChildrenExpr {
       valueContainsNull = false), nullable = false)))
   val outType: DataType = ArrayType(elemType, containsNull = false)
 
-  // Memoize the CONSTRUCTED ArrayData (not just the Seq[Child]): a bound
-  // projection evaluates the same extraction from many member expressions,
-  // and rebuilding UTF8Strings per reference was a measured hotspot. The
-  // cached GenericArrayData is immutable and safe to share within a thread.
-  private final val MemoSlots = 4
-  private val memo = new ThreadLocal[
-      java.util.HashMap[String, java.util.LinkedHashMap[String, ArrayData]]] {
-    override def initialValue() =
-      new java.util.HashMap[String,
-        java.util.LinkedHashMap[String, ArrayData]]()
-  }
-  private def newLru(): java.util.LinkedHashMap[String, ArrayData] =
-    new java.util.LinkedHashMap[String, ArrayData](MemoSlots * 2, 0.75f,
-        true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, ArrayData]): Boolean =
-        size() > MemoSlots
-    }
+  /** Row-memo site key of an extraction; also keys its compiled patterns.
+    * [[XmlFirstChildExpr]] and [[XmlExplodeChildren]] use the same key, so
+    * they share the extraction of an [[XmlChildrenExpr]] with the same
+    * spec. */
+  def siteKey(patterns: Seq[String], fromRoot: Boolean, needOuter: Boolean,
+      needValue: Boolean): String =
+    "children:" + XmlStax.specKey(patterns, fromRoot, needOuter, needValue)
 
-  def evalJava(input: UTF8String, patterns: Seq[String],
-      fromRoot: Boolean): ArrayData =
-    evalJava(input, patterns, fromRoot, XmlStax.specKey(patterns, fromRoot),
-      needOuter = true, needValue = true)
+  /** Row-memo site key of a fused container descent. */
+  def siteKeyAt(container: String, patterns: Seq[String],
+      needOuter: Boolean, needValue: Boolean): String =
+    "childrenAt:" + container + "\u0000" +
+      XmlStax.specKey(patterns, fromRoot = true, needOuter, needValue)
 
-  /** Static evaluator shared by interpreted eval and generated code. */
+  /** Static evaluator shared by interpreted eval and generated code, and
+    * the one child extraction every expression reads: the byte-level fast
+    * path (value-only capture of leaf children: no decode, no StAX, values
+    * copied straight from the input bytes) first, and anything outside its
+    * proven-equivalent subset through the StAX walk. Only the StAX result
+    * is memoized ([[XmlRowMemo]]): it is the constructed ArrayData, because
+    * rebuilding UTF8Strings per reference was a measured hotspot, and it is
+    * immutable, so sharing it within a thread is safe. */
   def evalJava(input: UTF8String, patterns: Seq[String],
       fromRoot: Boolean, specKey: String, needOuter: Boolean,
       needValue: Boolean): ArrayData = {
-    // byte-level fast path (value-only capture of leaf children): no
-    // toString decode, no StAX, values copied straight from the input
-    // bytes; anything outside the proven-equivalent subset falls through
     val fast = XmlFastScan.children(input, patterns, specKey, fromRoot,
       needOuter, needValue)
-    if (!(fast eq XmlFastScan.Bail)) return fast.asInstanceOf[ArrayData]
-    val xml = input.toString
-    val perSpec = memo.get()
-    var cache = perSpec.get(specKey)
-    if (cache == null) {
-      cache = newLru()
-      perSpec.put(specKey, cache)
-    }
-    val hit = cache.get(xml)
-    if (hit != null || cache.containsKey(xml)) hit
-    else {
-      val res = build(XmlStax.children(xml, patterns, fromRoot, specKey,
+    if (!(fast eq XmlFastScan.Bail)) fast.asInstanceOf[ArrayData]
+    else XmlRowMemo(specKey, input) {
+      build(XmlStax.children(input.toString, patterns, fromRoot, specKey,
         needOuter, needValue))
-      cache.put(xml, res)
-      res
     }
   }
 
@@ -132,9 +114,8 @@ object XmlChildrenExpr {
     new GenericArrayData(Array.empty[Any]),
     new GenericArrayData(Array.empty[Any]))
 
-  /** One Child as the `elemType` struct row (shared by the array builder
-    * and the first-match expression). */
-  def buildChildRow(c: XmlStax.Child): InternalRow = {
+  /** One Child as the `elemType` struct row. */
+  private def buildChildRow(c: XmlStax.Child): InternalRow = {
     val attrs = if (c.attrs.isEmpty) emptyMap else {
       val n = c.attrs.length
       val ks = new Array[Any](n)
@@ -167,28 +148,17 @@ object XmlChildrenExpr {
     new GenericArrayData(out)
   }
 
-  /** Static evaluator for [[XmlChildrenAtExpr]] — same ArrayData memo,
-    * container-prefixed key. */
+  /** Static evaluator for [[XmlChildrenAtExpr]]: the same fast scan,
+    * else memoized StAX, for the fused container descent. */
   def evalJavaAt(input: UTF8String, container: String,
       patterns: Seq[String], specKey: String, needOuter: Boolean,
       needValue: Boolean): ArrayData = {
     val fast = XmlFastScan.childrenAt(input, container, patterns, specKey,
       needOuter, needValue)
-    if (!(fast eq XmlFastScan.Bail)) return fast.asInstanceOf[ArrayData]
-    val xml = input.toString
-    val perSpec = memo.get()
-    var cache = perSpec.get(specKey)
-    if (cache == null) {
-      cache = newLru()
-      perSpec.put(specKey, cache)
-    }
-    val hit = cache.get(xml)
-    if (hit != null || cache.containsKey(xml)) hit
-    else {
-      val res = build(XmlStax.childrenAt(xml, container, patterns, specKey,
+    if (!(fast eq XmlFastScan.Bail)) fast.asInstanceOf[ArrayData]
+    else XmlRowMemo(specKey, input) {
+      build(XmlStax.childrenAt(input.toString, container, patterns, specKey,
         needOuter, needValue))
-      cache.put(xml, res)
-      res
     }
   }
 }
@@ -210,8 +180,7 @@ case class XmlChildrenAtExpr(child: Expression, container: String,
   override def prettyName: String = "xml_children_at"
 
   @transient private lazy val specKey: String =
-    "at:" + container + ":" +
-      XmlStax.specKey(patterns, fromRoot = true, needOuter, needValue)
+    XmlChildrenExpr.siteKeyAt(container, patterns, needOuter, needValue)
 
   override def nullSafeEval(input: Any): Any =
     XmlChildrenExpr.evalJavaAt(input.asInstanceOf[UTF8String], container,
@@ -242,9 +211,10 @@ case class XmlChildrenAtExpr(child: Expression, container: String,
   *
   * The HOF form evaluates INTERPRETED (higher-order functions are
   * CodegenFallback) and materializes the filtered array per member
-  * expression; this expression linear-scans the memoized StAX extraction
-  * (same per-thread cache as [[XmlChildrenExpr]], so N members on one row
-  * still parse once) and builds ONE struct for the winner. Dispatch is the
+  * expression; this expression linear-scans the extraction of
+  * [[XmlChildrenExpr.evalJava]] (same site key as an [[XmlChildrenExpr]]
+  * over the same spec, so N members on one row still parse once) and
+  * returns the winner's struct from it. Dispatch is the
   * reference's (Parser.cs:166-187): an exact `memberName` matches by
   * equality; a glob member matches `prefix*suffix` minus any tag claimed
   * by an exact member or by a LATER-registered glob (last-glob-wins). */
@@ -258,7 +228,7 @@ case class XmlFirstChildExpr(child: Expression, capturePatterns: Seq[String],
   override def prettyName: String = "xml_first_child"
 
   @transient private lazy val specKey: String =
-    XmlStax.specKey(capturePatterns, fromRoot, needOuter, needValue)
+    XmlChildrenExpr.siteKey(capturePatterns, fromRoot, needOuter, needValue)
   @transient private lazy val exactSet: Set[String] = exactNames.toSet
   @transient private lazy val selfGlob: Option[XmlStax.Glob] =
     if (memberName.contains("*")) {
@@ -280,26 +250,13 @@ case class XmlFirstChildExpr(child: Expression, capturePatterns: Seq[String],
 
   /** Instance evaluator referenced directly from the generated code. */
   def firstChild(input: UTF8String): InternalRow = {
-    val fast = XmlFastScan.children(input, capturePatterns, specKey,
-      fromRoot, needOuter, needValue)
-    if (!(fast eq XmlFastScan.Bail)) {
-      val arr = fast.asInstanceOf[org.apache.spark.sql.catalyst.util
-        .GenericArrayData]
-      var i = 0
-      while (i < arr.numElements()) {
-        val row = arr.array(i).asInstanceOf[InternalRow]
-        if (matches(row.getUTF8String(0).toString)) return row
-        i += 1
-      }
-      return null
-    }
-    val kids = XmlStax.children(input.toString, capturePatterns, fromRoot,
+    val kids = XmlChildrenExpr.evalJava(input, capturePatterns, fromRoot,
       specKey, needOuter, needValue)
     if (kids == null) return null
     var i = 0
-    while (i < kids.length) {
-      if (matches(kids(i).tag))
-        return XmlChildrenExpr.buildChildRow(kids(i))
+    while (i < kids.numElements()) {
+      val row = kids.getStruct(i, 4)
+      if (matches(row.getUTF8String(0).toString)) return row
       i += 1
     }
     null

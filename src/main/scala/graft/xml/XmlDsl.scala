@@ -416,8 +416,9 @@ private[xml] final class NativeBindNode(parsed: Column, tagC: Column,
 /** StAX-path binding: exact members bind natively via the pre-built
   * `parsed` struct (from_xml over the outer XML); wildcard/custom/
   * heterogeneous members bind through the codegen'd first-match
-  * expression ([[XmlFirstChildExpr]] — one memoized StAX extraction per
-  * row shared by every member, no interpreted HOF filters). */
+  * expression ([[XmlFirstChildExpr]] — one extraction per row, through
+  * [[XmlChildrenExpr.evalJava]] and the row memo, shared by every member;
+  * no interpreted HOF filters). */
 private[xml] final class StaxBindNode(outer: Column, parsed: Column,
     tagC: Column, spec: ObjSpec) extends BaseBindNode(spec) {
 
@@ -567,8 +568,8 @@ final class CompiledXmlParser private[xml] (
     * Duplicate evaluation note: the bound projection references the per-row
     * parses from several member expressions, often under `when` branches
     * where Spark's codegen subexpression elimination does not apply; the
-    * StAX expressions therefore carry a per-thread memo cache
-    * (XmlStax.children) that makes same-row re-evaluation O(1). */
+    * parse and extraction expressions therefore share a per-thread row
+    * memo ([[XmlRowMemo]]) that makes same-row re-evaluation O(1). */
   def parse(xmlCol: Column): Column = {
     val x = trim(xmlCol)
     val tagC = rootTag.map(lit(_)).getOrElse(Bind.rootTagOf(x))
@@ -591,9 +592,7 @@ final class CompiledXmlParser private[xml] (
     * out across cores without manual split tuning) — then binds each
     * record via `parse()`: native specs parse with codegen'd from_xml,
     * wildcard/custom specs with the StAX expressions. Returns one `parsed`
-    * column. The raw Hadoop surface ([[XmlElementInputFormat]]) remains
-    * for RDD/Hadoop-API consumers and shares the same
-    * [[XmlRecordScanner]]. */
+    * column. */
   def read(spark: SparkSession, path: String): DataFrame = {
     require(asArray.isEmpty, "read() needs a struct parser; array parsers " +
       "consume a container element — use parse() on a string column")

@@ -14,9 +14,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * This is the `Generator` half of SURVEY §2.2's UDAF/UDTF extension row
   * (the Aggregator half is functions.MinhashUnionAgg): a real Catalyst
   * generator planned into a `Generate` node, equivalent to
-  * `posexplode(xml_children(...))` but emitting rows directly — no
-  * intermediate array value, so a 10^5-child document streams through the
-  * generator without materializing 10^5 structs in one row.
+  * `posexplode(xml_children(...))` but emitting rows directly from the
+  * extraction of [[XmlChildrenExpr.evalJava]] — no intermediate array
+  * column in the plan.
   *
   * Scale: per-row generation, no state, no shuffle; document order is the
   * reference's array semantics (Parser.cs:272-277).
@@ -34,37 +34,22 @@ case class XmlExplodeChildren(child: Expression, patterns: Seq[String],
   override def prettyName: String = "xml_explode_children"
 
   @transient private lazy val specKey: String =
-    XmlStax.specKey(patterns, fromRoot, needOuter, needValue)
+    XmlChildrenExpr.siteKey(patterns, fromRoot, needOuter, needValue)
 
   override def eval(input: InternalRow): IterableOnce[InternalRow] = {
     val s = child.eval(input)
     if (s == null) Nil
     else {
-      // byte-level fast path (value-only capture) before the StAX walk
-      val fast = XmlFastScan.children(s.asInstanceOf[UTF8String], patterns,
-        specKey, fromRoot, needOuter, needValue)
-      if (!(fast eq XmlFastScan.Bail)) {
-        val arr = fast
-          .asInstanceOf[org.apache.spark.sql.catalyst.util.GenericArrayData]
-        return (0 until arr.numElements()).iterator.map { i =>
-          val r = arr.array(i).asInstanceOf[InternalRow]
-          InternalRow(i, r.getUTF8String(0), r.getUTF8String(1),
-            r.getUTF8String(2))
-        }
-      }
-      val kids = XmlStax.children(s.toString, patterns, fromRoot, specKey,
-        needOuter, needValue)
+      val kids = XmlChildrenExpr.evalJava(s.asInstanceOf[UTF8String],
+        patterns, fromRoot, specKey, needOuter, needValue)
       if (kids == null) Nil // malformed input: PERMISSIVE, zero rows
-      else kids.iterator.zipWithIndex.map { case (c, i) =>
-        InternalRow(i, UTF8String.fromString(c.tag), utf8(c.outer),
-          utf8(c.value))
+      else (0 until kids.numElements()).iterator.map { i =>
+        val r = kids.getStruct(i, 4)
+        InternalRow(i, r.getUTF8String(0), r.getUTF8String(1),
+          r.getUTF8String(2))
       }
     }
   }
-
-  // pruned fields surface as "" (non-nullable schema) — shared constant
-  private def utf8(v: String): UTF8String =
-    if (v.isEmpty) UTF8String.EMPTY_UTF8 else UTF8String.fromString(v)
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)

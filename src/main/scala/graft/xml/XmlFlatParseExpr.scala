@@ -21,10 +21,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * from_xml's by construction, including mixed-content serialization (x6)
   * and PERMISSIVE handling of corrupt documents (x10).
   *
-  * A per-thread LRU keyed by a defensive copy of the input (UTF8String
-  * hashCode hashes raw bytes — no decode) makes the duplicate references a
-  * bound projection holds O(1), replacing [[XmlMemoParseExpr]]'s
-  * String-keyed memo whose every lookup paid a UTF8→UTF16 decode.
+  * Every row's result goes through the row memo ([[XmlRowMemo]]), which
+  * makes the duplicate references a bound projection holds O(1).
   */
 case class XmlFlatParseExpr(child: Expression, schema: StructType)
   extends UnaryExpression {
@@ -56,24 +54,11 @@ case class XmlFlatParseExpr(child: Expression, schema: StructType)
       Literal(UTF8String.fromString(""), StringType))
   }
 
-  @transient private lazy val schemaKey: String = schema.catalogString
+  @transient private lazy val siteKey: String = "flat:" + schema.catalogString
 
-  def evalFlat(input: UTF8String): Any = {
-    val perSchema = XmlFlatParseExpr.memo.get()
-    var cache = perSchema.get(schemaKey)
-    if (cache == null) {
-      cache = XmlFlatParseExpr.newLru()
-      perSchema.put(schemaKey, cache)
-    }
-    val hit = cache.get(input)
-    if (hit != null || cache.containsKey(input)) return hit
+  def evalFlat(input: UTF8String): Any = XmlRowMemo(siteKey, input) {
     val fast = XmlFastScan.flatStruct(input, spec)
-    val res =
-      if (!(fast eq XmlFastScan.Bail)) fast
-      else fallback.evaluate(input)
-    // defensive key copy: the input may alias a reused row buffer
-    cache.put(input.clone(), res)
-    res
+    if (!(fast eq XmlFastScan.Bail)) fast else fallback.evaluate(input)
   }
 
   override def nullSafeEval(input: Any): Any =
@@ -93,22 +78,4 @@ case class XmlFlatParseExpr(child: Expression, schema: StructType)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-}
-
-object XmlFlatParseExpr {
-  private final val MemoSlots = 4
-
-  private def newLru(): java.util.LinkedHashMap[UTF8String, Any] =
-    new java.util.LinkedHashMap[UTF8String, Any](MemoSlots * 2, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[UTF8String, Any]): Boolean =
-        size() > MemoSlots
-    }
-
-  private val memo = new ThreadLocal[
-      java.util.HashMap[String, java.util.LinkedHashMap[UTF8String, Any]]] {
-    override def initialValue() =
-      new java.util.HashMap[String,
-        java.util.LinkedHashMap[UTF8String, Any]]()
-  }
 }

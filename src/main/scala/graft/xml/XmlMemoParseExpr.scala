@@ -4,6 +4,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.types.DataType
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Memoizing wrapper around a `from_xml` parse.
   *
@@ -14,9 +15,16 @@ import org.apache.spark.sql.types.DataType
   * does not collapse them (measured: x1 evaluates the parse ~9x per row,
   * ~6x slower end-to-end). Wrapping the parse in this expression makes every
   * duplicate first evaluate the (cheap) xml-string child and look the result
-  * up in a small per-thread LRU keyed by (result type, xml text) — the
-  * actual parse then runs once per row, exactly like the StAX path's
-  * XmlStax.children memo.
+  * up in the row memo ([[XmlRowMemo]], keyed by result type and xml bytes)
+  * — the actual parse then runs once per row.
+  *
+  * The optimizer rule `graft.plans.DedupXmlParses` removes most duplicates
+  * from the plan instead, and unwraps the memo of every parse it pulls. The
+  * wrapper stays for the two cases the rule does not reach:
+  *   - sessions built without `GraftExtensions`, where the rule never runs;
+  *   - nested native parses bound inside a `transform` lambda, such as an
+  *     array element holding a nested obj: those parses reference the
+  *     lambda variable, so the rule cannot pull them into a child Project.
   *
   * CodegenFallback is deliberate: generating the child inline would run the
   * parse before this wrapper could intercept it. The fallback call keeps the
@@ -33,49 +41,19 @@ case class XmlMemoParseExpr(child: Expression)
   /** The parse expression's own input — the raw xml string column. */
   @transient private lazy val strChild: Expression = child.children.head
 
-  /** Schema cache key, computed once per expression instance. Duplicated
+  /** Site key, computed once per expression instance. Duplicated
     * references may be DISTINCT instances with distinct (equal) DataType
     * objects — identity keying would miss and StructType.equals per lookup
-    * dominates (both measured) — so key by the schema string, whose
-    * hashCode the JVM caches. */
-  @transient private lazy val schemaKey: String = dataType.catalogString
+    * dominates (both measured) — so key by the schema string. */
+  @transient private lazy val siteKey: String =
+    "parse:" + dataType.catalogString
 
   override def eval(input: InternalRow): Any = {
     val s = strChild.eval(input)
     if (s == null) null
-    else {
-      val perSchema = XmlMemoParseExpr.memo.get()
-      var cache = perSchema.get(schemaKey)
-      if (cache == null) {
-        cache = XmlMemoParseExpr.newLru()
-        perSchema.put(schemaKey, cache)
-      }
-      val key = s.toString
-      if (cache.containsKey(key)) cache.get(key)
-      else {
-        val r = child.eval(input)
-        cache.put(key, r)
-        r
-      }
-    }
+    else XmlRowMemo(siteKey, s.asInstanceOf[UTF8String])(child.eval(input))
   }
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
-}
-
-object XmlMemoParseExpr {
-  private final val MemoSlots = 4
-
-  private[xml] def newLru(): java.util.LinkedHashMap[String, Any] =
-    new java.util.LinkedHashMap[String, Any](MemoSlots * 2, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, Any]): Boolean = size() > MemoSlots
-    }
-
-  private val memo = new ThreadLocal[
-      java.util.HashMap[String, java.util.LinkedHashMap[String, Any]]] {
-    override def initialValue() =
-      new java.util.HashMap[String, java.util.LinkedHashMap[String, Any]]()
-  }
 }

@@ -2,49 +2,29 @@ package graft.xml
 
 import java.io.ByteArrayOutputStream
 
-import org.apache.hadoop.fs.Path
-import org.apache.hadoop.io.{LongWritable, Text}
-import org.apache.hadoop.io.compress.CompressionCodecFactory
-import org.apache.hadoop.mapreduce.{InputSplit, JobContext, RecordReader,
-  TaskAttemptContext}
-import org.apache.hadoop.mapreduce.lib.input.{FileInputFormat, FileSplit}
-
-/** Splittable Hadoop input format that emits one record per `rowTag` XML
-  * element — the distributed realization of the reference's file-glob
-  * dispatch (Parser.cs:175-187) for specs the native XML source cannot
-  * express (wildcard / custom members need the raw element text).
+/** The rowTag record scan behind the `graft-xml` FileFormat
+  * ([[org.apache.spark.sql.graft.XmlRowTagFileFormat]], batch and
+  * streaming reads): one record per `rowTag` XML element — the distributed
+  * realization of the reference's file-glob dispatch (Parser.cs:175-187).
   *
   * Each split scans its byte range for `<rowTag` starts; a record whose
   * start tag begins before the split end is owned by that split, and its
   * capture may read past the split boundary (the standard text-split
   * contract, so a 100 TB directory splits into independent tasks with no
   * coordination). Same-name nested elements are depth-counted within a
-  * record. `<!--...-->` comments and `<![CDATA[...]]>` sections are
-  * recognized in both scan phases: a commented-out `<rowTag` does not start
-  * a record, and a close tag inside a comment/CDATA does not end one.
+  * record. Comments, CDATA sections, processing instructions and a DOCTYPE
+  * (internal subset included) are skipped as units, and an open tag ends
+  * at the first `>` outside a quoted attribute value, so markup text inside
+  * any of them neither starts nor ends a record.
   *
-  * Documented limits (shared with every byte-level rowTag splitter):
-  *   - attribute values must not contain '>';
-  *   - a DOCTYPE internal subset (`<!DOCTYPE x [ ... ]>`) is skipped only to
-  *     its first '>';
-  *   - a rowTag element nested inside ANOTHER rowTag element is only handled
-  *     within one split — records should not nest across split boundaries;
-  *   - a comment/CDATA span is only honored within the split that sees its
-  *     opening (a split boundary inside the span re-syncs at the next real
-  *     record start);
-  *   - compressed files are read as a single split (not splittable).
-  */
-object XmlElementInputFormat {
-  val RowTagKey = "graft.xml.read.rowtag"
-
-  /** Guard against a missing close tag silently swallowing a whole file. */
-  val MaxRecordBytes: Int = 128 * 1024 * 1024
-}
-
-/** The scan state machine, shared by the Hadoop record reader (byte-range
-  * splits), the `graft-xml` FileFormat
-  * ([[org.apache.spark.sql.graft.XmlRowTagFileFormat]] — batch AND
-  * streaming reads) and [[XmlRecordSplit]] (whole strings).
+  * Two limits cannot be decided from one split alone:
+  *   - a rowTag element nested inside ANOTHER rowTag element is only
+  *     depth-counted within one split — records should not nest across
+  *     split boundaries;
+  *   - a comment, CDATA section or DOCTYPE is only honored within the split
+  *     that sees its opening (a split that starts inside one re-syncs at
+  *     the next `<rowTag` it sees, even if that text is inside it).
+  *
   * `read` supplies bytes (-1 = EOF); `pos` counts absolute consumed bytes
   * starting from `startPos`. */
 final class XmlRecordScanner(read: () => Int,
@@ -63,13 +43,17 @@ final class XmlRecordScanner(read: () => Int,
 
   /** Consume the rest of an open tag after `<rowTag` + `delim`; returns the
     * depth delta: +1 for an open element, 0 for self-closing `<rowTag .../>`.
-    * (In-tag bytes are captured when `buf` is non-null.) */
+    * `/` and `>` inside a quoted attribute value are plain text. (In-tag
+    * bytes are captured when `buf` is non-null.) */
   private def finishOpenTag(delim: Int, buf: ByteArrayOutputStream): Int = {
     if (delim == '>') return 1
     var prev = delim
+    var quote = -1
     var c = read1()
-    while (c != -1 && c != '>') {
+    while (c != -1 && (c != '>' || quote != -1)) {
       if (buf != null) buf.write(c)
+      if (quote == -1) { if (c == '"' || c == '\'') quote = c }
+      else if (c == quote) quote = -1
       prev = c
       c = read1()
     }
@@ -123,13 +107,13 @@ final class XmlRecordScanner(read: () => Int,
   private val CdataOpen = "![CDATA[".getBytes("US-ASCII")
   private val CommentClose = "-->".getBytes("US-ASCII")
   private val CdataClose = "]]>".getBytes("US-ASCII")
+  private val PiClose = "?>".getBytes("US-ASCII")
 
   /** After a consumed "<!", classify + skip a comment (`<!--...-->`), CDATA
-    * (`<![CDATA[...]]>`), or other markup declaration (to its first '>').
-    * The leading '!' is NOT yet consumed — `first` is the byte after '<'.
+    * (`<![CDATA[...]]>`), or other markup declaration ([[skipDecl]]).
     * Captured when `buf` is non-null. Returns false on EOF. */
   private def skipBang(buf: ByteArrayOutputStream): Boolean = {
-    // match as much of "!--" / "![CDATA[" as possible; fall back to '>'
+    // match as much of "!--" / "![CDATA[" as possible; else a declaration
     var i = 1 // caller consumed '!' (position 0 of both opener patterns)
     var c = 0
     var isComment = true
@@ -142,12 +126,55 @@ final class XmlRecordScanner(read: () => Int,
       if (c == '>') return true // e.g. "<!>" — degenerate, done
       isComment = isComment && i < CommentOpen.length && c == CommentOpen(i)
       isCdata = isCdata && i < CdataOpen.length && c == CdataOpen(i)
-      if (!isComment && !isCdata)
-        return skipUntil(Array('>'.toByte), buf) // DOCTYPE etc.
+      if (!isComment && !isCdata) return skipDecl(c, buf) // DOCTYPE etc.
       i += 1
     }
     if (isComment && i == CommentOpen.length) skipUntil(CommentClose, buf)
     else skipUntil(CdataClose, buf)
+  }
+
+  /** Consume a markup declaration (`<!DOCTYPE ...>` and the like) through
+    * its closing `>`, `first` being its first byte after "<!". The `>` that
+    * ends it lies outside quotes and outside a `[...]` internal subset;
+    * inside the subset, comments and processing instructions are skipped
+    * whole, so a quote or bracket in their text does not count. Captured
+    * when `buf` is non-null. Returns false on EOF. */
+  private def skipDecl(first: Int, buf: ByteArrayOutputStream): Boolean = {
+    var c = first
+    var quote = -1
+    var depth = 0
+    while (quote != -1 || depth > 0 || c != '>') {
+      var next = -2 // -2: read a fresh byte
+      if (quote != -1) { if (c == quote) quote = -1 }
+      else if (c == '"' || c == '\'') quote = c
+      else if (c == '[') depth += 1
+      else if (c == ']') depth -= 1
+      else if (c == '<' && depth > 0) {
+        val b = read1()
+        if (b == -1) return false
+        if (buf != null) buf.write(b)
+        if (b == '?') { if (!skipUntil(PiClose, buf)) return false }
+        else if (b == '!') {
+          val b2 = read1()
+          if (b2 == -1) return false
+          if (buf != null) buf.write(b2)
+          if (b2 == '-') {
+            val b3 = read1()
+            if (b3 == -1) return false
+            if (buf != null) buf.write(b3)
+            if (b3 == '-') { if (!skipUntil(CommentClose, buf)) return false }
+            else next = b3
+          } else next = b2
+        } else next = b
+      }
+      c = if (next != -2) next else {
+        val r = read1()
+        if (r == -1) return false
+        if (buf != null) buf.write(r)
+        r
+      }
+    }
+    true
   }
 
   /** Next record whose `<rowTag` start lies strictly before `ownedEnd`
@@ -168,7 +195,7 @@ final class XmlRecordScanner(read: () => Int,
           if (!skipBang(null)) return null
           c = read1()
         } else if (first == '?') {
-          if (!skipUntil("?>".getBytes("US-ASCII"), null)) return null
+          if (!skipUntil(PiClose, null)) return null
           c = read1()
         } else if (first == -1) return null
         else if (first == rowTag(0)) {
@@ -189,10 +216,10 @@ final class XmlRecordScanner(read: () => Int,
     buf.write('<'); buf.write(rowTag, 0, rowTag.length); buf.write(delim)
     var depth = finishOpenTag(delim, buf)
     while (depth > 0) {
-      if (buf.size() > XmlElementInputFormat.MaxRecordBytes)
+      if (buf.size() > XmlRecordScanner.MaxRecordBytes)
         throw new java.io.IOException(
           s"graft.xml: record at offset $recStart exceeds " +
-            s"${XmlElementInputFormat.MaxRecordBytes} bytes — missing " +
+            s"${XmlRecordScanner.MaxRecordBytes} bytes — missing " +
             s"</${new String(rowTag, "UTF-8")}>?")
       val b = read1()
       if (b == -1) return null // truncated trailing record
@@ -205,6 +232,8 @@ final class XmlRecordScanner(read: () => Int,
           // comment/CDATA content rides along uninterpreted: tags inside
           // must not bump the depth counter
           if (!skipBang(buf)) return null
+        } else if (b2 == '?') {
+          if (!skipUntil(PiClose, buf)) return null
         } else if (b2 == '/') {
           if (matchTag(buf) == Int.MinValue) {
             val b3 = read1()
@@ -247,89 +276,7 @@ final class XmlRecordScanner(read: () => Int,
   }
 }
 
-/** Whole-string record splitting for the STREAMING read path: Structured
-  * Streaming's file source delivers whole files (`text` + wholetext), and
-  * this applies the exact same scan the batch input format runs over byte
-  * ranges — one semantics, two transports. */
-object XmlRecordSplit {
-  def split(doc: String, rowTag: String): Seq[String] = {
-    val in = new java.io.ByteArrayInputStream(doc.getBytes("UTF-8"))
-    val sc = new XmlRecordScanner(() => in.read(),
-      rowTag.getBytes("UTF-8"), 0L)
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    var rec = sc.nextRecord(Long.MaxValue)
-    while (rec != null) {
-      out += new String(rec._2, "UTF-8")
-      rec = sc.nextRecord(Long.MaxValue)
-    }
-    out.toSeq
-  }
-}
-
-final class XmlElementInputFormat extends FileInputFormat[LongWritable, Text] {
-  override protected def isSplitable(ctx: JobContext, file: Path): Boolean =
-    new CompressionCodecFactory(ctx.getConfiguration).getCodec(file) == null
-
-  override def createRecordReader(split: InputSplit,
-      ctx: TaskAttemptContext): RecordReader[LongWritable, Text] =
-    new XmlElementRecordReader
-}
-
-final class XmlElementRecordReader extends RecordReader[LongWritable, Text] {
-
-  private var in: java.io.InputStream = _
-  private var scanner: XmlRecordScanner = _
-  private var start: Long = 0L
-  private var end: Long = 0L
-  private val key = new LongWritable
-  private val value = new Text
-  private var done = false
-
-  override def initialize(split: InputSplit, ctx: TaskAttemptContext): Unit = {
-    val fsplit = split.asInstanceOf[FileSplit]
-    start = fsplit.getStart
-    end = start + fsplit.getLength
-    val tag = ctx.getConfiguration.get(XmlElementInputFormat.RowTagKey)
-    require(tag != null && tag.nonEmpty, "rowTag not set")
-    val file = fsplit.getPath
-    val fs = file.getFileSystem(ctx.getConfiguration)
-    val fsin = fs.open(file)
-    val codec = new CompressionCodecFactory(ctx.getConfiguration)
-      .getCodec(file)
-    if (codec != null) {
-      // compressed file: isSplitable said no, so this single split covers
-      // the whole file — scan the DECOMPRESSED stream from 0 to its end
-      // (offsets/keys are decompressed-stream positions). Serial per file;
-      // parallelism at scale comes from many files.
-      start = 0L
-      end = Long.MaxValue
-      in = new java.io.BufferedInputStream(
-        codec.createInputStream(fsin), 64 * 1024)
-    } else {
-      fsin.seek(start)
-      in = new java.io.BufferedInputStream(fsin, 64 * 1024)
-    }
-    scanner = new XmlRecordScanner(() => in.read(),
-      tag.getBytes("UTF-8"), start)
-  }
-
-  override def nextKeyValue(): Boolean = {
-    if (done) return false
-    scanner.nextRecord(end) match {
-      case null =>
-        done = true
-        false
-      case (recStart, bytes) =>
-        key.set(recStart)
-        value.set(bytes)
-        true
-    }
-  }
-
-  override def getCurrentKey: LongWritable = key
-  override def getCurrentValue: Text = value
-  override def getProgress: Float =
-    if (end == start) 1.0f
-    else math.min(1.0f, (scanner.pos - start).toFloat / (end - start))
-  override def close(): Unit = if (in != null) in.close()
+object XmlRecordScanner {
+  /** Guard against a missing close tag silently swallowing a whole file. */
+  val MaxRecordBytes: Int = 128 * 1024 * 1024
 }

@@ -70,36 +70,12 @@ object XmlStax {
     }
   private def factory: XMLInputFactory = factoryTL.get()
 
-  /** Per-thread memo of recent extractions. A bound projection references
-    * the same extraction from several member expressions (often under
-    * conditional branches where Spark's codegen subexpression elimination
-    * does not reach), so the same (row, patterns) pair is evaluated several
-    * times back-to-back on one thread — this makes the repeats O(1) without
-    * any cross-row or cross-thread state. */
-  private final val MemoSlots = 4
-  private val memo = new ThreadLocal[
-      java.util.HashMap[String, java.util.LinkedHashMap[String, Seq[Child]]]] {
-    override def initialValue() =
-      new java.util.HashMap[String,
-        java.util.LinkedHashMap[String, Seq[Child]]]()
-  }
-  private def newLru(): java.util.LinkedHashMap[String, Seq[Child]] =
-    new java.util.LinkedHashMap[String, Seq[Child]](MemoSlots * 2, 0.75f,
-        true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, Seq[Child]]): Boolean =
-        size() > MemoSlots
-    }
-
-  /** Spec memo key — callers (the expressions) precompute this once per
-    * instance so the hot lookup hashes only the xml string, not a
-    * (String, Seq, Boolean) tuple per evaluation (profiled hotspot). */
-  def specKey(patterns: Seq[String], fromRoot: Boolean): String =
-    specKey(patterns, fromRoot, needOuter = true, needValue = true)
-
-  /** The needOuter/needValue capture flags are part of the key: a pruned
-    * extraction (empty outer/value) must never be served to a consumer
-    * that reads those fields. */
+  /** The spec key names one (patterns, fromRoot, capture flags) spec; the
+    * expressions precompute their compiled-pattern and row-memo keys
+    * ([[XmlChildrenExpr.siteKey]]) from it once per instance. The
+    * needOuter/needValue flags are part of the key: a pruned extraction
+    * (empty outer/value) must never be served to a consumer that reads
+    * those fields. */
   def specKey(patterns: Seq[String], fromRoot: Boolean, needOuter: Boolean,
       needValue: Boolean): String =
     patterns.mkString("\u0000") + "\u0001" + fromRoot + needOuter + needValue
@@ -107,69 +83,23 @@ object XmlStax {
   /** Extract matching depth-1 children of `xml`'s root element (fromRoot) or
     * of a rootless fragment. Empty `patterns` matches every child. Returns
     * null on malformed input (PERMISSIVE posture — the Spark layer turns that
-    * into a null row value). Memoized per thread (see above).
+    * into a null row value).
     */
   def children(xml: String, patterns: Seq[String],
       fromRoot: Boolean): Seq[Child] =
-    children(xml, patterns, fromRoot, specKey(patterns, fromRoot))
+    children(xml, patterns, fromRoot,
+      specKey(patterns, fromRoot, needOuter = true, needValue = true))
 
   /** `needOuter`/`needValue` prune the per-child serialization: a binding
     * that reads only tag+attrs (the attribute-projection shape) skips
     * building BOTH strings — the child walk degrades to tag+attrs capture
     * plus a subtree skip; a wildcard scalar bind keeps `value` but drops
     * `outer`. Pruned fields surface as "" (they are non-nullable in the
-    * Spark schema); the flag-carrying spec key guarantees a pruned
-    * extraction is never served to a consumer that reads those fields. */
+    * Spark schema). `key` keys the compiled patterns. */
   def children(xml: String, patterns: Seq[String], fromRoot: Boolean,
       key: String, needOuter: Boolean = true,
       needValue: Boolean = true): Seq[Child] = {
-    val perSpec = memo.get()
-    var cache = perSpec.get(key)
-    if (cache == null) {
-      cache = newLru()
-      perSpec.put(key, cache)
-    }
-    val hit = cache.get(xml)
-    if (hit != null || cache.containsKey(xml)) hit
-    else {
-      val res = childrenUncached(xml, patterns, fromRoot, key, needOuter,
-        needValue)
-      cache.put(xml, res)
-      res
-    }
-  }
-
-  /** Compiled patterns are keyed by the same spec key as the extraction
-    * memo: the per-row compile (Set + Glob allocations) was a measurable
-    * slice of the 70-byte-document hot path. */
-  private val compiledTL = new ThreadLocal[
-      java.util.HashMap[String, (Set[String], Array[Glob])]] {
-    override def initialValue() =
-      new java.util.HashMap[String, (Set[String], Array[Glob])]()
-  }
-
-  private def childrenUncached(xml: String, patterns: Seq[String],
-      fromRoot: Boolean, key: String, needOuter: Boolean,
-      needValue: Boolean): Seq[Child] = {
-    val compiled = compiledTL.get()
-    var pats = compiled.get(key)
-    if (pats == null) {
-      val (e, g) = compilePatterns(patterns)
-      pats = (e, g.toArray)
-      compiled.put(key, pats)
-    }
-    val (exacts, globs) = pats
-    val all = patterns.isEmpty
-    def hit(name: String): Boolean = {
-      if (all || exacts.contains(name)) return true
-      var i = 0
-      while (i < globs.length) {
-        if (globs(i).matches(name)) return true
-        i += 1
-      }
-      false
-    }
-
+    val hit = matcher(patterns, key)
     val source = if (fromRoot) xml else s"<graft-wrap>$xml</graft-wrap>"
     var reader: XMLStreamReader = null
     try {
@@ -198,6 +128,36 @@ object XmlStax {
     }
   }
 
+  /** Compiled patterns, keyed by the caller's spec key: the per-row compile
+    * (Set + Glob allocations) was a measurable slice of the 70-byte-document
+    * hot path. */
+  private val compiledTL = new ThreadLocal[
+      java.util.HashMap[String, (Set[String], Array[Glob])]] {
+    override def initialValue() =
+      new java.util.HashMap[String, (Set[String], Array[Glob])]()
+  }
+
+  /** Child-name test for `patterns` (empty = every child). */
+  private def matcher(patterns: Seq[String], key: String): String => Boolean = {
+    val compiled = compiledTL.get()
+    var pats = compiled.get(key)
+    if (pats == null) {
+      val (e, g) = compilePatterns(patterns)
+      pats = (e, g.toArray)
+      compiled.put(key, pats)
+    }
+    val (exacts, globs) = pats
+    val all = patterns.isEmpty
+    name => {
+      if (all || exacts.contains(name)) true
+      else {
+        var i = 0
+        while (i < globs.length && !globs(i).matches(name)) i += 1
+        i < globs.length
+      }
+    }
+  }
+
   /** Fused container descent — matching children of the FIRST depth-1
     * child named `container`, extracted in the SAME StAX pass as the
     * document walk. This is the one-pass form of
@@ -210,47 +170,10 @@ object XmlStax {
     * there the whole-document extraction nulls on malformed input and
     * the container lookup misses on absence. The rest of the document is
     * still walked (skip-only) so malformations after the container null
-    * the row the same way the two-pass walk did. Memoized like
-    * [[children]]. */
+    * the row the same way the two-pass walk did. */
   def childrenAt(xml: String, container: String, patterns: Seq[String],
       key: String, needOuter: Boolean, needValue: Boolean): Seq[Child] = {
-    val perSpec = memo.get()
-    var cache = perSpec.get(key)
-    if (cache == null) {
-      cache = newLru()
-      perSpec.put(key, cache)
-    }
-    val hit = cache.get(xml)
-    if (hit != null || cache.containsKey(xml)) hit
-    else {
-      val res = childrenAtUncached(xml, container, patterns, key, needOuter,
-        needValue)
-      cache.put(xml, res)
-      res
-    }
-  }
-
-  private def childrenAtUncached(xml: String, container: String,
-      patterns: Seq[String], key: String, needOuter: Boolean,
-      needValue: Boolean): Seq[Child] = {
-    val compiled = compiledTL.get()
-    var pats = compiled.get(key)
-    if (pats == null) {
-      val (e, g) = compilePatterns(patterns)
-      pats = (e, g.toArray)
-      compiled.put(key, pats)
-    }
-    val (exacts, globs) = pats
-    val all = patterns.isEmpty
-    def hit(name: String): Boolean = {
-      if (all || exacts.contains(name)) return true
-      var i = 0
-      while (i < globs.length) {
-        if (globs(i).matches(name)) return true
-        i += 1
-      }
-      false
-    }
+    val hit = matcher(patterns, key)
     var reader: XMLStreamReader = null
     try {
       reader = factory.createXMLStreamReader(new StringReader(xml))

@@ -11,7 +11,7 @@ import org.apache.spark.sql.classic.ExpressionUtils
   *
   * (A Catalyst `With`/CommonExpressionDef helper used to live here; it was
   * removed after the approach proved un-buildable pre-analysis — the
-  * per-thread memos in graft.xml serve that role instead.)
+  * per-thread row memo in graft.xml serves that role instead.)
   */
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)

@@ -19,12 +19,12 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
 
-import graft.xml.{XmlElementInputFormat, XmlRecordScanner}
+import graft.xml.XmlRecordScanner
 
 /** `graft-xml`: a splittable FileFormat that emits one `value: string` row
-  * per `rowTag` XML element — the SAME byte-range scan the Hadoop input
-  * format runs ([[graft.xml.XmlRecordScanner]]), surfaced as a first-class
-  * Spark data source so it works in BOTH `spark.read` and
+  * per `rowTag` XML element — the byte-range scan of
+  * [[graft.xml.XmlRecordScanner]], surfaced as a first-class Spark data
+  * source so it works in BOTH `spark.read` and
   * `spark.readStream` (the file stream source reads through a FileFormat's
   * buildReader, so streaming XML is now split-based and memory-bounded:
   * a 10 GB drop file becomes ~80 independent 128 MB-split tasks instead of
@@ -33,8 +33,7 @@ import graft.xml.{XmlElementInputFormat, XmlRecordScanner}
   * Usage: `spark.read.format("graft-xml").option("rowTag", "rec")
   * .load(dir)`; streaming likewise with an explicit `value string` schema
   * (file stream sources require one). Compressed files decode through
-  * their Hadoop codec as a single split each, exactly like the input
-  * format.
+  * their Hadoop codec as a single split each.
   *
   * The write side ([[XmlOutputWriter]]) makes the format symmetric:
   * `df.write.format("graft-xml").option("rowTag", "rec").save(dir)` emits

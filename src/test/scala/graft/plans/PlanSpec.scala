@@ -98,6 +98,61 @@ class PlanSpec extends AnyFunSuite {
     }
   }
 
+  test("DedupXmlParses leaves a nested parse inside a transform lambda " +
+      "to the row memo; rows equal the rule-off result") {
+    // array elements holding a nested obj: each element's parse is a
+    // memo-wrapped from_xml over the lambda variable's outer XML
+    val parser = XmlParser.array { c =>
+      c.obj("item") { it =>
+        struct(it.int("id").as("id"),
+          it.obj("sub")(s => concat(s.str("v"), s.str("w"))).as("vw"))
+      }
+    }
+    // a range, not a local Seq, so the parses are not constant-folded
+    def query(sp: SparkSession) =
+      sp.range(0, 200)
+        .select(concat(lit("<r><item><id>"),
+          (col("id") % 10).cast("string"), lit("</id><sub><v>"),
+          (col("id") % 7).cast("string"), lit("</v><w>w</w></sub>" +
+            "</item><item><id>7</id></item></r>")).as("x"))
+        .select(parser.parse(col("x")).as("a"))
+    val baseline = query(spark).collect().map(_.toString).sorted.toSeq
+    // the nested parse really binds: every first item's sub reads "<v>w"
+    assert(query(spark).select(col("a").getItem(0).getField("vw")).collect()
+      .forall(r => r.getString(0) != null && r.getString(0).endsWith("w")))
+
+    val prevActive = SparkSession.getActiveSession
+    val prevDefault = SparkSession.getDefaultSession
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    try {
+      val sp2 = SparkSession.builder()
+        .master("local[4]")
+        .config("spark.sql.shuffle.partitions", "4")
+        .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.ui.enabled", "false")
+        .withExtensions(new GraftExtensions)
+        .getOrCreate()
+      val df = query(sp2)
+      val plan = df.queryExecution.optimizedPlan
+      // the rule ran and left nothing to pull ...
+      assert(DedupXmlParses(plan).fastEquals(plan))
+      // ... because every surviving memo-wrapped parse reads the lambda
+      // variable
+      val memos = plan.collect { case p => p.expressions }.flatten
+        .flatMap(_.collect { case m: XmlMemoParseExpr => m })
+      assert(memos.nonEmpty, plan.treeString)
+      assert(memos.forall(_.exists(_.isInstanceOf[
+        org.apache.spark.sql.catalyst.expressions.NamedLambdaVariable])))
+      assert(df.collect().map(_.toString).sorted.toSeq == baseline)
+    } finally {
+      SparkSession.clearActiveSession()
+      SparkSession.clearDefaultSession()
+      prevDefault.foreach(SparkSession.setDefaultSession)
+      prevActive.foreach(SparkSession.setActiveSession)
+    }
+  }
+
   test("x4 optimized plan: exactly one raw extraction per parser — the " +
       "struct and alternatives parsers never re-parse the row's XML") {
     // x4 runs TWO parsers over the same XML column; its bench reps showed

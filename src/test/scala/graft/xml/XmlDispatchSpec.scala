@@ -134,16 +134,38 @@ class XmlDispatchSpec extends AnyFunSuite {
     assert(got.toSeq == (0 until 100).map(i => (i, (i * 10).toString)))
   }
 
-  private def splitterRead(path: String, maxSplit: Option[Long]) = {
-    import org.apache.hadoop.io.{LongWritable, Text}
-    val conf = new org.apache.hadoop.conf.Configuration(
-      spark.sparkContext.hadoopConfiguration)
-    conf.set(XmlElementInputFormat.RowTagKey, "rec")
-    maxSplit.foreach(
-      conf.setLong("mapreduce.input.fileinputformat.split.maxsize", _))
-    spark.sparkContext.newAPIHadoopFile(path,
-      classOf[XmlElementInputFormat], classOf[LongWritable], classOf[Text],
-      conf)
+  /** Records of `path` as the `graft-xml` source splits them, with the
+    * byte-range split size forced to `maxSplit` (the scan planner cuts a
+    * file at maxPartitionBytes); also returns the number of partitions. */
+  private def splitterRead(path: String,
+      maxSplit: Option[Long]): (Seq[String], Int) = {
+    val key = "spark.sql.files.maxPartitionBytes"
+    val prev = spark.conf.get(key)
+    maxSplit.foreach(m => spark.conf.set(key, m.toString))
+    try {
+      val df = spark.read.format("graft-xml").option("rowTag", "rec")
+        .load(path)
+      (df.collect().map(_.getString(0)).toSeq, df.rdd.getNumPartitions)
+    } finally spark.conf.set(key, prev)
+  }
+
+  /** Sweep split sizes from pathological (splits inside tags) to one
+    * split; every size must give exactly `recs`, and every size below the
+    * file's length must really split it. */
+  private val splitSizes = Seq(64L, 128L, 333L, 1024L, 1000000L)
+  private def assertSplitsExactly(name: String, doc: String,
+      recs: Seq[String]): Unit = {
+    val dir = java.nio.file.Files.createTempDirectory("graftxml" + name)
+    val file = dir.resolve("one.xml")
+    java.nio.file.Files.write(file, doc.getBytes("UTF-8"))
+    val len = java.nio.file.Files.size(file)
+    splitSizes.foreach { maxSplit =>
+      val (got, parts) = splitterRead(file.toString, Some(maxSplit))
+      assert(got.sorted == recs.sorted,
+        s"$name: mismatch at maxPartitionBytes=$maxSplit: got $got")
+      if (maxSplit < len) assert(parts > 1,
+        s"$name: $len bytes did not split at maxPartitionBytes=$maxSplit")
+    }
   }
 
   test("rowTag splitter: records straddle split boundaries intact " +
@@ -156,9 +178,8 @@ class XmlDispatchSpec extends AnyFunSuite {
     val w = new java.io.PrintWriter(dir.resolve("one.xml").toFile)
     w.write(recs.mkString("<all>\n", "\n", "\n</all>"))
     w.close()
-    val rdd = splitterRead(dir.toString + "/one.xml", Some(256L))
-    assert(rdd.getNumPartitions > 4) // the tiny maxsize actually split it
-    val got = rdd.map(_._2.toString).collect().toSeq
+    val (got, parts) = splitterRead(dir.toString + "/one.xml", Some(256L))
+    assert(parts > 4) // the tiny split size actually split it
     assert(got.sorted == recs.sorted)
   }
 
@@ -177,17 +198,38 @@ class XmlDispatchSpec extends AnyFunSuite {
           "w " * rnd.nextInt(20)}</c></rec>"""
       }
     }
-    val dir = java.nio.file.Files.createTempDirectory("graftxmlprop")
-    val w = new java.io.PrintWriter(dir.resolve("one.xml").toFile)
-    w.write(recs.mkString("<all>", "\n  ", "</all>"))
-    w.close()
-    // sweep split sizes from pathological (splits inside tags) to one-split
-    Seq(64L, 128L, 333L, 1024L, 1000000L).foreach { maxSplit =>
-      val got = splitterRead(dir.toString + "/one.xml", Some(maxSplit))
-        .map(_._2.toString).collect().toSeq
-      assert(got.sorted == recs.sorted,
-        s"mismatch at split.maxsize=$maxSplit: got ${got.length}")
+    assertSplitsExactly("prop", recs.mkString("<all>", "\n  ", "</all>"),
+      recs)
+  }
+
+  test("rowTag splitter: quoted '/' and '>' in attribute values and a " +
+      "DOCTYPE internal subset at every split size") {
+    // well-formed XML only: attribute values may hold '>' and '/', and an
+    // entity value may hold markup text; more records follow each probe so
+    // that small splits cut inside attribute values
+    val probe = Seq("""<rec a="x/>y"><id>1</id></rec>""",
+      """<rec a="ok"><id>2</id></rec>""") ++
+      (3 to 12).map(i => s"""<rec a="$i/>" b="/"><id>$i</id></rec>""")
+    val single = Seq("""<rec a='x/>y'><id>1</id></rec>""",
+      """<rec a='ok'><id>2</id></rec>""") ++
+      (3 to 12).map(i => s"""<rec a='$i/>' b="it's"/>""")
+    val doctype = Seq("""<rec id="1"><v>&e;</v></rec>""",
+      """<rec id="2"/>""")
+    val failed = Seq(
+      ("probe", probe.mkString, probe),
+      ("single-quoted", single.mkString("<all>", "\n", "</all>"), single),
+      ("doctype",
+        """<!DOCTYPE all [<!ENTITY e "a>b <rec id='9'/>">]>""" +
+          doctype.mkString("<all>", "\n", "</all>"), doctype),
+      // quotes and brackets inside a PI or comment of the subset are text
+      ("doctype-pi-comment",
+        """<!DOCTYPE a [<?p '?><!--']--><!ENTITY e "a>b <rec id='9'/>">]>""" +
+          doctype.mkString("<a>", "\n", "</a>"), doctype)
+    ).flatMap { case (name, doc, recs) =>
+      scala.util.Try(assertSplitsExactly(name, doc, recs)).failed.toOption
+        .map(_.getMessage)
     }
+    assert(failed.isEmpty, failed.mkString("\n"))
   }
 
   test("rowTag splitter: commented-out and CDATA'd rowTags are not records") {
@@ -196,7 +238,8 @@ class XmlDispatchSpec extends AnyFunSuite {
       """<rec id="1"><!-- dead close </rec> and open <rec id="x"> -->""" +
         """<v>b</v></rec>""",
       """<rec id="2"><v><![CDATA[not a tag: <rec id="y"> nor </rec> ]]]]>""" +
-        """</v></rec>""")
+        """</v></rec>""",
+      """<rec id="3"><?pi </rec> ?><v>c</v></rec>""")
     val noise = Seq(
       """<!-- <rec id="99"><v>dead</v></rec> -->""",
       """<![CDATA[<rec id="98"/>]]>""",
@@ -206,11 +249,8 @@ class XmlDispatchSpec extends AnyFunSuite {
     val w = new java.io.PrintWriter(dir.resolve("one.xml").toFile)
     w.write(doc)
     w.close()
-    val got = splitterRead(dir.toString + "/one.xml", None)
-      .map(_._2.toString).collect().toSeq
+    val (got, _) = splitterRead(dir.toString + "/one.xml", None)
     assert(got.sorted == real.sorted)
-    // the string splitter (streaming read path) applies the same scan
-    assert(XmlRecordSplit.split(doc, "rec").sorted == real.sorted)
   }
 
   test("rowTag splitter: same-name nested tags are depth-counted " +
@@ -224,8 +264,7 @@ class XmlDispatchSpec extends AnyFunSuite {
     w.close()
     // single split: nested same-name elements stay inside their record
     // (across split boundaries they are a documented limitation)
-    val got = splitterRead(dir.toString + "/one.xml", None)
-      .map(_._2.toString).collect().toSeq
+    val (got, _) = splitterRead(dir.toString + "/one.xml", None)
     assert(got.sorted == recs.sorted)
   }
 }

@@ -1,5 +1,6 @@
 package graft.xml
 
+import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pure-JVM tests of the StAX extraction core (no Spark session). */
@@ -138,8 +139,8 @@ class XmlStaxSpec extends AnyFunSuite {
     def run(o: Boolean, v: Boolean) =
       XmlStax.children(xml, Seq("k"), fromRoot = true,
         XmlStax.specKey(Seq("k"), fromRoot = true, o, v), o, v).head
-    // pruned first: if the memo ignored the flags, the full read below
-    // would be served the pruned ("" outer/value) entry
+    // pruned first, then fuller captures: each read sees its own fields
+    // (the row memo's own keying is pinned by the "row memo" tests)
     val pruned = run(o = false, v = false)
     assert(pruned.tag == "k" && pruned.attrs == Seq(("a", "1")))
     assert(pruned.outer == "" && pruned.value == "")
@@ -151,5 +152,69 @@ class XmlStaxSpec extends AnyFunSuite {
     val full = run(o = true, v = true)
     assert(full.outer == "<k a=\"1\"><s>v</s>txt</k>" &&
       full.value == "<s>v</s>txt")
+  }
+
+  test("row memo: a pruned and a full extraction of one row keep their " +
+      "own fields") {
+    // mixed content: the fast scan bails, so every read below goes through
+    // the memoized StAX fallback of XmlChildrenExpr.evalJava
+    val row = UTF8String.fromString("<r><k a='1'><s>v</s>txt</k><j/></r>")
+    def first(o: Boolean) = {
+      val key = XmlChildrenExpr.siteKey(Seq("k"), fromRoot = true, o, true)
+      assert(XmlFastScan.children(row, Seq("k"), key, fromRoot = true, o,
+        needValue = true) eq XmlFastScan.Bail)
+      val c = XmlChildrenExpr.evalJava(row, Seq("k"), fromRoot = true, key,
+        o, needValue = true).getStruct(0, 4)
+      (c.getUTF8String(1).toString, c.getUTF8String(2).toString)
+    }
+    val pruned = ("", "<s>v</s>txt")
+    val full = ("<k a=\"1\"><s>v</s>txt</k>", "<s>v</s>txt")
+    assert(first(o = false) == pruned)
+    assert(first(o = true) == full)
+    // second round: both are memo hits now
+    assert(first(o = false) == pruned)
+    assert(first(o = true) == full)
+  }
+
+  test("row memo: a row over a reused buffer, overwritten with another " +
+      "document of the same length, is never a stale hit") {
+    // each memo entry must own a copy of its key: the first document's
+    // entry still hits (same result object) after the buffer changed
+    val docA = "<r><k a='1'><s>v</s>aaa</k></r>"
+    val buf = docA.getBytes("UTF-8")
+    val row = UTF8String.fromBytes(buf) // aliases buf, no copy
+    val key = XmlChildrenExpr.siteKey(Seq("k"), fromRoot = true,
+      needOuter = false, needValue = true)
+    // the fast scan bails here, so the StAX result is memoized
+    assert(XmlFastScan.children(row, Seq("k"), key, fromRoot = true,
+      needOuter = false, needValue = true) eq XmlFastScan.Bail)
+    def kids(u: UTF8String) = XmlChildrenExpr.evalJava(u, Seq("k"),
+      fromRoot = true, key, needOuter = false, needValue = true)
+    def value(a: org.apache.spark.sql.catalyst.util.ArrayData) =
+      a.getStruct(0, 4).getUTF8String(2).toString
+    val first = kids(row)
+    assert(value(first) == "<s>v</s>aaa")
+    System.arraycopy("<r><k a='1'><s>v</s>bbb</k></r>".getBytes("UTF-8"), 0,
+      buf, 0, buf.length)
+    assert(value(kids(row)) == "<s>v</s>bbb")
+    assert(kids(UTF8String.fromString(docA)) eq first)
+    // the flat parse memoizes every row, fast path included
+    import org.apache.spark.sql.types._
+    val flat = XmlFlatParseExpr(
+      org.apache.spark.sql.catalyst.expressions.Literal("<r/>"),
+      StructType(Seq(StructField("s", ArrayType(StringType)))))
+    val docC = "<r><s>ccc</s></r>"
+    val buf2 = docC.getBytes("UTF-8")
+    val row2 = UTF8String.fromBytes(buf2)
+    def flatValue(r: Any) = r
+      .asInstanceOf[org.apache.spark.sql.catalyst.InternalRow]
+      .getArray(0).getUTF8String(0).toString
+    val firstFlat = flat.evalFlat(row2)
+    assert(flatValue(firstFlat) == "ccc")
+    System.arraycopy("<r><s>ddd</s></r>".getBytes("UTF-8"), 0, buf2, 0,
+      buf2.length)
+    assert(flatValue(flat.evalFlat(row2)) == "ddd")
+    assert(flat.evalFlat(UTF8String.fromString(docC))
+      .asInstanceOf[AnyRef] eq firstFlat.asInstanceOf[AnyRef])
   }
 }
