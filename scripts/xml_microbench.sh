@@ -1,8 +1,10 @@
 #!/usr/bin/env bash
 # Engine-local XML parse throughput (BASELINE.md "Engine-local XML parse
 # throughput" table). Cases: from_xml vs the custom xml_children expression,
-# projection vs explode shapes, plus the real gate queries under the bench's
-# noop-write action.
+# projection vs explode shapes, the real gate queries under the bench's
+# noop-write action, and `split`: the rowTag record scanner alone on one
+# thread over an in-memory rootless file of nRows ~78-byte records
+# (MB/s per core).
 #
 #   scripts/xml_microbench.sh [nRows] [case1,case2] [loop]
 #

@@ -8,7 +8,9 @@ import graft.xml.XmlFunctions.xml_children
 
 /** Micro-benchmark isolating XML parse throughput (BASELINE.md; VERDICT r1
   * items 1 and 10): `from_xml` vs the custom `xml_children` expression, in a
-  * plain projection vs beneath a `Generate` (explode).
+  * plain projection vs beneath a `Generate` (explode); and the rowTag split
+  * alone (`split`: [[graft.xml.XmlRecordScanner]] on one thread over a
+  * rootless flat file of `nRows` records held in memory, in MB/s per core).
   *
   * Run: sbt "runMain graft.XmlMicroBench [nRows] [case]"
   * With a case name it loops that case forever (for jstack profiling).
@@ -38,10 +40,26 @@ object XmlMicroBench {
 
     val schema = StructType(Seq(StructField("item", ArrayType(StringType))))
 
+    // ~78-byte rootless flat records, built only if `split` runs
+    lazy val flatFile: Array[Byte] = {
+      val sb = new java.lang.StringBuilder
+      for (i <- 0L until n) sb.append(s"""<rec id="$i"><name>n$i</name>""" +
+        s"<qty>${i % 50}</qty><note>a &amp; b</note></rec>\n")
+      sb.toString.getBytes("UTF-8")
+    }
+
     def fxParsed(d: DataFrame) =
       d.select(from_xml(col("xml"), schema).as("p"))
 
     val cases: Seq[(String, () => Long)] = Seq(
+      "split" -> (() => {
+        val sc = new graft.xml.XmlRecordScanner(
+          new java.io.ByteArrayInputStream(flatFile), "rec".getBytes("UTF-8"),
+          0L)
+        var k = 0L
+        while (sc.nextRecord(Long.MaxValue) != null) k += 1
+        k
+      }),
       "fx_project" -> (() =>
         fxParsed(df).select(sum(get(col("p.item"), lit(0)).cast("long")))
           .first().getLong(0)),
@@ -199,7 +217,9 @@ object XmlMicroBench {
         // MB/s only applies to the synthetic-doc cases; the x*_noop/x*_real
         // cases read testdata whose byte volume n*bytesPerRow doesn't model
         val mbs = n * bytesPerRow / sec / 1e6
-        if (name.startsWith("fx_") || name.startsWith("stax_") ||
+        if (name == "split") println(f"$name%-20s ${sec}%8.3f s/rep  " +
+          f"${flatFile.length / sec / 1e6}%8.1f MB/s/core  (r=$r)")
+        else if (name.startsWith("fx_") || name.startsWith("stax_") ||
             name.startsWith("dsl_"))
           println(f"$name%-20s ${sec}%8.3f s/rep  ${mbs}%8.1f MB/s  (r=$r)")
         else println(f"$name%-20s ${sec}%8.3f s/rep  (r=$r)")

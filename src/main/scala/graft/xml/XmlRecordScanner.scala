@@ -1,6 +1,9 @@
 package graft.xml
 
-import java.io.ByteArrayOutputStream
+import java.io.{IOException, InputStream}
+import java.util.Arrays
+
+import scala.annotation.tailrec
 
 /** The rowTag record scan behind the `graft-xml` FileFormat
   * ([[org.apache.spark.sql.graft.XmlRowTagFileFormat]], batch and
@@ -25,17 +28,78 @@ import java.io.ByteArrayOutputStream
   *     that sees its opening (a split that starts inside one re-syncs at
   *     the next `<rowTag` it sees, even if that text is inside it).
   *
-  * `read` supplies bytes (-1 = EOF); `pos` counts absolute consumed bytes
-  * starting from `startPos`. */
-final class XmlRecordScanner(read: () => Int,
+  * `in` is read in [[XmlRecordScanner.BlockBytes]] blocks with
+  * `read(byte[], off, len)`; the scan jumps to each `<` with a plain loop
+  * over the block and decodes only the bytes that follow one. A record is
+  * the contiguous span from its `<rowTag` to the end of its close tag, so
+  * it is captured by bulk copies: of a block's tail at each refill, into
+  * one reusable array per scanner, and of the rest when the record ends.
+  * `pos` counts absolute consumed bytes starting from `startPos`. */
+final class XmlRecordScanner(in: InputStream,
     rowTag: Array[Byte], startPos: Long) {
+  import XmlRecordScanner._
 
-  var pos: Long = startPos
+  /** A byte-at-a-time source (`readByte()` returns -1 at EOF). */
+  def this(readByte: () => Int, rowTag: Array[Byte], startPos: Long) =
+    this(new InputStream { override def read(): Int = readByte() },
+      rowTag, startPos)
 
-  private def read1(): Int = {
-    val b = read()
-    if (b >= 0) pos += 1
-    b
+  private val block = new Array[Byte](BlockBytes)
+  private var blockLen = 0
+  private var blockBase = startPos // absolute offset of block(0)
+  private var i = 0 // next unread index in block
+
+  // the record being captured (from offset recStart; -1 between records):
+  // cap(0 until capLen) ++ block(segStart until i)
+  private var recStart = -1L
+  private var segStart = 0
+  private var cap = new Array[Byte](0)
+  private var capLen = 0
+
+  def pos: Long = blockBase + i
+
+  /** Load the next block, first saving the captured tail of this one;
+    * false at EOF. */
+  private def refill(): Boolean = {
+    if (recStart >= 0) {
+      append(block, segStart, blockLen - segStart)
+      segStart = 0
+    }
+    blockBase += blockLen
+    i = 0
+    blockLen = math.max(in.read(block, 0, block.length), 0)
+    blockLen > 0
+  }
+
+  private def append(src: Array[Byte], off: Int, len: Int): Unit = {
+    if (capLen + len > cap.length)
+      cap = Arrays.copyOf(cap, math.max(capLen + len,
+        math.min(cap.length * 2L, Int.MaxValue - 8L).toInt))
+    System.arraycopy(src, off, cap, capLen, len)
+    capLen += len
+  }
+
+  private def read1(): Int =
+    if (i < blockLen || refill()) { val b = block(i) & 0xff; i += 1; b }
+    else -1
+
+  /** Consume through the next `<`; false at EOF. While capturing, the
+    * record-size guard is checked at each stop (before that `<`, or at a
+    * block end in text): only there, between markup units, so a record
+    * trips it exactly when a check before every text byte would. */
+  @tailrec private def skipToLt(): Boolean = {
+    val end = blockLen
+    var j = i
+    while (j < end && block(j) != '<') j += 1
+    i = j
+    if (recStart >= 0 && capLen.toLong + (i - segStart) > MaxRecordBytes)
+      throw new IOException(
+        s"graft.xml: record at offset $recStart exceeds " +
+          s"$MaxRecordBytes bytes — missing " +
+          s"</${new String(rowTag, "UTF-8")}>?")
+    if (j < end) { i = j + 1; true }
+    else if (refill()) skipToLt()
+    else false
   }
 
   private def isDelim(c: Int): Boolean =
@@ -43,103 +107,78 @@ final class XmlRecordScanner(read: () => Int,
 
   /** Consume the rest of an open tag after `<rowTag` + `delim`; returns the
     * depth delta: +1 for an open element, 0 for self-closing `<rowTag .../>`.
-    * `/` and `>` inside a quoted attribute value are plain text. (In-tag
-    * bytes are captured when `buf` is non-null.) */
-  private def finishOpenTag(delim: Int, buf: ByteArrayOutputStream): Int = {
+    * `/` and `>` inside a quoted attribute value are plain text. */
+  private def finishOpenTag(delim: Int): Int = {
     if (delim == '>') return 1
     var prev = delim
     var quote = -1
     var c = read1()
     while (c != -1 && (c != '>' || quote != -1)) {
-      if (buf != null) buf.write(c)
       if (quote == -1) { if (c == '"' || c == '\'') quote = c }
       else if (c == quote) quote = -1
       prev = c
       c = read1()
     }
-    if (c == '>' && buf != null) buf.write('>')
     if (prev == '/') 0 else 1
   }
 
-  /** Match `rowTag` bytes right after a consumed '<' (or "</"); returns the
-    * first non-matching / post-tag byte, or Int.MinValue on a full match
-    * (caller then reads the delimiter). Consumed bytes are captured when
-    * `buf` is non-null. */
-  private def matchTag(buf: ByteArrayOutputStream): Int = {
-    var i = 0
-    while (i < rowTag.length) {
+  /** Match `rowTag` bytes `from` onward; returns Int.MinValue on a full
+    * match (caller then reads the delimiter), else the first non-matching
+    * byte, consumed, or -1 at EOF. */
+  private def matchTag(from: Int): Int = {
+    var k = from
+    while (k < rowTag.length) {
       val c = read1()
-      if (c == -1) return -1
-      if (buf != null) buf.write(c)
-      if (c != rowTag(i)) return c
-      i += 1
+      if (c == -1 || c != rowTag(k)) return c
+      k += 1
     }
     Int.MinValue
   }
 
-  /** Consume through `terminator` (already inside the construct). Captured
-    * when `buf` is non-null. Returns false on EOF. KMP failure links keep
-    * overlapping prefixes in sync (e.g. CDATA content "]]]>" must still
-    * terminate on its trailing "]]>"). */
-  private def skipUntil(terminator: Array[Byte],
-      buf: ByteArrayOutputStream): Boolean = {
-    val fail = new Array[Int](terminator.length)
-    var k = 0
-    var i = 1
-    while (i < terminator.length) {
-      while (k > 0 && terminator(i) != terminator(k)) k = fail(k - 1)
-      if (terminator(i) == terminator(k)) k += 1
-      fail(i) = k
-      i += 1
-    }
+  /** Consume through `t` (already inside the construct). Returns false on
+    * EOF. KMP failure links keep overlapping prefixes in sync (e.g. CDATA
+    * content "]]]>" must still terminate on its trailing "]]>"). */
+  private def skipUntil(t: Terminator): Boolean = {
     var m = 0
-    while (m < terminator.length) {
+    while (m < t.bytes.length) {
       val c = read1()
       if (c == -1) return false
-      if (buf != null) buf.write(c)
-      while (m > 0 && c != terminator(m)) m = fail(m - 1)
-      if (c == terminator(m)) m += 1
+      while (m > 0 && c != t.bytes(m)) m = t.fail(m - 1)
+      if (c == t.bytes(m)) m += 1
     }
     true
   }
 
-  private val CommentOpen = "!--".getBytes("US-ASCII")
-  private val CdataOpen = "![CDATA[".getBytes("US-ASCII")
-  private val CommentClose = "-->".getBytes("US-ASCII")
-  private val CdataClose = "]]>".getBytes("US-ASCII")
-  private val PiClose = "?>".getBytes("US-ASCII")
-
   /** After a consumed "<!", classify + skip a comment (`<!--...-->`), CDATA
     * (`<![CDATA[...]]>`), or other markup declaration ([[skipDecl]]).
-    * Captured when `buf` is non-null. Returns false on EOF. */
-  private def skipBang(buf: ByteArrayOutputStream): Boolean = {
+    * Returns false on EOF. */
+  private def skipBang(): Boolean = {
     // match as much of "!--" / "![CDATA[" as possible; else a declaration
-    var i = 1 // caller consumed '!' (position 0 of both opener patterns)
+    var k = 1 // caller consumed '!' (position 0 of both opener patterns)
     var c = 0
     var isComment = true
     var isCdata = true
-    while ((isComment && i < CommentOpen.length) ||
-        (isCdata && i < CdataOpen.length)) {
+    while ((isComment && k < CommentOpen.length) ||
+        (isCdata && k < CdataOpen.length)) {
       c = read1()
       if (c == -1) return false
-      if (buf != null) buf.write(c)
       if (c == '>') return true // e.g. "<!>" — degenerate, done
-      isComment = isComment && i < CommentOpen.length && c == CommentOpen(i)
-      isCdata = isCdata && i < CdataOpen.length && c == CdataOpen(i)
-      if (!isComment && !isCdata) return skipDecl(c, buf) // DOCTYPE etc.
-      i += 1
+      isComment = isComment && k < CommentOpen.length && c == CommentOpen(k)
+      isCdata = isCdata && k < CdataOpen.length && c == CdataOpen(k)
+      if (!isComment && !isCdata) return skipDecl(c) // DOCTYPE etc.
+      k += 1
     }
-    if (isComment && i == CommentOpen.length) skipUntil(CommentClose, buf)
-    else skipUntil(CdataClose, buf)
+    if (isComment && k == CommentOpen.length) skipUntil(CommentClose)
+    else skipUntil(CdataClose)
   }
 
   /** Consume a markup declaration (`<!DOCTYPE ...>` and the like) through
     * its closing `>`, `first` being its first byte after "<!". The `>` that
     * ends it lies outside quotes and outside a `[...]` internal subset;
     * inside the subset, comments and processing instructions are skipped
-    * whole, so a quote or bracket in their text does not count. Captured
-    * when `buf` is non-null. Returns false on EOF. */
-  private def skipDecl(first: Int, buf: ByteArrayOutputStream): Boolean = {
+    * whole, so a quote or bracket in their text does not count. Returns
+    * false on EOF. */
+  private def skipDecl(first: Int): Boolean = {
     var c = first
     var quote = -1
     var depth = 0
@@ -152,17 +191,14 @@ final class XmlRecordScanner(read: () => Int,
       else if (c == '<' && depth > 0) {
         val b = read1()
         if (b == -1) return false
-        if (buf != null) buf.write(b)
-        if (b == '?') { if (!skipUntil(PiClose, buf)) return false }
+        if (b == '?') { if (!skipUntil(PiClose)) return false }
         else if (b == '!') {
           val b2 = read1()
           if (b2 == -1) return false
-          if (buf != null) buf.write(b2)
           if (b2 == '-') {
             val b3 = read1()
             if (b3 == -1) return false
-            if (buf != null) buf.write(b3)
-            if (b3 == '-') { if (!skipUntil(CommentClose, buf)) return false }
+            if (b3 == '-') { if (!skipUntil(CommentClose)) return false }
             else next = b3
           } else next = b2
         } else next = b
@@ -170,7 +206,6 @@ final class XmlRecordScanner(read: () => Int,
       c = if (next != -2) next else {
         val r = read1()
         if (r == -1) return false
-        if (buf != null) buf.write(r)
         r
       }
     }
@@ -181,102 +216,95 @@ final class XmlRecordScanner(read: () => Int,
     * (absolute position), or null at EOF / ownership end / truncation. */
   def nextRecord(ownedEnd: Long): (Long, Array[Byte]) = {
     // ---- phase 1: find a record start owned by this range ----
-    var recStart = -1L
+    recStart = -1L
     var delim = -1
-    var c = read1()
     while (recStart < 0) {
-      if (c == -1) return null
-      if (c == '<') {
-        val ltPos = pos - 1
-        if (ltPos >= ownedEnd) return null
-        val first = read1()
-        if (first == '!') {
-          // commented-out / CDATA'd rowTag text must not start a record
-          if (!skipBang(null)) return null
-          c = read1()
-        } else if (first == '?') {
-          if (!skipUntil(PiClose, null)) return null
-          c = read1()
-        } else if (first == -1) return null
-        else if (first == rowTag(0)) {
-          val m = if (rowTag.length == 1) Int.MinValue else matchTagFrom(1)
-          if (m == Int.MinValue) {
-            val d = read1()
-            if (isDelim(d)) { recStart = ltPos; delim = d }
-            else c = d // e.g. <recs...> with rowTag rec — keep scanning
-          } else c = m match {
-            case -1 => -1
-            case b  => if (b == '<') b else read1()
-          }
-        } else c = if (first == '<') first else read1()
-      } else c = read1()
+      if (!skipToLt()) return null
+      val ltPos = pos - 1
+      if (ltPos >= ownedEnd) return null
+      val first = read1()
+      if (first == '!') {
+        // commented-out / CDATA'd rowTag text must not start a record
+        if (!skipBang()) return null
+      } else if (first == '?') {
+        if (!skipUntil(PiClose)) return null
+      } else if (first == -1) return null
+      else if (first == rowTag(0)) {
+        val m = matchTag(1)
+        if (m == Int.MinValue) {
+          val d = read1()
+          if (isDelim(d)) { recStart = ltPos; delim = d }
+          else if (d != -1) i -= 1 // rescan it, e.g. <recs...> for rec
+        } else if (m != -1) i -= 1
+      } else i -= 1 // rescan: it may be the next '<'
     }
     // ---- phase 2: capture through the matching close tag ----
-    val buf = new ByteArrayOutputStream(8192)
-    buf.write('<'); buf.write(rowTag, 0, rowTag.length); buf.write(delim)
-    var depth = finishOpenTag(delim, buf)
+    capLen = 0
+    if (recStart >= blockBase) segStart = (recStart - blockBase).toInt
+    else { // the open tag straddled a refill; its bytes are known
+      segStart = i
+      append(('<'.toByte +: rowTag) :+ delim.toByte, 0, rowTag.length + 2)
+    }
+    var depth = finishOpenTag(delim)
     while (depth > 0) {
-      if (buf.size() > XmlRecordScanner.MaxRecordBytes)
-        throw new java.io.IOException(
-          s"graft.xml: record at offset $recStart exceeds " +
-            s"${XmlRecordScanner.MaxRecordBytes} bytes — missing " +
-            s"</${new String(rowTag, "UTF-8")}>?")
-      val b = read1()
-      if (b == -1) return null // truncated trailing record
-      buf.write(b)
-      if (b == '<') {
-        val b2 = read1()
-        if (b2 == -1) return null
-        buf.write(b2)
-        if (b2 == '!') {
-          // comment/CDATA content rides along uninterpreted: tags inside
-          // must not bump the depth counter
-          if (!skipBang(buf)) return null
-        } else if (b2 == '?') {
-          if (!skipUntil(PiClose, buf)) return null
-        } else if (b2 == '/') {
-          if (matchTag(buf) == Int.MinValue) {
-            val b3 = read1()
-            if (b3 == -1) return null
-            buf.write(b3)
-            if (b3 == '>') depth -= 1
-          }
-        } else if (b2 == rowTag(0)) {
-          // potential nested open tag; first byte already consumed
-          var i = 1
-          var ok = true
-          while (ok && i < rowTag.length) {
-            val cc = read1()
-            if (cc == -1) return null
-            buf.write(cc)
-            if (cc != rowTag(i)) ok = false else i += 1
-          }
-          if (ok) {
-            val d = read1()
-            if (d == -1) return null
-            buf.write(d)
-            if (isDelim(d)) depth += finishOpenTag(d, buf)
-          }
+      if (!skipToLt()) return null // truncated trailing record
+      val b2 = read1()
+      if (b2 == -1) return null
+      if (b2 == '!') {
+        // comment/CDATA content rides along uninterpreted: tags inside
+        // must not bump the depth counter
+        if (!skipBang()) return null
+      } else if (b2 == '?') {
+        if (!skipUntil(PiClose)) return null
+      } else if (b2 == '/') {
+        if (matchTag(0) == Int.MinValue) {
+          val b3 = read1()
+          if (b3 == -1) return null
+          if (b3 == '>') depth -= 1
+        }
+      } else if (b2 == rowTag(0)) {
+        // potential nested open tag; first byte already consumed
+        val m = matchTag(1)
+        if (m == -1) return null
+        if (m == Int.MinValue) {
+          val d = read1()
+          if (d == -1) return null
+          if (isDelim(d)) depth += finishOpenTag(d)
         }
       }
     }
-    (recStart, buf.toByteArray)
-  }
-
-  /** [[matchTag]] with the first `from` bytes already verified. */
-  private def matchTagFrom(from: Int): Int = {
-    var i = from
-    while (i < rowTag.length) {
-      val c = read1()
-      if (c == -1) return -1
-      if (c != rowTag(i)) return c
-      i += 1
-    }
-    Int.MinValue
+    val bytes =
+      if (capLen == 0) Arrays.copyOfRange(block, segStart, i)
+      else { append(block, segStart, i - segStart); Arrays.copyOf(cap, capLen) }
+    (recStart, bytes)
   }
 }
 
 object XmlRecordScanner {
   /** Guard against a missing close tag silently swallowing a whole file. */
   val MaxRecordBytes: Int = 128 * 1024 * 1024
+
+  /** Bytes per `InputStream.read` into the scanner's block. */
+  val BlockBytes: Int = 64 * 1024
+
+  /** A construct's closing bytes with their KMP failure table. */
+  private final class Terminator(s: String) {
+    val bytes: Array[Byte] = s.getBytes("US-ASCII")
+    val fail: Array[Int] = {
+      val f = new Array[Int](bytes.length)
+      var k = 0
+      for (j <- 1 until bytes.length) {
+        while (k > 0 && bytes(j) != bytes(k)) k = f(k - 1)
+        if (bytes(j) == bytes(k)) k += 1
+        f(j) = k
+      }
+      f
+    }
+  }
+
+  private val CommentOpen = "!--".getBytes("US-ASCII")
+  private val CdataOpen = "![CDATA[".getBytes("US-ASCII")
+  private val CommentClose = new Terminator("-->")
+  private val CdataClose = new Terminator("]]>")
+  private val PiClose = new Terminator("?>")
 }

@@ -33,7 +33,9 @@ import graft.xml.XmlRecordScanner
   * Usage: `spark.read.format("graft-xml").option("rowTag", "rec")
   * .load(dir)`; streaming likewise with an explicit `value string` schema
   * (file stream sources require one). Compressed files decode through
-  * their Hadoop codec as a single split each.
+  * their Hadoop codec as a single split each. The scanner reads the file
+  * stream (or the codec's stream) directly in 64 KiB blocks, so no
+  * buffering wrapper sits in between.
   *
   * The write side ([[XmlOutputWriter]]) makes the format symmetric:
   * `df.write.format("graft-xml").option("rowTag", "rec").save(dir)` emits
@@ -118,17 +120,15 @@ class XmlRowTagFileFormat extends FileFormat with DataSourceRegister
           // the decompressed stream to its end
           start = 0L
           end = Long.MaxValue
-          new java.io.BufferedInputStream(
-            codec.createInputStream(fsin), 64 * 1024)
+          codec.createInputStream(fsin)
         } else {
           fsin.seek(file.start)
-          new java.io.BufferedInputStream(fsin, 64 * 1024)
+          fsin
         }
       Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit] {
         _ => try in.close() catch { case _: Exception => }
       })
-      val scanner = new XmlRecordScanner(() => in.read(),
-        rowTag.getBytes("UTF-8"), start)
+      val scanner = new XmlRecordScanner(in, rowTag.getBytes("UTF-8"), start)
       val proj = UnsafeProjection.create(requiredOut)
       val row = new GenericInternalRow(requiredOut.length)
 
