@@ -21,10 +21,11 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Scale: embarrassingly parallel per row; no state, no shuffle. The returned
   * children carry re-parsable outer XML so downstream exact-member binding
-  * stays on the codegen'd `from_xml` path.
+  * stays on the native parse (`xml_flat_parse`).
   */
 case class XmlChildrenExpr(child: Expression, patterns: Seq[String],
-    fromRoot: Boolean, needOuter: Boolean = true, needValue: Boolean = true)
+    fromRoot: Boolean, needOuter: Boolean = true, needValue: Boolean = true,
+    memo: Boolean = true)
   extends UnaryExpression {
 
   override def dataType: DataType = XmlChildrenExpr.outType
@@ -36,8 +37,8 @@ case class XmlChildrenExpr(child: Expression, patterns: Seq[String],
     XmlChildrenExpr.siteKey(patterns, fromRoot, needOuter, needValue)
 
   override def nullSafeEval(input: Any): Any =
-    XmlChildrenExpr.evalJava(input.asInstanceOf[UTF8String], patterns,
-      fromRoot, specKey, needOuter, needValue)
+    XmlChildrenExpr.extract(input.asInstanceOf[UTF8String], patterns,
+      fromRoot, specKey, needOuter, needValue, memo)
 
   // a real doGenCode (vs CodegenFallback) keeps the surrounding projection
   // inside whole-stage codegen; the generated code just calls the static
@@ -49,8 +50,8 @@ case class XmlChildrenExpr(child: Expression, patterns: Seq[String],
     val key = ctx.addReferenceObj("specKey", specKey, "java.lang.String")
     nullSafeCodeGen(ctx, ev, c => {
       s"""
-         |${ev.value} = graft.xml.XmlChildrenExpr.evalJava($c, $pats,
-         |  $fromRoot, $key, $needOuter, $needValue);
+         |${ev.value} = graft.xml.XmlChildrenExpr.extract($c, $pats,
+         |  $fromRoot, $key, $needOuter, $needValue, $memo);
          |if (${ev.value} == null) { ${ev.isNull} = true; }
        """.stripMargin
     })
@@ -87,23 +88,39 @@ object XmlChildrenExpr {
 
   /** Static evaluator shared by interpreted eval and generated code, and
     * the one child extraction every expression reads: the byte-level fast
-    * path (value-only capture of leaf children: no decode, no StAX, values
-    * copied straight from the input bytes) first, and anything outside its
-    * proven-equivalent subset through the StAX walk. Only the StAX result
-    * is memoized ([[XmlRowMemo]]): it is the constructed ArrayData, because
-    * rebuilding UTF8Strings per reference was a measured hotspot, and it is
-    * immutable, so sharing it within a thread is safe. */
-  def evalJava(input: UTF8String, patterns: Seq[String],
-      fromRoot: Boolean, specKey: String, needOuter: Boolean,
-      needValue: Boolean): ArrayData = {
+    * path (no decode, no StAX; values and outer XML written straight from
+    * the input bytes) first, and anything outside its proven-equivalent
+    * subset through the StAX walk. With `memo`, the StAX result goes
+    * through the row memo ([[XmlRowMemo]]): it is the constructed
+    * ArrayData, because rebuilding UTF8Strings per reference was a
+    * measured hotspot, and it is immutable, so sharing it within a thread
+    * is safe. An extraction evaluated once per row (pulled into its own
+    * Project by `graft.plans.DedupXmlParses`) passes `memo = false`. */
+  def extract(input: UTF8String, patterns: Seq[String], fromRoot: Boolean,
+      specKey: String, needOuter: Boolean, needValue: Boolean,
+      memo: Boolean): ArrayData = {
     val fast = XmlFastScan.children(input, patterns, specKey, fromRoot,
       needOuter, needValue)
     if (!(fast eq XmlFastScan.Bail)) fast.asInstanceOf[ArrayData]
+    else if (!memo) stax(input, patterns, fromRoot, specKey, needOuter,
+      needValue)
     else XmlRowMemo(specKey, input) {
-      build(XmlStax.children(input.toString, patterns, fromRoot, specKey,
-        needOuter, needValue))
+      stax(input, patterns, fromRoot, specKey, needOuter, needValue)
     }
   }
+
+  /** [[extract]] with the row memo. */
+  def evalJava(input: UTF8String, patterns: Seq[String],
+      fromRoot: Boolean, specKey: String, needOuter: Boolean,
+      needValue: Boolean): ArrayData =
+    extract(input, patterns, fromRoot, specKey, needOuter, needValue,
+      memo = true)
+
+  private def stax(input: UTF8String, patterns: Seq[String],
+      fromRoot: Boolean, specKey: String, needOuter: Boolean,
+      needValue: Boolean): ArrayData =
+    build(XmlStax.children(input.toString, patterns, fromRoot, specKey,
+      needOuter, needValue))
 
   // pruned outer/value fields are "" for every child — share one constant
   private def utf8(s: String): UTF8String =
@@ -214,10 +231,9 @@ case class XmlChildrenAtExpr(child: Expression, container: String,
   * expression; this expression linear-scans the extraction of
   * [[XmlChildrenExpr.evalJava]] (same site key as an [[XmlChildrenExpr]]
   * over the same spec, so N members on one row still parse once) and
-  * returns the winner's struct from it. Dispatch is the
-  * reference's (Parser.cs:166-187): an exact `memberName` matches by
-  * equality; a glob member matches `prefix*suffix` minus any tag claimed
-  * by an exact member or by a LATER-registered glob (last-glob-wins). */
+  * returns the winner's struct from it ([[XmlChildMatch]]). With
+  * `GraftExtensions`, `DedupXmlParses` pulls the extraction into its own
+  * Project and rewrites each member to an [[XmlPickChildExpr]] over it. */
 case class XmlFirstChildExpr(child: Expression, capturePatterns: Seq[String],
     fromRoot: Boolean, memberName: String, exactNames: Seq[String],
     laterGlobs: Seq[String], needOuter: Boolean = true,
@@ -229,38 +245,17 @@ case class XmlFirstChildExpr(child: Expression, capturePatterns: Seq[String],
 
   @transient private lazy val specKey: String =
     XmlChildrenExpr.siteKey(capturePatterns, fromRoot, needOuter, needValue)
-  @transient private lazy val exactSet: Set[String] = exactNames.toSet
-  @transient private lazy val selfGlob: Option[XmlStax.Glob] =
-    if (memberName.contains("*")) {
-      val i = memberName.indexOf('*')
-      Some(XmlStax.Glob(memberName.substring(0, i),
-        memberName.substring(i + 1)))
-    } else None
-  @transient private lazy val laterCompiled: Seq[XmlStax.Glob] =
-    laterGlobs.map { g =>
-      val i = g.indexOf('*')
-      XmlStax.Glob(g.substring(0, i), g.substring(i + 1))
-    }
+  @transient private lazy val member =
+    new XmlChildMatch(memberName, exactNames, laterGlobs)
 
-  private def matches(tag: String): Boolean = selfGlob match {
-    case None => tag == memberName
-    case Some(g) => g.matches(tag) && !exactSet.contains(tag) &&
-      !laterCompiled.exists(_.matches(tag))
-  }
+  /** The extraction this member reads, evaluated once per row. */
+  def extraction: XmlChildrenExpr = XmlChildrenExpr(child, capturePatterns,
+    fromRoot, needOuter, needValue, memo = false)
 
   /** Instance evaluator referenced directly from the generated code. */
-  def firstChild(input: UTF8String): InternalRow = {
-    val kids = XmlChildrenExpr.evalJava(input, capturePatterns, fromRoot,
-      specKey, needOuter, needValue)
-    if (kids == null) return null
-    var i = 0
-    while (i < kids.numElements()) {
-      val row = kids.getStruct(i, 4)
-      if (matches(row.getUTF8String(0).toString)) return row
-      i += 1
-    }
-    null
-  }
+  def firstChild(input: UTF8String): InternalRow =
+    member.first(XmlChildrenExpr.evalJava(input, capturePatterns, fromRoot,
+      specKey, needOuter, needValue))
 
   override def nullSafeEval(input: Any): Any =
     firstChild(input.asInstanceOf[UTF8String])
@@ -279,6 +274,78 @@ case class XmlFirstChildExpr(child: Expression, capturePatterns: Seq[String],
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
+}
+
+/** [[XmlFirstChildExpr]]'s member over an extraction already evaluated:
+  * `child` is the `array<struct<tag,xml,value,attrs>>` of an
+  * [[XmlChildrenExpr]]. */
+case class XmlPickChildExpr(child: Expression, memberName: String,
+    exactNames: Seq[String], laterGlobs: Seq[String])
+  extends UnaryExpression {
+
+  override def dataType: DataType = XmlChildrenExpr.elemType
+  override def nullable: Boolean = true
+  override def prettyName: String = "xml_pick_child"
+
+  @transient private lazy val member =
+    new XmlChildMatch(memberName, exactNames, laterGlobs)
+
+  def pick(kids: ArrayData): InternalRow = member.first(kids)
+
+  override def nullSafeEval(input: Any): Any =
+    pick(input.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext,
+      ev: ExprCode): ExprCode = {
+    val self = ctx.addReferenceObj("expr", this,
+      "graft.xml.XmlPickChildExpr")
+    nullSafeCodeGen(ctx, ev, c => {
+      s"""
+         |${ev.value} = $self.pick($c);
+         |if (${ev.value} == null) { ${ev.isNull} = true; }
+       """.stripMargin
+    })
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+/** Reference member dispatch over extracted children (Parser.cs:166-187):
+  * an exact `memberName` matches by equality; a glob member matches
+  * `prefix*suffix` minus any tag claimed by an exact member or by a
+  * LATER-registered glob (last-glob-wins). Tags compare as UTF8 bytes. */
+private[xml] final class XmlChildMatch(memberName: String,
+    exactNames: Seq[String], laterGlobs: Seq[String]) {
+  private def glob(g: String): (UTF8String, UTF8String) = {
+    val i = g.indexOf('*')
+    (UTF8String.fromString(g.substring(0, i)),
+      UTF8String.fromString(g.substring(i + 1)))
+  }
+  private def hits(g: (UTF8String, UTF8String), t: UTF8String): Boolean =
+    t.startsWith(g._1) && t.endsWith(g._2)
+
+  private val exact = UTF8String.fromString(memberName)
+  private val selfGlob = if (memberName.contains("*")) glob(memberName)
+    else null
+  private val exacts = exactNames.map(UTF8String.fromString).toSet
+  private val later = laterGlobs.map(glob).toArray
+
+  def matches(t: UTF8String): Boolean =
+    if (selfGlob == null) t == exact
+    else hits(selfGlob, t) && !exacts.contains(t) && !later.exists(hits(_, t))
+
+  /** The first matching child's struct, or null. */
+  def first(kids: ArrayData): InternalRow = {
+    if (kids == null) return null
+    var i = 0
+    while (i < kids.numElements()) {
+      val row = kids.getStruct(i, 4)
+      if (matches(row.getUTF8String(0))) return row
+      i += 1
+    }
+    null
+  }
 }
 
 /** Reference `StringParser` semantics over a whole element string. */

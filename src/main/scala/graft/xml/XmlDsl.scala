@@ -28,8 +28,9 @@ import XmlFunctions._
   *
   * Compilation strategy (SURVEY.md §7.3): specs using only exact names,
   * scalars, structs, attributes and single-name arrays compile to the
-  * '''native path''' — `from_xml` / the native XML file source, fully
-  * codegen'd, first-wins duplicate handling via ArrayType + element_at.
+  * '''native path''' — one native read schema per record, parsed by
+  * `xml_flat_parse` (from_xml's semantics, a byte-level fast path in
+  * front), first-wins duplicate handling via ArrayType + element_at.
   * Wildcard names, heterogeneous arrays and `custom` members route through
   * the '''StAX path''' (`xml_children`), with exact sub-members still bound
   * natively from each extracted child's outer XML.
@@ -110,7 +111,7 @@ private[xml] final class ObjSpec {
         case _                   => false
       })
 
-  /** Whole spec expressible on the native XML source / from_xml. */
+  /** Whole spec expressible as one native read schema. */
   def isNative: Boolean = members.forall {
     case (n, ScalarM(_)) => !n.contains("*")
     case (n, o: ObjM)    => !n.contains("*") && o.spec.isNative
@@ -221,24 +222,22 @@ private[xml] object Bind {
     m
   }
 
-  /** The per-row record parse for a native read schema. FLAT schemas (root
-    * attrs + scalars + single-scalar containers — the overwhelmingly common
-    * record shape) run through [[XmlFlatParseExpr]]: a one-pass byte
-    * scanner with per-row fallback to Spark's own XML evaluator, an order
-    * of magnitude cheaper than from_xml's per-row Woodstox reader. Nested
-    * schemas keep from_xml wrapped in the per-thread parse memo — the DSL
-    * references the parsed struct once per bound member, and those
-    * references survive as duplicate parses in the optimized Project (see
-    * XmlMemoParseExpr). */
-  def fx(c: Column, st: StructType): Column =
-    if (XmlFastScan.FlatSpec.of(st).isDefined)
-      org.apache.spark.sql.graft.ColumnBridge.column(
-        XmlFlatParseExpr(
-          org.apache.spark.sql.graft.ColumnBridge.expression(c), st))
-    else
-      org.apache.spark.sql.graft.ColumnBridge.column(
-        XmlMemoParseExpr(org.apache.spark.sql.graft.ColumnBridge.expression(
-          from_xml(c, st, xmlOptions))))
+  /** The per-row record parse for a native read schema:
+    * [[XmlFlatParseExpr]], a one-pass byte scanner with per-row fallback
+    * to Spark's own XML evaluator, an order of magnitude cheaper than
+    * from_xml's per-row Woodstox reader; from_xml itself only for a schema
+    * the scanner cannot serve. Either is wrapped in the per-thread parse
+    * memo — the DSL references the parsed struct once per bound member,
+    * and those references survive as duplicate parses in the optimized
+    * Project (see XmlMemoParseExpr). */
+  def fx(c: Column, st: StructType): Column = {
+    import org.apache.spark.sql.graft.ColumnBridge
+    val parse =
+      if (XmlFastScan.FlatSpec.of(st).isDefined)
+        XmlFlatParseExpr(ColumnBridge.expression(c), st)
+      else ColumnBridge.expression(from_xml(c, st, xmlOptions))
+    ColumnBridge.column(XmlMemoParseExpr(parse))
+  }
 
   /** First element's local name of a document/fragment string — for rootless
     * (`fragment`) parsers, ≙ the reference's root-depth bootstrap tag
@@ -285,13 +284,13 @@ private[xml] object Bind {
   }
 
   /** Same for the children a StaxBindNode pulls through firstKid — exact
-    * scalars bind natively off from_xml (never from the extraction), so
-    * only glob scalars pull `value`; the obj/array conditions mirror the
-    * StaxBindNode dispatch exactly (over-approximation is safe, an
-    * under-approximation would serve "" to a live consumer). Arrays that
-    * bind natively OR through the fused container descent
-    * ([[bindArrayAt]] — exact name, no container attrs) never pull the
-    * container's outer through firstKid at all. */
+    * scalars bind natively off the native parse (never from the
+    * extraction), so only glob scalars pull `value`; the obj/array
+    * conditions mirror the StaxBindNode dispatch exactly
+    * (over-approximation is safe, an under-approximation would serve ""
+    * to a live consumer). Arrays that bind natively OR through the fused
+    * container descent ([[bindArrayAt]] — exact name, no container attrs)
+    * never pull the container's outer through firstKid at all. */
   private[xml] def staxKidNeeds(spec: ObjSpec): (Boolean, Boolean) = {
     var needOuter = false
     var needValue = false
@@ -392,8 +391,8 @@ private[xml] abstract class BaseBindNode(spec: ObjSpec) extends XmlNode {
     customBound(member(name).asInstanceOf[CustomM])
 }
 
-/** Fully-native binding: `parsed` is the struct produced by from_xml/the XML
-  * file source with this spec's nativeReadSchema. */
+/** Fully-native binding: `parsed` is the struct the native parse
+  * ([[Bind.fx]]) produces with this spec's nativeReadSchema. */
 private[xml] final class NativeBindNode(parsed: Column, tagC: Column,
     spec: ObjSpec) extends BaseBindNode(spec) {
   override def tag: Column = tagC
@@ -414,7 +413,7 @@ private[xml] final class NativeBindNode(parsed: Column, tagC: Column,
 }
 
 /** StAX-path binding: exact members bind natively via the pre-built
-  * `parsed` struct (from_xml over the outer XML); wildcard/custom/
+  * `parsed` struct (the native parse of the outer XML); wildcard/custom/
   * heterogeneous members bind through the codegen'd first-match
   * expression ([[XmlFirstChildExpr]] — one extraction per row, through
   * [[XmlChildrenExpr.evalJava]] and the row memo, shared by every member;
@@ -590,7 +589,7 @@ final class CompiledXmlParser private[xml] (
     * reference's glob dispatch, Parser.cs:175-187; FileSourceScan sizes
     * splits as max(openCost, totalBytes/parallelism), so one big file fans
     * out across cores without manual split tuning) — then binds each
-    * record via `parse()`: native specs parse with codegen'd from_xml,
+    * record via `parse()`: native specs parse with `xml_flat_parse`,
     * wildcard/custom specs with the StAX expressions. Returns one `parsed`
     * column. */
   def read(spark: SparkSession, path: String): DataFrame = {
@@ -598,7 +597,7 @@ final class CompiledXmlParser private[xml] (
       "consume a container element — use parse() on a string column")
     require(rootTag.nonEmpty, "read() needs a rootTag (XmlParser.struct)")
     // ALL specs read through the graft-xml rowTag scan, then bind via
-    // parse() — which itself picks the native from_xml path for native
+    // parse() — which itself picks the native parse path for native
     // specs, so per-record parsing stays codegen'd. Routing native specs
     // through Spark's built-in XML FILE source instead is NOT safe: with
     // multiple root-level records per file (the rootless shape our writer
@@ -615,7 +614,7 @@ final class CompiledXmlParser private[xml] (
   /** Structured-streaming variant of [[read]] — the incremental realization
     * of the reference's forward-only contract (SURVEY.md §7.1). Same
     * routing as [[read]]: the `graft-xml` scan splits files into rowTag
-    * records, `parse()` binds each (native from_xml or StAX per spec); the
+    * records, `parse()` binds each (native parse or StAX per spec); the
     * reference applies its glob dispatch to any input (Parser.cs:175-187),
     * so the streaming surface must too.
     *

@@ -7,22 +7,25 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext,
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** `from_xml` replacement for FLAT native read schemas (root attributes +
-  * repeated scalar children + single-scalar containers).
+/** `from_xml` replacement for native read schemas (attributes, repeated
+  * scalar children, and repeated objs of the same shape to any depth —
+  * everything `ObjSpec.nativeReadSchema` builds).
   *
   * Spark's `from_xml` creates a fresh Woodstox stream reader per row —
   * `SymbolTable.makeChild` dominates its profile on record-sized documents
   * (measured via jstack on the x4 struct path). This expression parses the
-  * common record shape with [[XmlFastScan.flatStruct]] (one pass over the
-  * UTF8 bytes, values copied straight from the input buffer) and falls back
-  * PER ROW to Spark's own `XmlToStructsEvaluator` for anything outside the
+  * record with [[XmlFastScan.flatStruct]] (one pass over the UTF8 bytes,
+  * values copied straight from the input buffer) and falls back PER ROW to
+  * Spark's own `XmlToStructsEvaluator` for anything outside the
   * proven-equivalent subset (prolog, entities, mixed content, empty or
   * padded values, namespaces, malformed markup, …) — so the semantics are
   * from_xml's by construction, including mixed-content serialization (x6)
   * and PERMISSIVE handling of corrupt documents (x10).
   *
-  * Every row's result goes through the row memo ([[XmlRowMemo]]), which
-  * makes the duplicate references a bound projection holds O(1).
+  * The expression itself keeps no per-row state: the DSL binds it inside
+  * [[XmlMemoParseExpr]], whose row memo makes a bound projection's
+  * duplicate references O(1), and `graft.plans.DedupXmlParses` pulls it
+  * out of that wrapper into a Project that evaluates it once per row.
   */
 case class XmlFlatParseExpr(child: Expression, schema: StructType)
   extends UnaryExpression {
@@ -34,12 +37,13 @@ case class XmlFlatParseExpr(child: Expression, schema: StructType)
   @transient private lazy val spec: XmlFastScan.FlatSpec =
     XmlFastScan.FlatSpec.of(schema).getOrElse(
       throw new IllegalStateException(
-        "xml_flat_parse on a non-flat schema: " + schema.catalogString))
+        "xml_flat_parse on a schema the fast scan cannot serve: " +
+          schema.catalogString))
 
   // Spark's real evaluator, created lazily per executor; the options are
   // the DSL's from_xml options, so fallback rows parse EXACTLY as the
   // from_xml path did. TimeZone only affects date/timestamp fields, which
-  // a flat schema cannot contain.
+  // a native read schema cannot contain.
   @transient private lazy val fallback = {
     val opts = Map.newBuilder[String, String]
     Bind.xmlOptions.forEach((k, v) => opts += (k -> v))
@@ -54,9 +58,7 @@ case class XmlFlatParseExpr(child: Expression, schema: StructType)
       Literal(UTF8String.fromString(""), StringType))
   }
 
-  @transient private lazy val siteKey: String = "flat:" + schema.catalogString
-
-  def evalFlat(input: UTF8String): Any = XmlRowMemo(siteKey, input) {
+  def evalFlat(input: UTF8String): Any = {
     val fast = XmlFastScan.flatStruct(input, spec)
     if (!(fast eq XmlFastScan.Bail)) fast else fallback.evaluate(input)
   }

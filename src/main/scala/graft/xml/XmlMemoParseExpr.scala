@@ -6,25 +6,27 @@ import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.types.DataType
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Memoizing wrapper around a `from_xml` parse.
+/** Memoizing wrapper around a per-row XML parse ([[XmlFlatParseExpr]], or
+  * `from_xml` for a read schema the fast scan cannot serve).
   *
   * The DSL's bound projection references the per-row parsed struct from
   * every member expression (often under `when` branches), and after column
   * pruning / constant propagation those references become IDENTICAL COPIES
-  * of the `from_xml` call in one Project — Spark's subexpression elimination
-  * does not collapse them (measured: x1 evaluates the parse ~9x per row,
-  * ~6x slower end-to-end). Wrapping the parse in this expression makes every
+  * of the parse in one Project — Spark's subexpression elimination does
+  * not collapse them (measured: x1 evaluated the parse ~9x per row, ~6x
+  * slower end-to-end). Wrapping the parse in this expression makes every
   * duplicate first evaluate the (cheap) xml-string child and look the result
   * up in the row memo ([[XmlRowMemo]], keyed by result type and xml bytes)
   * — the actual parse then runs once per row.
   *
-  * The optimizer rule `graft.plans.DedupXmlParses` removes most duplicates
-  * from the plan instead, and unwraps the memo of every parse it pulls. The
-  * wrapper stays for the two cases the rule does not reach:
+  * The optimizer rule `graft.plans.DedupXmlParses` removes the wrapper
+  * from every parse it can evaluate once per row: it pulls repeated parses
+  * into a child Project and unwraps a parse referenced once. The wrapper
+  * stays for the two cases the rule does not reach:
   *   - sessions built without `GraftExtensions`, where the rule never runs;
-  *   - nested native parses bound inside a `transform` lambda, such as an
-  *     array element holding a nested obj: those parses reference the
-  *     lambda variable, so the rule cannot pull them into a child Project.
+  *   - parses of a `transform` lambda's element, such as an array element
+  *     holding a nested obj: those read the lambda variable, so the rule
+  *     cannot pull them into a child Project.
   *
   * CodegenFallback is deliberate: generating the child inline would run the
   * parse before this wrapper could intercept it. The fallback call keeps the

@@ -59,9 +59,12 @@ final class XmlRecordScanner(in: InputStream,
   def pos: Long = blockBase + i
 
   /** Load the next block, first saving the captured tail of this one;
-    * false at EOF. */
+    * false at EOF. Every construct a record holds (text, tags, comments,
+    * CDATA, PIs) reads through here, so the record-size guard is checked
+    * at each refill. */
   private def refill(): Boolean = {
     if (recStart >= 0) {
+      guard()
       append(block, segStart, blockLen - segStart)
       segStart = 0
     }
@@ -83,21 +86,25 @@ final class XmlRecordScanner(in: InputStream,
     if (i < blockLen || refill()) { val b = block(i) & 0xff; i += 1; b }
     else -1
 
-  /** Consume through the next `<`; false at EOF. While capturing, the
-    * record-size guard is checked at each stop (before that `<`, or at a
-    * block end in text): only there, between markup units, so a record
-    * trips it exactly when a check before every text byte would. */
-  @tailrec private def skipToLt(): Boolean = {
-    val end = blockLen
-    var j = i
-    while (j < end && block(j) != '<') j += 1
-    i = j
+  /** Throws when the record captured so far (through `i`) exceeds
+    * [[XmlRecordScanner.MaxRecordBytes]]. */
+  private def guard(): Unit =
     if (recStart >= 0 && capLen.toLong + (i - segStart) > MaxRecordBytes)
       throw new IOException(
         s"graft.xml: record at offset $recStart exceeds " +
           s"$MaxRecordBytes bytes — missing " +
           s"</${new String(rowTag, "UTF-8")}>?")
-    if (j < end) { i = j + 1; true }
+
+  /** Consume through the next `<`; false at EOF. While capturing, the
+    * record-size guard is checked before that `<` and at each refill:
+    * between markup units, so record text trips it exactly when a check
+    * before every text byte would. */
+  @tailrec private def skipToLt(): Boolean = {
+    val end = blockLen
+    var j = i
+    while (j < end && block(j) != '<') j += 1
+    i = j
+    if (j < end) { guard(); i = j + 1; true }
     else if (refill()) skipToLt()
     else false
   }
@@ -129,7 +136,7 @@ final class XmlRecordScanner(in: InputStream,
     var k = from
     while (k < rowTag.length) {
       val c = read1()
-      if (c == -1 || c != rowTag(k)) return c
+      if (c == -1 || c != (rowTag(k) & 0xff)) return c
       k += 1
     }
     Int.MinValue
@@ -229,7 +236,7 @@ final class XmlRecordScanner(in: InputStream,
       } else if (first == '?') {
         if (!skipUntil(PiClose)) return null
       } else if (first == -1) return null
-      else if (first == rowTag(0)) {
+      else if (first == (rowTag(0) & 0xff)) {
         val m = matchTag(1)
         if (m == Int.MinValue) {
           val d = read1()
@@ -262,7 +269,7 @@ final class XmlRecordScanner(in: InputStream,
           if (b3 == -1) return null
           if (b3 == '>') depth -= 1
         }
-      } else if (b2 == rowTag(0)) {
+      } else if (b2 == (rowTag(0) & 0xff)) {
         // potential nested open tag; first byte already consumed
         val m = matchTag(1)
         if (m == -1) return null

@@ -17,10 +17,18 @@ import org.apache.spark.unsafe.types.UTF8String
   * an input that aliases a reused row buffer from corrupting its entry.
   * The copy is `copy()`, not `clone()`, which returns a string over the
   * same array when the input spans a whole `byte[]`. Null results are
-  * cached too. A site key is the calling site's prefix (`children:`,
-  * `childrenAt:`, `flat:`, `parse:`) followed by everything else the
-  * result depends on (patterns and capture flags, or the schema), so no
-  * two sites share an entry.
+  * cached too. A site key is the calling site's prefix followed by
+  * everything else the result depends on (patterns and capture flags, or
+  * the schema), so no two sites share an entry. The sites:
+  *   - `parse:` — [[XmlMemoParseExpr]], the DSL's wrapper of every parse;
+  *   - `children:` — the StAX fallback of [[XmlChildrenExpr]],
+  *     [[XmlFirstChildExpr]] and [[XmlExplodeChildren]];
+  *   - `childrenAt:` — the StAX fallback of [[XmlChildrenAtExpr]].
+  *
+  * With `GraftExtensions`, `graft.plans.DedupXmlParses` evaluates each
+  * document-level parse and extraction once per row with no memo, so the
+  * memo then serves only expressions over a `transform` lambda's element,
+  * extractions referenced once, and sessions without the extensions.
   */
 private[xml] object XmlRowMemo {
   private final val Slots = 4

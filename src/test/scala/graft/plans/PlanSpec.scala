@@ -198,6 +198,108 @@ class PlanSpec extends AnyFunSuite {
     }
   }
 
+  test("nested spec optimized plan: no from_xml, one extraction per " +
+      "distinct spec, no row memo on any pulled site; rows equal the " +
+      "rule-off result") {
+    // shaped like the nested benchmark parser: root attributes, an obj
+    // with an attribute, an array of two alternatives with a container
+    // attribute, a glob obj, root scalars and a custom fragment member
+    val ship = XmlParser.fragment { f =>
+      struct(f.str("city").as("city"), f.nullInt("zip").as("zip"),
+        f.tag.as("tag"))
+    }
+    val parser = XmlParser.struct("order") { a =>
+      struct(
+        a.attribute("id").cast("long").as("id"),
+        a.attribute("region").as("region"),
+        a.obj("cust") { c =>
+          struct(c.attribute("tier").as("tier"), c.str("name").as("name"),
+            c.nullInt("nk").as("nk"))
+        }.as("cust"),
+        a.array("lines") { l =>
+          struct(l.tag.as("tag"), l.attribute("count").as("count"),
+            l.nullInt("item").as("qty"), l.nullDecimal("fee").as("fee"))
+        }.as("lines"),
+        a.obj("ext_*")(e => struct(e.tag.as("tag"),
+          e.attribute("w").as("w"))).as("ext"),
+        a.str("note").as("note"),
+        a.nullInt("qty").as("qty"),
+        a.custom("ship")(ship.parse).as("ship"))
+    }
+    // every 5th note holds an entity and every 7th ship is malformed, so
+    // the per-row fallbacks run too; a range, not a local Seq, so nothing
+    // constant-folds
+    def query(sp: SparkSession) = {
+      val id = col("id").cast("string")
+      sp.range(0, 300).select(concat(lit("<order id=\""), id,
+        lit("\" region=\"r"), (col("id") % 3).cast("string"),
+        lit("\"><cust tier=\"g\"><name>C"), id, lit("</name><nk>"),
+        (col("id") % 25).cast("string"), lit("</nk></cust><lines count=\"2\">" +
+          "<item>"), (col("id") % 9).cast("string"),
+        lit("</item><fee>1.50</fee></lines><ext_red w=\""), id,
+        lit("\"/><note>"),
+        when(col("id") % 5 === 0, lit("a &amp; b")).otherwise(lit("n")),
+        lit("</note><qty>"), id, lit("</qty><ship><city>X"),
+        when(col("id") % 7 === 0, lit("</ship>")).otherwise(lit("</city>")),
+        lit("<zip>12345</zip></ship></order>")).as("doc"))
+        .select(parser.parse(col("doc")).as("p")).select(col("p.*"))
+    }
+    val baseline = query(spark).collect().map(_.toString).sorted.toSeq
+    // the entity notes bind through the fallback, except where the
+    // document is also malformed (ids divisible by 35: a null row)
+    assert(baseline.count(_.contains("a & b")) == 60 - 9)
+
+    val prevActive = SparkSession.getActiveSession
+    val prevDefault = SparkSession.getDefaultSession
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    try {
+      val sp2 = SparkSession.builder()
+        .master("local[4]")
+        .config("spark.sql.shuffle.partitions", "4")
+        .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.ui.enabled", "false")
+        .withExtensions(new GraftExtensions)
+        .getOrCreate()
+      val df = query(sp2)
+      val plan = df.queryExecution.optimizedPlan
+      val exprs = plan.collect { case p => p.expressions }.flatten
+        .flatMap(_.collect { case e => e })
+      def count(f: PartialFunction[
+          org.apache.spark.sql.catalyst.expressions.Expression, Boolean]) =
+        exprs.count(e => f.applyOrElse(e, (_: Any) => false))
+      assert(count { case e => e.prettyName == "from_xml" } == 0,
+        plan.treeString)
+      assert(count { case _: XmlMemoParseExpr => true } == 0, plan.treeString)
+      assert(count { case _: graft.xml.XmlFirstChildExpr => true } == 0,
+        plan.treeString)
+      // one extraction per distinct spec: the document's [lines, ext_*,
+      // ship] extraction and the lines container's alternatives
+      val extractions = exprs.collect {
+        case e: graft.xml.XmlChildrenExpr => e
+      }
+      assert(extractions.map(_.patterns.toSet).toSet ==
+        Set(Set("lines", "ext_*", "ship"), Set("item", "fee")),
+        plan.treeString)
+      assert(extractions.size == 2, plan.treeString)
+      assert(extractions.exists(e => !e.memo && e.needOuter))
+      // one parse each: the root, the ship fragment and the lines
+      // container's attribute (pulled out of the transform lambda)
+      val parses = exprs.collect { case e: graft.xml.XmlFlatParseExpr => e }
+      assert(parses.size == 3, plan.treeString)
+      assert(parses.map(_.schema.fieldNames.toSet).toSet == Set(
+        Set("_id", "_region", "cust", "note", "qty"), Set("city", "zip"),
+        Set("_count")))
+      assert(DedupXmlParses(plan).fastEquals(plan))
+      assert(df.collect().map(_.toString).sorted.toSeq == baseline)
+    } finally {
+      SparkSession.clearActiveSession()
+      SparkSession.clearDefaultSession()
+      prevDefault.foreach(SparkSession.setDefaultSession)
+      prevActive.foreach(SparkSession.setActiveSession)
+    }
+  }
+
   test("PushLambdaThroughGetItem: element-0 projection of a parsed array " +
       "is lambda-free and matches the unoptimized result") {
     // x3's shape: array member bound per child, query reads element 0

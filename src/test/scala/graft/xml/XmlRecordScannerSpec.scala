@@ -139,11 +139,37 @@ class XmlRecordScannerSpec extends AnyFunSuite {
     }
   }
 
-  /** `prefix`, then `<rec>`, then `unit` repeated past
+  test("a non-ASCII row tag matches, at every split offset") {
+    val e = "\u00e9" // é: bytes C3 A9; è (C3 A8) shares the first byte
+    val tagE = e.getBytes(UTF_8)
+    val parts = Seq[(String, Boolean)](
+      "<r>" -> false, s"<$e>x</$e>" -> true, "<\u00e8>no</\u00e8>" -> false,
+      s"<${e}a>near miss</${e}a>" -> false, s"<$e id='2'>y</$e>" -> true,
+      s"<$e/>" -> true, s"<$e a='>'>z</$e>" -> true, "</r>" -> false)
+    val bytes = parts.map(_._1.getBytes(UTF_8))
+    val doc = bytes.reduce(_ ++ _)
+    val offsets = bytes.scanLeft(0L)(_ + _.length)
+    val want = parts.indices.filter(parts(_)._2)
+      .map(k => (offsets(k), parts(k)._1))
+    def open(off: Int): XmlRecordScanner = new XmlRecordScanner(
+      new ByteArrayInputStream(doc, off, doc.length - off), tagE, off)
+    def read(sc: XmlRecordScanner, end: Long): Seq[(Long, String)] =
+      Iterator.continually(sc.nextRecord(end)).takeWhile(_ != null)
+        .map { case (at, b) => (at, new String(b, UTF_8)) }.toSeq
+    assert(read(open(0), Long.MaxValue) == want)
+    for (split <- 0 to doc.length) {
+      val head = read(open(0), split.toLong)
+      assert(head == want.filter(_._1 < split), s"split at $split")
+      assert(head ++ read(open(split), Long.MaxValue) == want,
+        s"split at $split")
+    }
+  }
+
+  /** `prefix`, then `<rec>` and `opener`, then `unit` repeated past
     * [[XmlRecordScanner.MaxRecordBytes]]; never held in memory whole. */
-  private final class Unclosed(prefix: String, unit: String)
-      extends InputStream {
-    private val head = (prefix + "<rec>").getBytes(UTF_8)
+  private final class Unclosed(prefix: String, unit: String,
+      opener: String = "") extends InputStream {
+    private val head = (prefix + "<rec>" + opener).getBytes(UTF_8)
     private val body = unit.getBytes(UTF_8)
     private val total =
       head.length + XmlRecordScanner.MaxRecordBytes + 4L * Block
@@ -170,11 +196,17 @@ class XmlRecordScannerSpec extends AnyFunSuite {
   }
 
   test("a record with no close tag past MaxRecordBytes raises the guard") {
-    for (unit <- Seq("plain text without markup\n", "<a>child</a>\n")) {
-      val sc = new XmlRecordScanner(new Unclosed("<root>\n", unit), tag, 0L)
+    // plain text, child elements, and a comment, CDATA section or PI that
+    // never ends: each construct reads through the guarded refill
+    val cases = Seq(("plain text without markup\n", ""),
+      ("<a>child</a>\n", ""), ("no terminator here\n", "<!--"),
+      ("no terminator here\n", "<![CDATA["), ("no terminator here\n", "<?pi "))
+    for ((unit, opener) <- cases) {
+      val sc = new XmlRecordScanner(new Unclosed("<root>\n", unit, opener),
+        tag, 0L)
       val e = intercept[IOException](sc.nextRecord(Long.MaxValue))
-      assert(e.getMessage.contains("record at offset 7 exceeds"), unit)
-      assert(e.getMessage.contains("</rec>"), unit)
+      assert(e.getMessage.contains("record at offset 7 exceeds"), opener)
+      assert(e.getMessage.contains("</rec>"), opener)
     }
   }
 }

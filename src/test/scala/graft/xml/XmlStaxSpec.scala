@@ -198,23 +198,27 @@ class XmlStaxSpec extends AnyFunSuite {
       buf, 0, buf.length)
     assert(value(kids(row)) == "<s>v</s>bbb")
     assert(kids(UTF8String.fromString(docA)) eq first)
-    // the flat parse memoizes every row, fast path included
+    // the parse memo (the DSL's wrapper of every parse) memoizes every
+    // row, fast path included
     import org.apache.spark.sql.types._
-    val flat = XmlFlatParseExpr(
-      org.apache.spark.sql.catalyst.expressions.Literal("<r/>"),
-      StructType(Seq(StructField("s", ArrayType(StringType)))))
+    val flat = XmlMemoParseExpr(XmlFlatParseExpr(
+      org.apache.spark.sql.catalyst.expressions.BoundReference(0,
+        StringType, nullable = true),
+      StructType(Seq(StructField("s", ArrayType(StringType))))))
+    def parse(u: UTF8String): AnyRef =
+      flat.eval(org.apache.spark.sql.catalyst.InternalRow(u))
+        .asInstanceOf[AnyRef]
     val docC = "<r><s>ccc</s></r>"
     val buf2 = docC.getBytes("UTF-8")
     val row2 = UTF8String.fromBytes(buf2)
     def flatValue(r: Any) = r
       .asInstanceOf[org.apache.spark.sql.catalyst.InternalRow]
       .getArray(0).getUTF8String(0).toString
-    val firstFlat = flat.evalFlat(row2)
+    val firstFlat = parse(row2)
     assert(flatValue(firstFlat) == "ccc")
     System.arraycopy("<r><s>ddd</s></r>".getBytes("UTF-8"), 0, buf2, 0,
       buf2.length)
-    assert(flatValue(flat.evalFlat(row2)) == "ddd")
-    assert(flat.evalFlat(UTF8String.fromString(docC))
-      .asInstanceOf[AnyRef] eq firstFlat.asInstanceOf[AnyRef])
+    assert(flatValue(parse(row2)) == "ddd")
+    assert(parse(UTF8String.fromString(docC)) eq firstFlat)
   }
 }
