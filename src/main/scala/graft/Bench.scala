@@ -23,21 +23,8 @@ object Bench {
     // box, not this process. -1.0 (unsupported platform) never trips.
     val startLoad = java.lang.management.ManagementFactory
       .getOperatingSystemMXBean.getSystemLoadAverage
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Local-iteration filter, same contract as Verify's: the driver never
-    // sets it, so the round bench always runs the full suite.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val names = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
+    val spark = Sessions.local(cpus.toInt)
+    val names = SparkEntry.selected
     // noop write materializes EVERY result row through the full plan
     // (a count() would let Catalyst delete sorts and projections).
     // A gate that throws must NEVER contribute a timing (round 7: 10
@@ -45,21 +32,11 @@ object Bench {
     // the suite total "improved") — so run() surfaces the error and the
     // gate is reported in `errors`, excluded from `queries`/total.
     def run(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
-        : Option[String] = {
-      val r =
-        try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); None }
-        catch { case e: Throwable =>
-          Some((e.getClass.getSimpleName + ": " +
-            String.valueOf(e.getMessage)).take(300)) }
-      // drop cached intermediates (e.g. the LSH sketch table) so queries
-      // don't leak memory pressure into each other — clearCache for
-      // InMemoryRelations, releaseAll for staged localCheckpoint blocks
-      // (which clearCache cannot see; r16's full run measured late-
-      // alphabet gates 4x slower than the same gate isolated, the
-      // accumulated-dead-block signature)
-      spark.catalog.clearCache()
-      Tables.releaseAll(spark)
-      r
+        : Option[String] = SparkEntry.isolated(spark) {
+      try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); None }
+      catch { case e: Throwable =>
+        Some((e.getClass.getSimpleName + ": " +
+          String.valueOf(e.getMessage)).take(300)) }
     }
     if (warmup) names.foreach { case (_, fn) => run(fn) }
     val results = names.map { case (name, fn) =>
@@ -132,7 +109,7 @@ object Bench {
         }
       } catch { case _: Throwable => false }
       val out =
-        if (only.isDefined) "BENCH_SUBSET.json"
+        if (SparkEntry.only.isDefined) "BENCH_SUBSET.json"
         else if (startLoad > maxLoad) "BENCH_ATTEMPT.json"
         else if (slowerThanCommitted()) "BENCH_ATTEMPT.json"
         else "BENCH_FULL.json"

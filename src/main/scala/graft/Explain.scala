@@ -1,18 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
 /** Dev helper: print the formatted physical plan of selected gates.
   * Usage: runMain graft.Explain <sfDir> <name>[,<name>...] */
 object Explain {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, names) = args
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local(4)
     spark.sparkContext.setLogLevel("ERROR")
     names.split(",").foreach { n =>
       println(s"========== $n ==========")

@@ -37,25 +37,52 @@ object Multimodal {
 
   // ------------------------- blob construction -------------------------
 
-  /** Minimal valid 24-bit BMP: 14-byte file header + 40-byte
-    * BITMAPINFOHEADER + 4-byte-aligned pixel rows filled from `fill`
-    * (cycled). */
-  def buildBmp(width: Int, height: Int, fill: Array[Byte]): Array[Byte] = {
-    val rowSize = ((3 * width + 3) / 4) * 4
-    val dataSize = rowSize * height
-    val size = 54 + dataSize
-    val b = ByteBuffer.allocate(size).order(ByteOrder.LITTLE_ENDIAN)
-    b.put('B'.toByte).put('M'.toByte).putInt(size)
+  /** Pixel-array geometry of a 24bpp BMP: storage row y (0 = the bottom
+    * row) starts at `dataOff + y * rowSize`, pixels are 3 bytes (B, G,
+    * R) and rows are padded to 4 bytes. */
+  final case class Bmp(width: Int, height: Int, dataOff: Int, rowSize: Int)
+
+  /** The header decoder every BMP pixel walker goes through: the `BM`
+    * magic, 24 bits per pixel, positive width and height, and a pixel
+    * array that starts after the 54 header bytes and lies inside `m`.
+    * The row size is computed in Long, so no width can wrap it into a
+    * stride that passes the bounds check. None for anything else. */
+  def bmpGeometry(m: Array[Byte]): Option[Bmp] = {
+    if (m.length < 54 || m(0) != 'B' || m(1) != 'M') return None
+    val buf = ByteBuffer.wrap(m).order(ByteOrder.LITTLE_ENDIAN)
+    val off = buf.getInt(10)
+    val w = buf.getInt(18)
+    val h = buf.getInt(22)
+    if (buf.getShort(28) != 24 || w <= 0 || h <= 0 || off < 54) return None
+    val rowSize = (3L * w + 3) / 4 * 4
+    // rowSize <= m.length first, so rowSize * h cannot overflow a Long
+    if (rowSize > m.length || off + rowSize * h > m.length) None
+    else Some(Bmp(w, h, off, rowSize.toInt))
+  }
+
+  /** A zero-filled 24-bit BMP: 14-byte file header + 40-byte
+    * BITMAPINFOHEADER + 4-byte-aligned pixel rows from offset 54. */
+  private def newBmp(width: Int, height: Int): (Array[Byte], Bmp) = {
+    val g = Bmp(width, height, 54, ((3 * width + 3) / 4) * 4)
+    val dataSize = g.rowSize * height
+    val b = ByteBuffer.allocate(54 + dataSize).order(ByteOrder.LITTLE_ENDIAN)
+    b.put('B'.toByte).put('M'.toByte).putInt(54 + dataSize)
       .putShort(0).putShort(0).putInt(54)
     b.putInt(40).putInt(width).putInt(height).putShort(1).putShort(24)
       .putInt(0).putInt(dataSize).putInt(2835).putInt(2835)
       .putInt(0).putInt(0)
-    var i = 0
-    while (i < dataSize) {
-      b.put(if (fill.nonEmpty) fill(i % fill.length) else 0.toByte)
-      i += 1
+    (b.array(), g)
+  }
+
+  /** Minimal valid 24-bit BMP ([[newBmp]]) with its pixel rows filled
+    * from `fill` (cycled). */
+  def buildBmp(width: Int, height: Int, fill: Array[Byte]): Array[Byte] = {
+    val (out, _) = newBmp(width, height)
+    if (fill.nonEmpty) {
+      var i = 54
+      while (i < out.length) { out(i) = fill((i - 54) % fill.length); i += 1 }
     }
-    b.array()
+    out
   }
 
   /** Minimal valid PCM WAV: 44-byte RIFF/fmt/data header + sample data
@@ -434,15 +461,7 @@ object Multimodal {
     * not a raw byte slice. Channel order is BMP storage order (0=B, 1=G,
     * 2=R). None for payloads that are not 24bpp BMPs. */
   def bmpChannelStats(m: Array[Byte]): Option[Seq[ChannelStatsRow]] = {
-    if (m.length < 54 || m(0) != 'B' || m(1) != 'M') return None
-    val buf = ByteBuffer.wrap(m).order(ByteOrder.LITTLE_ENDIAN)
-    val off = buf.getInt(10)
-    val width = buf.getInt(18)
-    val height = buf.getInt(22)
-    if (buf.getShort(28) != 24 || width <= 0 || height <= 0) return None
-    val rowSize = ((3 * width + 3) / 4) * 4
-    if (off < 0 || off > m.length ||
-      rowSize.toLong * height > m.length - off) return None
+    val Bmp(width, height, off, rowSize) = bmpGeometry(m).getOrElse(return None)
     val sums = new Array[Long](3)
     val mins = Array(255, 255, 255)
     val maxs = Array(0, 0, 0)
@@ -483,15 +502,7 @@ object Multimodal {
     * One header decode + one pass over the pixel data per row; no state
     * across rows. */
   def bmpLuminance(m: Array[Byte]): Option[LuminanceRow] = {
-    if (m.length < 54 || m(0) != 'B' || m(1) != 'M') return None
-    val buf = ByteBuffer.wrap(m).order(ByteOrder.LITTLE_ENDIAN)
-    val off = buf.getInt(10)
-    val width = buf.getInt(18)
-    val height = buf.getInt(22)
-    if (buf.getShort(28) != 24 || width <= 0 || height <= 0) return None
-    val rowSize = ((3 * width + 3) / 4) * 4
-    if (off < 0 || off > m.length ||
-      rowSize.toLong * height > m.length - off) return None
+    val Bmp(width, height, off, rowSize) = bmpGeometry(m).getOrElse(return None)
     var sum = 0L
     var mn = 255
     var mx = 0
@@ -524,15 +535,7 @@ object Multimodal {
     * REGARDLESS of pixel count — the map-side carrier; the corpus never
     * shuffles pixels). Empty for non-BMP payloads. */
   def bmpGrayLevels(m: Array[Byte]): Seq[(Int, Long)] = {
-    if (m.length < 54 || m(0) != 'B' || m(1) != 'M') return Nil
-    val buf = ByteBuffer.wrap(m).order(ByteOrder.LITTLE_ENDIAN)
-    val off = buf.getInt(10)
-    val width = buf.getInt(18)
-    val height = buf.getInt(22)
-    if (buf.getShort(28) != 24 || width <= 0 || height <= 0) return Nil
-    val rowSize = ((3 * width + 3) / 4) * 4
-    if (off < 0 || off > m.length ||
-      rowSize.toLong * height > m.length - off) return Nil
+    val Bmp(width, height, off, rowSize) = bmpGeometry(m).getOrElse(return Nil)
     val hist = new Array[Long](256)
     var y = 0
     while (y < height) {
@@ -571,24 +574,8 @@ object Multimodal {
     * 24bpp BMPs. */
   def resizeBmp(m: Array[Byte], width: Int,
       height: Int): Option[Array[Byte]] = {
-    if (m.length < 54 || m(0) != 'B' || m(1) != 'M') return None
-    val src = ByteBuffer.wrap(m).order(ByteOrder.LITTLE_ENDIAN)
-    val dataOff = src.getInt(10)
-    val srcW = src.getInt(18)
-    val srcH = src.getInt(22)
-    val bpp = src.getShort(28).toInt
-    if (bpp != 24 || srcW <= 0 || srcH <= 0 || dataOff < 54) return None
-    val srcRow = ((3 * srcW + 3) / 4) * 4
-    if (m.length.toLong < dataOff.toLong + srcRow.toLong * srcH) return None
-    val dstRow = ((3 * width + 3) / 4) * 4
-    val dataSize = dstRow * height
-    val b = ByteBuffer.allocate(54 + dataSize).order(ByteOrder.LITTLE_ENDIAN)
-    b.put('B'.toByte).put('M'.toByte).putInt(54 + dataSize)
-      .putShort(0).putShort(0).putInt(54)
-    b.putInt(40).putInt(width).putInt(height).putShort(1).putShort(24)
-      .putInt(0).putInt(dataSize).putInt(2835).putInt(2835)
-      .putInt(0).putInt(0)
-    val out = b.array()
+    val Bmp(srcW, srcH, dataOff, srcRow) = bmpGeometry(m).getOrElse(return None)
+    val (out, Bmp(_, _, _, dstRow)) = newBmp(width, height)
     var y = 0
     while (y < height) {
       val sy = y * srcH / height
@@ -619,24 +606,8 @@ object Multimodal {
     * contract as [[resizeBmp]] (24bpp only, storage-order rows). */
   def resizeBmpBilinear(m: Array[Byte], width: Int,
       height: Int): Option[Array[Byte]] = {
-    if (m.length < 54 || m(0) != 'B' || m(1) != 'M') return None
-    val src = ByteBuffer.wrap(m).order(ByteOrder.LITTLE_ENDIAN)
-    val dataOff = src.getInt(10)
-    val srcW = src.getInt(18)
-    val srcH = src.getInt(22)
-    val bpp = src.getShort(28).toInt
-    if (bpp != 24 || srcW <= 0 || srcH <= 0 || dataOff < 54) return None
-    val srcRow = ((3 * srcW + 3) / 4) * 4
-    if (m.length.toLong < dataOff.toLong + srcRow.toLong * srcH) return None
-    val dstRow = ((3 * width + 3) / 4) * 4
-    val dataSize = dstRow * height
-    val b = ByteBuffer.allocate(54 + dataSize).order(ByteOrder.LITTLE_ENDIAN)
-    b.put('B'.toByte).put('M'.toByte).putInt(54 + dataSize)
-      .putShort(0).putShort(0).putInt(54)
-    b.putInt(40).putInt(width).putInt(height).putShort(1).putShort(24)
-      .putInt(0).putInt(dataSize).putInt(2835).putInt(2835)
-      .putInt(0).putInt(0)
-    val out = b.array()
+    val Bmp(srcW, srcH, dataOff, srcRow) = bmpGeometry(m).getOrElse(return None)
+    val (out, Bmp(_, _, _, dstRow)) = newBmp(width, height)
     def px(sy: Int, sx: Int, c: Int): Int =
       m(dataOff + sy * srcRow + sx * 3 + c) & 0xff
     var y = 0
@@ -681,11 +652,7 @@ object Multimodal {
     * the fit scale floors to 0. */
   def letterboxBmp(m: Array[Byte], width: Int,
       height: Int): Option[Array[Byte]] = {
-    if (m.length < 54 || m(0) != 'B' || m(1) != 'M') return None
-    val src = ByteBuffer.wrap(m).order(ByteOrder.LITTLE_ENDIAN)
-    val srcW = src.getInt(18)
-    val srcH = src.getInt(22)
-    if (src.getShort(28).toInt != 24 || srcW <= 0 || srcH <= 0) return None
+    val Bmp(srcW, srcH, _, _) = bmpGeometry(m).getOrElse(return None)
     val scale = math.min(width * 256 / srcW, height * 256 / srcH)
     if (scale <= 0) return None
     val tw = math.max(srcW * scale / 256, 1)
@@ -694,16 +661,7 @@ object Multimodal {
     val oy = (height - th) / 2
     resizeBmpBilinear(m, tw, th).map { inner =>
       val innerRow = ((3 * tw + 3) / 4) * 4
-      val dstRow = ((3 * width + 3) / 4) * 4
-      val dataSize = dstRow * height
-      val b = ByteBuffer.allocate(54 + dataSize)
-        .order(ByteOrder.LITTLE_ENDIAN)
-      b.put('B'.toByte).put('M'.toByte).putInt(54 + dataSize)
-        .putShort(0).putShort(0).putInt(54)
-      b.putInt(40).putInt(width).putInt(height).putShort(1).putShort(24)
-        .putInt(0).putInt(dataSize).putInt(2835).putInt(2835)
-        .putInt(0).putInt(0)
-      val out = b.array()
+      val (out, Bmp(_, _, _, dstRow)) = newBmp(width, height)
       var y = 0
       while (y < height) {
         var x = 0
@@ -737,28 +695,12 @@ object Multimodal {
     * per sample. */
   def cropBmp(m: Array[Byte], x0: Int, y0: Int, w: Int,
       h: Int): Option[Array[Byte]] = {
-    if (m.length < 54 || m(0) != 'B' || m(1) != 'M') return None
-    val src = ByteBuffer.wrap(m).order(ByteOrder.LITTLE_ENDIAN)
-    val dataOff = src.getInt(10)
-    val srcW = src.getInt(18)
-    val srcH = src.getInt(22)
-    if (src.getShort(28) != 24 || srcW <= 0 || srcH <= 0 || dataOff < 54)
-      return None
-    val srcRow = ((3 * srcW + 3) / 4) * 4
-    if (m.length.toLong < dataOff.toLong + srcRow.toLong * srcH) return None
+    val Bmp(srcW, srcH, dataOff, srcRow) = bmpGeometry(m).getOrElse(return None)
     if (x0 < 0 || y0 < 0 || x0 >= srcW || y0 >= srcH) return None
     val cw = math.min(w, srcW - x0)
     val ch = math.min(h, srcH - y0)
     if (cw <= 0 || ch <= 0) return None
-    val dstRow = ((3 * cw + 3) / 4) * 4
-    val dataSize = dstRow * ch
-    val b = ByteBuffer.allocate(54 + dataSize).order(ByteOrder.LITTLE_ENDIAN)
-    b.put('B'.toByte).put('M'.toByte).putInt(54 + dataSize)
-      .putShort(0).putShort(0).putInt(54)
-    b.putInt(40).putInt(cw).putInt(ch).putShort(1).putShort(24)
-      .putInt(0).putInt(dataSize).putInt(2835).putInt(2835)
-      .putInt(0).putInt(0)
-    val out = b.array()
+    val (out, Bmp(_, _, _, dstRow)) = newBmp(cw, ch)
     var j = 0
     while (j < ch) {
       val s = dataOff + (y0 + j) * srcRow + x0 * 3
@@ -780,15 +722,7 @@ object Multimodal {
     * [[bmpPixelChecksum]] CANNOT witness a flip and
     * [[bmpWeightedChecksum]] exists. None for non-BMP payloads. */
   def flipBmp(m: Array[Byte]): Option[Array[Byte]] = {
-    if (m.length < 54 || m(0) != 'B' || m(1) != 'M') return None
-    val src = ByteBuffer.wrap(m).order(ByteOrder.LITTLE_ENDIAN)
-    val dataOff = src.getInt(10)
-    val w = src.getInt(18)
-    val h = src.getInt(22)
-    if (src.getShort(28) != 24 || w <= 0 || h <= 0 || dataOff < 54)
-      return None
-    val row = ((3 * w + 3) / 4) * 4
-    if (m.length.toLong < dataOff.toLong + row.toLong * h) return None
+    val Bmp(w, h, dataOff, row) = bmpGeometry(m).getOrElse(return None)
     val out = m.clone()
     var y = 0
     while (y < h) {
@@ -819,26 +753,10 @@ object Multimodal {
     * every output byte from the blob-fill formula. None for non-BMP
     * payloads. */
   def rotateBmp(m: Array[Byte]): Option[Array[Byte]] = {
-    if (m.length < 54 || m(0) != 'B' || m(1) != 'M') return None
-    val src = ByteBuffer.wrap(m).order(ByteOrder.LITTLE_ENDIAN)
-    val dataOff = src.getInt(10)
-    val w = src.getInt(18)
-    val h = src.getInt(22)
-    if (src.getShort(28) != 24 || w <= 0 || h <= 0 || dataOff < 54)
-      return None
-    val srcRow = ((3 * w + 3) / 4) * 4
-    if (m.length.toLong < dataOff.toLong + srcRow.toLong * h) return None
+    val Bmp(w, h, dataOff, srcRow) = bmpGeometry(m).getOrElse(return None)
     val dstW = h
     val dstH = w
-    val dstRow = ((3 * dstW + 3) / 4) * 4
-    val dataSize = dstRow * dstH
-    val b = ByteBuffer.allocate(54 + dataSize).order(ByteOrder.LITTLE_ENDIAN)
-    b.put('B'.toByte).put('M'.toByte).putInt(54 + dataSize)
-      .putShort(0).putShort(0).putInt(54)
-    b.putInt(40).putInt(dstW).putInt(dstH).putShort(1).putShort(24)
-      .putInt(0).putInt(dataSize).putInt(2835).putInt(2835)
-      .putInt(0).putInt(0)
-    val out = b.array()
+    val (out, Bmp(_, _, _, dstRow)) = newBmp(dstW, dstH)
     var j2 = 0
     while (j2 < dstH) {
       var x2 = 0
@@ -867,15 +785,7 @@ object Multimodal {
   def patchStats(m: Array[Byte],
       p: Int): Option[Seq[(Int, Int, Int, Long, Int, Int)]] = {
     require(p >= 1, "patch size must be >= 1")
-    if (m.length < 54 || m(0) != 'B' || m(1) != 'M') return None
-    val src = ByteBuffer.wrap(m).order(ByteOrder.LITTLE_ENDIAN)
-    val dataOff = src.getInt(10)
-    val w = src.getInt(18)
-    val h = src.getInt(22)
-    if (src.getShort(28) != 24 || w <= 0 || h <= 0 || dataOff < 54)
-      return None
-    val rowSize = ((3 * w + 3) / 4) * 4
-    if (m.length.toLong < dataOff.toLong + rowSize.toLong * h) return None
+    val Bmp(w, h, dataOff, rowSize) = bmpGeometry(m).getOrElse(return None)
     val out = scala.collection.mutable.ArrayBuffer
       .empty[(Int, Int, Int, Long, Int, Int)]
     var py = 0
@@ -922,15 +832,7 @@ object Multimodal {
     * Returns (channel 0/1/2, n_px, v_sum, v_sumsq); None for non-BMP
     * payloads. */
   def channelStats(m: Array[Byte]): Option[Seq[(Int, Long, Long, Long)]] = {
-    if (m.length < 54 || m(0) != 'B' || m(1) != 'M') return None
-    val src = ByteBuffer.wrap(m).order(ByteOrder.LITTLE_ENDIAN)
-    val dataOff = src.getInt(10)
-    val w = src.getInt(18)
-    val h = src.getInt(22)
-    if (src.getShort(28) != 24 || w <= 0 || h <= 0 || dataOff < 54)
-      return None
-    val rowSize = ((3 * w + 3) / 4) * 4
-    if (m.length.toLong < dataOff.toLong + rowSize.toLong * h) return None
+    val Bmp(w, h, dataOff, rowSize) = bmpGeometry(m).getOrElse(return None)
     val sum = new Array[Long](3)
     val sq = new Array[Long](3)
     var j = 0
@@ -975,15 +877,7 @@ object Multimodal {
     * (threshold, num, den, n_below, n_above). */
   def otsuThreshold(m: Array[Byte])
       : Option[(Int, Long, Long, Int, Int)] = {
-    if (m.length < 54 || m(0) != 'B' || m(1) != 'M') return None
-    val src = ByteBuffer.wrap(m).order(ByteOrder.LITTLE_ENDIAN)
-    val dataOff = src.getInt(10)
-    val w = src.getInt(18)
-    val h = src.getInt(22)
-    if (src.getShort(28) != 24 || w <= 0 || h <= 0 || dataOff < 54)
-      return None
-    val rowSize = ((3 * w + 3) / 4) * 4
-    if (m.length.toLong < dataOff.toLong + rowSize.toLong * h) return None
+    val Bmp(w, h, dataOff, rowSize) = bmpGeometry(m).getOrElse(return None)
     // EXACT-int64 domain guard (advisor, round 14): |W₀S−NS₀| ≤ 255·N²,
     // so past N = 3451 px the num = d² ranking can overflow int64 and
     // would return a silently wrong threshold. The operator's contract
@@ -1063,15 +957,7 @@ object Multimodal {
     * grayscale 24bpp BMP (all three channels carry eq(gray)), same
     * dimensions. None for non-BMP payloads. */
   def equalizeBmp(m: Array[Byte]): Option[Array[Byte]] = {
-    if (m.length < 54 || m(0) != 'B' || m(1) != 'M') return None
-    val src = ByteBuffer.wrap(m).order(ByteOrder.LITTLE_ENDIAN)
-    val dataOff = src.getInt(10)
-    val w = src.getInt(18)
-    val h = src.getInt(22)
-    if (src.getShort(28) != 24 || w <= 0 || h <= 0 || dataOff < 54)
-      return None
-    val row = ((3 * w + 3) / 4) * 4
-    if (m.length.toLong < dataOff.toLong + row.toLong * h) return None
+    val Bmp(w, h, dataOff, row) = bmpGeometry(m).getOrElse(return None)
     val n = w * h
     val gray = new Array[Int](n)
     val hist = new Array[Int](256)
@@ -1098,14 +984,7 @@ object Multimodal {
       if (!seenMin && hist(v) > 0) { cdfMin = hist(v); seenMin = true }
       v += 1
     }
-    val dataSize = row * h
-    val b = ByteBuffer.allocate(54 + dataSize).order(ByteOrder.LITTLE_ENDIAN)
-    b.put('B'.toByte).put('M'.toByte).putInt(54 + dataSize)
-      .putShort(0).putShort(0).putInt(54)
-    b.putInt(40).putInt(w).putInt(h).putShort(1).putShort(24)
-      .putInt(0).putInt(dataSize).putInt(2835).putInt(2835)
-      .putInt(0).putInt(0)
-    val out = b.array()
+    val (out, _) = newBmp(w, h)
     y = 0
     while (y < h) {
       var x = 0
@@ -1132,15 +1011,7 @@ object Multimodal {
     * (width or height < 3) report 0 energy over 0 interior pixels.
     * Returns (width, height, n_interior, energy); None for non-BMP. */
   def sobelEnergyBmp(m: Array[Byte]): Option[(Int, Int, Long, Long)] = {
-    if (m.length < 54 || m(0) != 'B' || m(1) != 'M') return None
-    val src = ByteBuffer.wrap(m).order(ByteOrder.LITTLE_ENDIAN)
-    val dataOff = src.getInt(10)
-    val w = src.getInt(18)
-    val h = src.getInt(22)
-    if (src.getShort(28) != 24 || w <= 0 || h <= 0 || dataOff < 54)
-      return None
-    val row = ((3 * w + 3) / 4) * 4
-    if (m.length.toLong < dataOff.toLong + row.toLong * h) return None
+    val Bmp(w, h, dataOff, row) = bmpGeometry(m).getOrElse(return None)
     def luma(y: Int, x: Int): Int = {
       val s = dataOff + y * row + x * 3
       ((m(s) & 0xff) + (m(s + 1) & 0xff) + (m(s + 2) & 0xff)) / 3
@@ -1167,15 +1038,7 @@ object Multimodal {
   }
 
   def bumpFirstPixelByte(m: Array[Byte], delta: Int): Option[Array[Byte]] = {
-    if (m.length < 54 || m(0) != 'B' || m(1) != 'M') return None
-    val src = ByteBuffer.wrap(m).order(ByteOrder.LITTLE_ENDIAN)
-    val dataOff = src.getInt(10)
-    val w = src.getInt(18)
-    val h = src.getInt(22)
-    if (src.getShort(28) != 24 || w <= 0 || h <= 0 || dataOff < 54)
-      return None
-    val row = ((3 * w + 3) / 4) * 4
-    if (m.length.toLong < dataOff.toLong + row.toLong * h) return None
+    val Bmp(w, h, dataOff, row) = bmpGeometry(m).getOrElse(return None)
     val out = m.clone()
     out(dataOff) = (((m(dataOff) & 0xff) + delta) % 256).toByte
     Some(out)
@@ -1191,15 +1054,7 @@ object Multimodal {
     * while the DCT's low-frequency SIGN structure mostly survives — the
     * exact gap the m29 gate measures. None for non-BMP payloads. */
   def adjustBmpBrightness(m: Array[Byte], delta: Int): Option[Array[Byte]] = {
-    if (m.length < 54 || m(0) != 'B' || m(1) != 'M') return None
-    val src = ByteBuffer.wrap(m).order(ByteOrder.LITTLE_ENDIAN)
-    val dataOff = src.getInt(10)
-    val w = src.getInt(18)
-    val h = src.getInt(22)
-    if (src.getShort(28) != 24 || w <= 0 || h <= 0 || dataOff < 54)
-      return None
-    val row = ((3 * w + 3) / 4) * 4
-    if (m.length.toLong < dataOff.toLong + row.toLong * h) return None
+    val Bmp(w, h, dataOff, row) = bmpGeometry(m).getOrElse(return None)
     val out = m.clone()
     var y = 0
     while (y < h) {
@@ -1319,14 +1174,7 @@ object Multimodal {
     * permutation-invariant). Bound: weights <= 3WH, so the sum stays
     * far inside Long for any record-sized image. 0 for non-BMP. */
   def bmpWeightedChecksum(m: Array[Byte]): Long = {
-    if (m.length < 54 || m(0) != 'B' || m(1) != 'M') return 0L
-    val buf = ByteBuffer.wrap(m).order(ByteOrder.LITTLE_ENDIAN)
-    val dataOff = buf.getInt(10)
-    val w = buf.getInt(18)
-    val h = buf.getInt(22)
-    if (buf.getShort(28) != 24 || w <= 0 || h <= 0 || dataOff < 54) return 0L
-    val rowSize = ((3 * w + 3) / 4) * 4
-    if (m.length.toLong < dataOff.toLong + rowSize.toLong * h) return 0L
+    val Bmp(w, h, dataOff, rowSize) = bmpGeometry(m).getOrElse(return 0L)
     var sum = 0L
     var y = 0
     while (y < h) {
@@ -1346,12 +1194,7 @@ object Multimodal {
     * recomputes the same resample arithmetic straight from the documents
     * table. 0 for non-BMP payloads. */
   def bmpPixelChecksum(m: Array[Byte]): Long = {
-    if (m.length < 54 || m(0) != 'B' || m(1) != 'M') return 0L
-    val buf = ByteBuffer.wrap(m).order(ByteOrder.LITTLE_ENDIAN)
-    val dataOff = buf.getInt(10)
-    val w = buf.getInt(18)
-    val h = buf.getInt(22)
-    val rowSize = ((3 * w + 3) / 4) * 4
+    val Bmp(w, h, dataOff, rowSize) = bmpGeometry(m).getOrElse(return 0L)
     var sum = 0L
     var y = 0
     while (y < h) {

@@ -13,6 +13,8 @@ import graft.xml.{XmlFirstChildExpr, XmlMemoParseExpr, XmlPickChildExpr}
 
 /** Session extensions: `SparkSession.builder.withExtensions(new
   * GraftExtensions)` or `spark.sql.extensions=graft.plans.GraftExtensions`.
+  * Every main and the shared test session get them from
+  * [[graft.Sessions.local]], so gates, bench and tests plan alike.
   *
   * Registers [[DedupXmlParses]] — the optimizer-level cure for the one
   * plan pathology this engine generates: a bound XML projection references
@@ -22,8 +24,11 @@ import graft.xml.{XmlFirstChildExpr, XmlMemoParseExpr, XmlPickChildExpr}
   * be built pre-analysis). The per-thread memo in XmlMemoParseExpr already
   * makes duplicates O(1); this rule removes them from the plan entirely.
   *
-  * Also registers [[AsOfJoinStrategy]], the planner strategy for the
-  * first-class as-of join operator ([[AsOfJoinNode]] -> [[AsOfJoinExec]]).
+  * Also registers the optimizer rules [[PushLambdaThroughGetItem]] and
+  * [[SummaryRewrite]], the post-hoc resolution rule
+  * [[PushLambdaThroughExplode]], and [[AsOfJoinStrategy]], the planner
+  * strategy for the first-class as-of join operator ([[AsOfJoinNode]] ->
+  * [[AsOfJoinExec]]).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {

@@ -23,7 +23,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * from every parse it can evaluate once per row: it pulls repeated parses
   * into a child Project and unwraps a parse referenced once. The wrapper
   * stays for the two cases the rule does not reach:
-  *   - sessions built without `GraftExtensions`, where the rule never runs;
+  *   - user sessions built without `GraftExtensions`, where the rule never
+  *     runs (every main and test session here registers it through
+  *     `graft.Sessions.local`; XmlGoldenSpec runs each case in a rule-off
+  *     session as well, to keep this path tested);
   *   - parses of a `transform` lambda's element, such as an array element
   *     holding a nested obj: those read the lambda variable, so the rule
   *     cannot pull them into a child Project.

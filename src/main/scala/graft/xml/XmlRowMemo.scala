@@ -25,10 +25,12 @@ import org.apache.spark.unsafe.types.UTF8String
   *     [[XmlFirstChildExpr]] and [[XmlExplodeChildren]];
   *   - `childrenAt:` — the StAX fallback of [[XmlChildrenAtExpr]].
   *
-  * With `GraftExtensions`, `graft.plans.DedupXmlParses` evaluates each
+  * With `GraftExtensions` (registered by `graft.Sessions.local` for every
+  * main and test session), `graft.plans.DedupXmlParses` evaluates each
   * document-level parse and extraction once per row with no memo, so the
   * memo then serves only expressions over a `transform` lambda's element,
-  * extractions referenced once, and sessions without the extensions.
+  * extractions referenced once, and user sessions without the extensions
+  * (the rule-off runs of XmlGoldenSpec cover that path).
   */
 private[xml] object XmlRowMemo {
   private final val Slots = 4

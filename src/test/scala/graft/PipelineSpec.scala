@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,14 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * exact + near-dup dedup -> fingerprinting — the shape of a real
   * training-data preparation job.
   */
-class PipelineSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class PipelineSpec extends AnyFunSuite with SharedSpark {
 
   test("xml ingest -> text analysis -> dedup composes in one plan") {
     import spark.implicits._

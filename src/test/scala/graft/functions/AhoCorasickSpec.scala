@@ -1,22 +1,16 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Pins the Aho–Corasick multi-pattern kernel: overlapping occurrences,
   * output links (a pattern that is a proper suffix of another must count
   * at the same position), absent patterns, and parity against the naive
   * per-pattern positional L-gram count on real corpus text.
   */
-class AhoCorasickSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class AhoCorasickSpec extends AnyFunSuite with SharedSpark {
 
   private def counts(text: String, pats: Seq[Seq[String]]): Seq[Long] = {
     val df = spark.createDataFrame(Seq(Tuple1(text))).toDF("text")

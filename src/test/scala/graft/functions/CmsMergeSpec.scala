@@ -1,8 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Pins the count-min epoch-merge algebra behind
   * [[graft.streaming.StreamOps.cmsEpochSink]]: disjoint epoch sketches
@@ -11,13 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * append-mode sink would ship and the reason exactly-once must come
   * from partition overwrite, not the merge.
   */
-class CmsMergeSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class CmsMergeSpec extends AnyFunSuite with SharedSpark {
 
   private def sketch(items: Seq[String]): Array[Byte] = {
     import spark.implicits._

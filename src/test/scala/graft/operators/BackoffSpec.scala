@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Independent in-memory reference for the t55 stupid-backoff gate: the
   * whole model (train-half bigram + unigram counts) and every eval
@@ -10,14 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * the Spark plan and the DuckDB oracle, so a shared SQL-shape mistake
   * cannot self-confirm.
   */
-class BackoffSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class BackoffSpec extends AnyFunSuite with SharedSpark {
 
   private def h32(s: String): Long = {
     val md = java.security.MessageDigest.getInstance("MD5")

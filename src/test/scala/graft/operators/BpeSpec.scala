@@ -1,21 +1,15 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Hand-computed BPE training oracle on a corpus small enough to verify on
   * paper — fixes the merge selection (weighted overlapping pair counts,
   * count-DESC/lex-ASC tie-break) and the greedy LEFT-TO-RIGHT application
   * ("aaa" + merge (a,a) -> "aa a", not "a aa").
   */
-class BpeSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class BpeSpec extends AnyFunSuite with SharedSpark {
 
   test("trainMerges learns the hand-computed merge list") {
     import spark.implicits._

@@ -1,20 +1,14 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Binary (sign) quantization: hand-computed code bits incl. the
   * two's-complement bit 63, Hamming shortlist vs a window reference on
   * random vectors, and the rerank-within-shortlist contract. */
-class BqSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class BqSpec extends AnyFunSuite with SharedSpark {
 
   private def refCode(v: Seq[Float], dim: Int): Long =
     (0 until dim).foldLeft(0L)((acc, i) =>

@@ -1,21 +1,15 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Hand-computed cases for segmenting/chunking: segment boundaries, the
   * keep-first election across documents (including a document whose every
   * segment first occurred elsewhere), and overlapping-window coverage
   * with a short tail. */
-class ChunkSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ChunkSpec extends AnyFunSuite with SharedSpark {
 
   test("segments: k-token blocks in document order, short tail kept") {
     import spark.implicits._

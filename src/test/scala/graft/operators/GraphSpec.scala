@@ -1,18 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** [[Graph]] — integer-credit PageRank against hand-computed credit flow,
   * and degree-ordered triangle counting including the case where the
   * wedge corners' degree order inverts their id order. */
-class GraphSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class GraphSpec extends AnyFunSuite with SharedSpark {
 
   private def edges(pairs: (Long, Long)*) = {
     import spark.implicits._

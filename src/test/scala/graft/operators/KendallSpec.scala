@@ -1,22 +1,15 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Independent in-memory reference for the p29 Kendall τ-b gate: daily
   * aggregates and all pair votes recomputed in plain Scala (BigDecimal
   * money, brute-force O(n²) concordance) and compared EXACTLY,
   * including the one final float.
   */
-class KendallSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class KendallSpec extends AnyFunSuite with SharedSpark {
 
   test("gate equals a brute-force pair count on sf0.001, and the " +
       "identities n0 = n(n-1)/2, C + D <= n0 hold") {

@@ -1,19 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SharedSpark
+
 /** OLS via normal equations: exact recovery on plane-consistent data,
   * a hand-solved least-squares case, and the 2^53 exactness guard. */
-class LinregSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class LinregSpec extends AnyFunSuite with SharedSpark {
 
   private def fit(rows: Seq[(Long, Long, Long)]): Map[String, Double] = {
     import spark.implicits._

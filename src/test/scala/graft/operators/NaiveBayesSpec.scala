@@ -1,19 +1,14 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** [[NaiveBayes]] — the fixed-point Q16 log2 kernel against its scalar
   * reference and the analytic bound, and the classifier against scores
   * assembled by hand from the reference kernel. */
-class NaiveBayesSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class NaiveBayesSpec extends AnyFunSuite with SharedSpark {
 
   test("logTable: column recurrence == scalar reference on 1..2048, " +
       "powers of two exact, top-of-domain, quantization bound") {

@@ -1,28 +1,22 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Property tests for the composed relational operators: randomized
   * inputs, invariants stated against an obviously-correct reference
   * computation. Each property batches all generated rows into ONE Spark
   * job so the suite stays fast.
   */
-class OperatorPropertySpec extends AnyFunSuite {
+class OperatorPropertySpec extends AnyFunSuite with SharedSpark {
 
   /** forAll stand-in over raw ScalaCheck Gens (the scalatest-scalacheck
     * bridge is not on the offline classpath). */
   private def samples[A](g: Gen[A], n: Int): Seq[A] =
     Iterator.continually(g.sample).flatten.take(n).toSeq
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   test("RangeJoin.binned == theta join for random overlapping intervals " +
       "and random bin widths") {

@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
   QueryStageExec}
@@ -8,7 +7,9 @@ import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-class OperatorSpec extends AnyFunSuite {
+import graft.SharedSpark
+
+class OperatorSpec extends AnyFunSuite with SharedSpark {
 
   /** All shuffle exchanges in a physical plan, descending through AQE
     * wrappers (AdaptiveSparkPlanExec / QueryStageExec are leaf-like, so a
@@ -26,14 +27,6 @@ class OperatorSpec extends AnyFunSuite {
     }
     self ++ kids.flatMap(collectShuffles)
   }
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   private val sf = "/root/testdata/sf0.001"
 

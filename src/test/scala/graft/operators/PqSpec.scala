@@ -1,21 +1,15 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SharedSpark
+
 /** Product quantization: hand-computed encode/ADC on a 4-dim toy space,
   * the codeword tie-break, and the zero-shuffle encode plan claim. */
-class PqSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class PqSpec extends AnyFunSuite with SharedSpark {
 
   private def shuffles(p: SparkPlan): Seq[SparkPlan] =
     (p.collect { case s: ShuffleExchangeLike => s }) ++

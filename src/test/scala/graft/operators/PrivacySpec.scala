@@ -1,19 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SharedSpark
+
 /** k-anonymity / l-diversity report: hand-computed groups and the
   * empty-input zeros contract. */
-class PrivacySpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class PrivacySpec extends AnyFunSuite with SharedSpark {
 
   test("hand-computed groups: sizes, risk counts, min diversity") {
     import spark.implicits._

@@ -1,17 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** RRF fusion: hand-computed scores, absent-doc null ranks, tie-break. */
-class RetrievalSpec extends AnyFunSuite {
+import graft.SharedSpark
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+/** RRF fusion: hand-computed scores, absent-doc null ranks, tie-break. */
+class RetrievalSpec extends AnyFunSuite with SharedSpark {
 
   test("rrfFuse: hand-computed two-system fusion with partial overlap") {
     import spark.implicits._

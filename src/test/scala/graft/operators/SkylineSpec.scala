@@ -1,20 +1,15 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** [[Skyline]] — hand fixture with duplicates and vertical stacks,
   * grid-width edge cases, and a 300-point brute-force property sweep
   * across grid sizes (the 1-cell grid degenerates to the pure sorted
   * scan, so the prune path is tested AGAINST its own no-prune form). */
-class SkylineSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SkylineSpec extends AnyFunSuite with SharedSpark {
 
   private def run(pts: Seq[(Long, Long, Long)], grid: Int) = {
     import spark.implicits._

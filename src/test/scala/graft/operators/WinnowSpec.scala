@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Pins the robust-winnowing guarantees (Schleimer/Wilkerson/Aiken,
   * SIGMOD 2003) on hand-checkable docs: parity vs an in-memory reference
@@ -10,14 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * >= w+k-1 tokens yields a shared fingerprint), the short-doc
   * completions, and the rightmost-on-ties selection rule.
   */
-class WinnowSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class WinnowSpec extends AnyFunSuite with SharedSpark {
 
   private val K = 4
   private val W = 4

@@ -4,17 +4,10 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SharedSpark
 import graft.xml.{XmlMemoParseExpr, XmlParser}
 
-class PlanSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class PlanSpec extends AnyFunSuite with SharedSpark {
 
   private def parseCount(plan: org.apache.spark.sql.catalyst.plans.logical
       .LogicalPlan): Int =
@@ -57,8 +50,7 @@ class PlanSpec extends AnyFunSuite {
     }.sum
 
   test("DedupXmlParses rewrites duplicate parses to a single evaluation") {
-    val df = multiMemberQuery(spark)
-    val before = df.queryExecution.optimizedPlan
+    val before = ruleOff(multiMemberQuery(_).queryExecution.optimizedPlan)
     // the spec is flat (all scalars), so the parse is XmlFlatParseExpr;
     // every member reference duplicates it in the optimized Project
     assert(flatParseCount(before) > 1) // the duplication the rule exists for
@@ -72,30 +64,11 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("extension-registered session: one parse in the plan, same results") {
-    val baseline = multiMemberQuery(spark).collect().toSeq
-
-    val prevActive = SparkSession.getActiveSession
-    val prevDefault = SparkSession.getDefaultSession
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    try {
-      val sp2 = SparkSession.builder()
-        .master("local[4]")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .withExtensions(new GraftExtensions)
-        .getOrCreate() // reuses the JVM's SparkContext, new session state
-      val df = multiMemberQuery(sp2)
-      assert(parseCount(df.queryExecution.optimizedPlan) == 0)
-      assert(flatParseCount(df.queryExecution.optimizedPlan) == 1)
-      assert(df.collect().toSeq == baseline)
-    } finally {
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
-      prevDefault.foreach(SparkSession.setDefaultSession)
-      prevActive.foreach(SparkSession.setActiveSession)
-    }
+    val baseline = ruleOff(multiMemberQuery(_).collect().toSeq)
+    val df = multiMemberQuery(spark)
+    assert(parseCount(df.queryExecution.optimizedPlan) == 0)
+    assert(flatParseCount(df.queryExecution.optimizedPlan) == 1)
+    assert(df.collect().toSeq == baseline)
   }
 
   test("DedupXmlParses leaves a nested parse inside a transform lambda " +
@@ -116,41 +89,23 @@ class PlanSpec extends AnyFunSuite {
           (col("id") % 7).cast("string"), lit("</v><w>w</w></sub>" +
             "</item><item><id>7</id></item></r>")).as("x"))
         .select(parser.parse(col("x")).as("a"))
-    val baseline = query(spark).collect().map(_.toString).sorted.toSeq
+    val baseline = ruleOff(query(_).collect().map(_.toString).sorted.toSeq)
     // the nested parse really binds: every first item's sub reads "<v>w"
     assert(query(spark).select(col("a").getItem(0).getField("vw")).collect()
       .forall(r => r.getString(0) != null && r.getString(0).endsWith("w")))
 
-    val prevActive = SparkSession.getActiveSession
-    val prevDefault = SparkSession.getDefaultSession
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    try {
-      val sp2 = SparkSession.builder()
-        .master("local[4]")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .withExtensions(new GraftExtensions)
-        .getOrCreate()
-      val df = query(sp2)
-      val plan = df.queryExecution.optimizedPlan
-      // the rule ran and left nothing to pull ...
-      assert(DedupXmlParses(plan).fastEquals(plan))
-      // ... because every surviving memo-wrapped parse reads the lambda
-      // variable
-      val memos = plan.collect { case p => p.expressions }.flatten
-        .flatMap(_.collect { case m: XmlMemoParseExpr => m })
-      assert(memos.nonEmpty, plan.treeString)
-      assert(memos.forall(_.exists(_.isInstanceOf[
-        org.apache.spark.sql.catalyst.expressions.NamedLambdaVariable])))
-      assert(df.collect().map(_.toString).sorted.toSeq == baseline)
-    } finally {
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
-      prevDefault.foreach(SparkSession.setDefaultSession)
-      prevActive.foreach(SparkSession.setActiveSession)
-    }
+    val df = query(spark)
+    val plan = df.queryExecution.optimizedPlan
+    // the rule ran and left nothing to pull ...
+    assert(DedupXmlParses(plan).fastEquals(plan))
+    // ... because every surviving memo-wrapped parse reads the lambda
+    // variable
+    val memos = plan.collect { case p => p.expressions }.flatten
+      .flatMap(_.collect { case m: XmlMemoParseExpr => m })
+    assert(memos.nonEmpty, plan.treeString)
+    assert(memos.forall(_.exists(_.isInstanceOf[
+      org.apache.spark.sql.catalyst.expressions.NamedLambdaVariable])))
+    assert(df.collect().map(_.toString).sorted.toSeq == baseline)
   }
 
   test("x4 optimized plan: exactly one raw extraction per parser — the " +
@@ -158,44 +113,25 @@ class PlanSpec extends AnyFunSuite {
     // x4 runs TWO parsers over the same XML column; its bench reps showed
     // the widest spread (r5 verdict) — this pins the plan shape so a
     // regression to duplicate per-member parses can't land silently.
-    val prevActive = SparkSession.getActiveSession
-    val prevDefault = SparkSession.getDefaultSession
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    try {
-      val sp2 = SparkSession.builder()
-        .master("local[4]")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.ui.enabled", "false")
-        .withExtensions(new GraftExtensions)
-        .getOrCreate()
-      val plan = graft.queries.XmlQueries
-        .x4FirstWinsAlt(sp2, "/root/testdata/sf0.001")
-        .queryExecution.optimizedPlan
-      var fromXml, flat, stax, memo = 0
-      plan.foreach(_.expressions.foreach(_.foreach {
-        case _: XmlMemoParseExpr => memo += 1
-        case _: graft.xml.XmlFlatParseExpr => flat += 1
-        case _: graft.xml.XmlChildrenExpr => stax += 1
-        case _: graft.xml.XmlFirstChildExpr => stax += 1
-        case e if e.prettyName == "from_xml" => fromXml += 1
-        case _ =>
-      }))
-      // one flat native parse feeds every struct member (x4's spec — id,
-      // v, missing_arr — is flat, so no from_xml remains at all); one
-      // extraction feeds the alternatives array; no memo wrappers
-      assert(flat == 1, s"expected 1 flat parse, got $flat")
-      assert(fromXml == 0, s"expected 0 from_xml, got $fromXml")
-      assert(stax == 1, s"expected 1 extraction, got $stax")
-      assert(memo == 0, s"expected 0 memo-wrapped parses, got $memo")
-    } finally {
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
-      prevDefault.foreach(SparkSession.setDefaultSession)
-      prevActive.foreach(SparkSession.setActiveSession)
-    }
+    val plan = graft.queries.XmlQueries
+      .x4FirstWinsAlt(spark, "/root/testdata/sf0.001")
+      .queryExecution.optimizedPlan
+    var fromXml, flat, stax, memo = 0
+    plan.foreach(_.expressions.foreach(_.foreach {
+      case _: XmlMemoParseExpr => memo += 1
+      case _: graft.xml.XmlFlatParseExpr => flat += 1
+      case _: graft.xml.XmlChildrenExpr => stax += 1
+      case _: graft.xml.XmlFirstChildExpr => stax += 1
+      case e if e.prettyName == "from_xml" => fromXml += 1
+      case _ =>
+    }))
+    // one flat native parse feeds every struct member (x4's spec — id,
+    // v, missing_arr — is flat, so no from_xml remains at all); one
+    // extraction feeds the alternatives array; no memo wrappers
+    assert(flat == 1, s"expected 1 flat parse, got $flat")
+    assert(fromXml == 0, s"expected 0 from_xml, got $fromXml")
+    assert(stax == 1, s"expected 1 extraction, got $stax")
+    assert(memo == 0, s"expected 0 memo-wrapped parses, got $memo")
   }
 
   test("nested spec optimized plan: no from_xml, one extraction per " +
@@ -244,60 +180,42 @@ class PlanSpec extends AnyFunSuite {
         lit("<zip>12345</zip></ship></order>")).as("doc"))
         .select(parser.parse(col("doc")).as("p")).select(col("p.*"))
     }
-    val baseline = query(spark).collect().map(_.toString).sorted.toSeq
+    val baseline = ruleOff(query(_).collect().map(_.toString).sorted.toSeq)
     // the entity notes bind through the fallback, except where the
     // document is also malformed (ids divisible by 35: a null row)
     assert(baseline.count(_.contains("a & b")) == 60 - 9)
 
-    val prevActive = SparkSession.getActiveSession
-    val prevDefault = SparkSession.getDefaultSession
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    try {
-      val sp2 = SparkSession.builder()
-        .master("local[4]")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .withExtensions(new GraftExtensions)
-        .getOrCreate()
-      val df = query(sp2)
-      val plan = df.queryExecution.optimizedPlan
-      val exprs = plan.collect { case p => p.expressions }.flatten
-        .flatMap(_.collect { case e => e })
-      def count(f: PartialFunction[
-          org.apache.spark.sql.catalyst.expressions.Expression, Boolean]) =
-        exprs.count(e => f.applyOrElse(e, (_: Any) => false))
-      assert(count { case e => e.prettyName == "from_xml" } == 0,
-        plan.treeString)
-      assert(count { case _: XmlMemoParseExpr => true } == 0, plan.treeString)
-      assert(count { case _: graft.xml.XmlFirstChildExpr => true } == 0,
-        plan.treeString)
-      // one extraction per distinct spec: the document's [lines, ext_*,
-      // ship] extraction and the lines container's alternatives
-      val extractions = exprs.collect {
-        case e: graft.xml.XmlChildrenExpr => e
-      }
-      assert(extractions.map(_.patterns.toSet).toSet ==
-        Set(Set("lines", "ext_*", "ship"), Set("item", "fee")),
-        plan.treeString)
-      assert(extractions.size == 2, plan.treeString)
-      assert(extractions.exists(e => !e.memo && e.needOuter))
-      // one parse each: the root, the ship fragment and the lines
-      // container's attribute (pulled out of the transform lambda)
-      val parses = exprs.collect { case e: graft.xml.XmlFlatParseExpr => e }
-      assert(parses.size == 3, plan.treeString)
-      assert(parses.map(_.schema.fieldNames.toSet).toSet == Set(
-        Set("_id", "_region", "cust", "note", "qty"), Set("city", "zip"),
-        Set("_count")))
-      assert(DedupXmlParses(plan).fastEquals(plan))
-      assert(df.collect().map(_.toString).sorted.toSeq == baseline)
-    } finally {
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
-      prevDefault.foreach(SparkSession.setDefaultSession)
-      prevActive.foreach(SparkSession.setActiveSession)
+    val df = query(spark)
+    val plan = df.queryExecution.optimizedPlan
+    val exprs = plan.collect { case p => p.expressions }.flatten
+      .flatMap(_.collect { case e => e })
+    def count(f: PartialFunction[
+        org.apache.spark.sql.catalyst.expressions.Expression, Boolean]) =
+      exprs.count(e => f.applyOrElse(e, (_: Any) => false))
+    assert(count { case e => e.prettyName == "from_xml" } == 0,
+      plan.treeString)
+    assert(count { case _: XmlMemoParseExpr => true } == 0, plan.treeString)
+    assert(count { case _: graft.xml.XmlFirstChildExpr => true } == 0,
+      plan.treeString)
+    // one extraction per distinct spec: the document's [lines, ext_*,
+    // ship] extraction and the lines container's alternatives
+    val extractions = exprs.collect {
+      case e: graft.xml.XmlChildrenExpr => e
     }
+    assert(extractions.map(_.patterns.toSet).toSet ==
+      Set(Set("lines", "ext_*", "ship"), Set("item", "fee")),
+      plan.treeString)
+    assert(extractions.size == 2, plan.treeString)
+    assert(extractions.exists(e => !e.memo && e.needOuter))
+    // one parse each: the root, the ship fragment and the lines
+    // container's attribute (pulled out of the transform lambda)
+    val parses = exprs.collect { case e: graft.xml.XmlFlatParseExpr => e }
+    assert(parses.size == 3, plan.treeString)
+    assert(parses.map(_.schema.fieldNames.toSet).toSet == Set(
+      Set("_id", "_region", "cust", "note", "qty"), Set("city", "zip"),
+      Set("_count")))
+    assert(DedupXmlParses(plan).fastEquals(plan))
+    assert(df.collect().map(_.toString).sorted.toSeq == baseline)
   }
 
   test("PushLambdaThroughGetItem: element-0 projection of a parsed array " +
@@ -317,43 +235,20 @@ class PlanSpec extends AnyFunSuite {
         .select(col("r.id").as("id"), get(col("r.vals"), lit(0)).as("v"))
         .orderBy("id")
     }
-    val baseline = q(spark).collect().toSeq
-    val prevActive = SparkSession.getActiveSession
-    val prevDefault = SparkSession.getDefaultSession
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    try {
-      val sp2 = SparkSession.builder()
-        .master("local[4]")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .withExtensions(new GraftExtensions)
-        .getOrCreate()
-      val df = q(sp2)
-      val lambdas = df.queryExecution.optimizedPlan.collect { case p =>
-        p.expressions.map(_.collect {
-          case _: org.apache.spark.sql.catalyst.expressions.ArrayTransform =>
-            1
-        }.sum).sum
-      }.sum
-      assert(lambdas == 0) // the interpreted transform is gone
-      assert(df.collect().toSeq == baseline)
-    } finally {
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
-      prevDefault.foreach(SparkSession.setDefaultSession)
-      prevActive.foreach(SparkSession.setActiveSession)
-    }
+    val baseline = ruleOff(q(_).collect().toSeq)
+    val df = q(spark)
+    val lambdas = df.queryExecution.optimizedPlan.collect { case p =>
+      p.expressions.map(_.collect {
+        case _: org.apache.spark.sql.catalyst.expressions.ArrayTransform =>
+          1
+      }.sum).sum
+    }.sum
+    assert(lambdas == 0) // the interpreted transform is gone
+    assert(df.collect().toSeq == baseline)
   }
 
   test("AsOfJoinExec: first-class operator matches union-and-carry; " +
       "merge semantics on edges") {
-    // the shared test session may predate GraftExtensions — register the
-    // planner strategy explicitly (the gate sessions register it at build)
-    if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ AsOfJoinStrategy
     val ev = graft.Tables.events(spark, "/root/testdata/sf0.001")
     val purchases = ev.filter(col("event_type") === "purchase")
       .select(col("user_id"), col("ts"), col("event_id"))
@@ -394,9 +289,6 @@ class PlanSpec extends AnyFunSuite {
 
   test("as-of direction + tolerance: forward picks the next row, " +
       "tolerance nulls far matches, exec stays one merge pass") {
-    if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ AsOfJoinStrategy
     import spark.implicits._
     val l = Seq((1L, 10L, 100L), (1L, 14L, 101L), (1L, 20L, 102L),
       (2L, 5L, 103L)).toDF("k", "t", "lid")
@@ -441,9 +333,6 @@ class PlanSpec extends AnyFunSuite {
 
   test("as-of null semantics: null right ts/key never matches, null left " +
       "ts/key gets a null match — carry and exec agree, both directions") {
-    if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ AsOfJoinStrategy
     import spark.implicits._
     val l = Seq((Some(1L), Some(10L), 100L), (Some(1L), None, 101L),
       (None, Some(5L), 102L), (Some(2L), Some(7L), 103L))
@@ -478,64 +367,48 @@ class PlanSpec extends AnyFunSuite {
 
   test("PushLambdaThroughExplode: explode(transform) becomes a codegen'd " +
       "projection over the exploded elements, same results") {
-    val prevActive = SparkSession.getActiveSession
-    val prevDefault = SparkSession.getDefaultSession
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    try {
-      val sp2 = SparkSession.builder()
-        .master("local[4]")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .withExtensions(new GraftExtensions)
-        .getOrCreate()
-      def query(sp: SparkSession) = {
-        val parser = XmlParser.array { c =>
-          c.obj("item") { z =>
-            org.apache.spark.sql.functions.struct(
-              z.attribute("ln").cast("int").as("ln"), z.tag.as("tag"))
-          }
+    def query(sp: SparkSession) = {
+      val parser = XmlParser.array { c =>
+        c.obj("item") { z =>
+          org.apache.spark.sql.functions.struct(
+            z.attribute("ln").cast("int").as("ln"), z.tag.as("tag"))
         }
-        sp.read.parquet("/root/testdata/sf0.001/documents.parquet")
-          .limit(50)
-          .select(col("doc_id"), concat(lit("<o><item ln='1'>"),
-            substring(col("text"), 1, 3),
-            lit("</item><item ln='2'>x</item></o>")).as("xml"))
-          .select(col("doc_id"), parser.parse(col("xml")).as("items"))
-          .select(col("doc_id"), posexplode(col("items")))
-          .select(col("doc_id"), col("pos"), col("col.ln").as("ln"),
-            col("col.tag").as("tag"))
-          .orderBy("doc_id", "pos")
       }
-      def transformCount(plan: org.apache.spark.sql.catalyst.plans.logical
-          .LogicalPlan): Int =
-        plan.collect { case n =>
-          n.expressions.map(_.collect {
-            case _: org.apache.spark.sql.catalyst.expressions
-              .ArrayTransform => 1
-          }.sum).sum
-        }.sum
-      val optimized = query(sp2).queryExecution.optimizedPlan
-      // the interpreted ArrayTransform is gone from the whole plan — the λ
-      // body now runs as a whole-stage-codegen'd Project after the Generate
-      assert(optimized.collect {
-        case g: org.apache.spark.sql.catalyst.plans.logical.Generate => g
-      }.nonEmpty)
-      assert(transformCount(optimized) == 0, optimized.treeString)
-      // same rows as the un-rewritten plan (the plain test session has no
-      // GraftExtensions, so its plan keeps the transform)
-      val got = query(sp2).collect().map(_.toString).toSeq
-      val baseline = query(spark).collect().map(_.toString).toSeq
-      assert(transformCount(query(spark).queryExecution.optimizedPlan) > 0,
-        "baseline session unexpectedly rewrote too")
-      assert(got == baseline)
-    } finally {
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
-      prevDefault.foreach(SparkSession.setDefaultSession)
-      prevActive.foreach(SparkSession.setActiveSession)
+      sp.read.parquet("/root/testdata/sf0.001/documents.parquet")
+        .limit(50)
+        .select(col("doc_id"), concat(lit("<o><item ln='1'>"),
+          substring(col("text"), 1, 3),
+          lit("</item><item ln='2'>x</item></o>")).as("xml"))
+        .select(col("doc_id"), parser.parse(col("xml")).as("items"))
+        .select(col("doc_id"), posexplode(col("items")))
+        .select(col("doc_id"), col("pos"), col("col.ln").as("ln"),
+          col("col.tag").as("tag"))
+        .orderBy("doc_id", "pos")
     }
+    def transformCount(plan: org.apache.spark.sql.catalyst.plans.logical
+        .LogicalPlan): Int =
+      plan.collect { case n =>
+        n.expressions.map(_.collect {
+          case _: org.apache.spark.sql.catalyst.expressions
+            .ArrayTransform => 1
+        }.sum).sum
+      }.sum
+    val optimized = query(spark).queryExecution.optimizedPlan
+    // the interpreted ArrayTransform is gone from the whole plan — the λ
+    // body now runs as a whole-stage-codegen'd Project after the Generate
+    assert(optimized.collect {
+      case g: org.apache.spark.sql.catalyst.plans.logical.Generate => g
+    }.nonEmpty)
+    assert(transformCount(optimized) == 0, optimized.treeString)
+    // same rows as the un-rewritten plan (the rule-off session keeps the
+    // transform)
+    val got = query(spark).collect().map(_.toString).toSeq
+    val baseline = ruleOff { sp =>
+      assert(transformCount(query(sp).queryExecution.optimizedPlan) > 0,
+        "baseline session unexpectedly rewrote too")
+      query(sp).collect().map(_.toString).toSeq
+    }
+    assert(got == baseline)
   }
 
   test("SummaryRewrite: fires on the provable shape only — a filter " +
@@ -557,17 +430,17 @@ class PlanSpec extends AnyFunSuite {
           .agg(count(lit(1)).as("n"),
             sum(col("l_quantity").cast("decimal(18,2)")).as("s"))
       // provable: rule rewrites, and the rewritten plan computes the
-      // same answer as the original
-      val good = agg(base)
-      val gPlan = good.queryExecution.analyzed
+      // same answer as the original (read in the rule-off session, where
+      // the registered summary cannot answer it too)
+      val gPlan = agg(base).queryExecution.analyzed
       val rewritten = SummaryRewrite(gPlan)
       assert(!rewritten.fastEquals(gPlan), "expected a rewrite")
       assert(rewritten.toString.contains("sum_v"), rewritten.toString)
       val viaSummary = org.apache.spark.sql.graft.DatasetBridge
         .ofRows(spark, rewritten)
         .orderBy("l_returnflag").collect().map(_.toString).toSeq
-      val direct = good.orderBy("l_returnflag").collect()
-        .map(_.toString).toSeq
+      val direct = ruleOff(sp => agg(sp.read.parquet(s"$sf/lineitem.parquet"))
+        .orderBy("l_returnflag").collect().map(_.toString).toSeq)
       assert(viaSummary == direct)
       // a filter between aggregate and scan changes the group contents ->
       // the summary is NOT valid -> no rewrite
@@ -652,36 +525,40 @@ class PlanSpec extends AnyFunSuite {
         spark.read.parquet(sumDir).queryExecution.analyzed,
         Seq("l_returnflag", "l_linestatus"), "l_quantity"))
     try {
-      def check(q: org.apache.spark.sql.DataFrame,
-          order: Seq[String]): Unit = {
-        val plan = q.queryExecution.analyzed
+      type DF = org.apache.spark.sql.DataFrame
+      // the direct answer is read in the rule-off session, where the
+      // registered summary cannot answer it too
+      def direct[A](q: DF => A): A =
+        ruleOff(sp => q(sp.read.parquet(s"$sf/lineitem.parquet")))
+      def check(q: DF => DF, order: Seq[String]): Unit = {
+        val plan = q(base).queryExecution.analyzed
         val rewritten = SummaryRewrite(plan)
         assert(!rewritten.fastEquals(plan), "expected a rewrite")
         val got = org.apache.spark.sql.graft.DatasetBridge
           .ofRows(spark, rewritten)
           .orderBy(order.map(col): _*).collect().map(_.toString).toSeq
-        val direct = q.orderBy(order.map(col): _*).collect()
-          .map(_.toString).toSeq
-        assert(got == direct)
+        assert(got == direct(q(_).orderBy(order.map(col): _*).collect()
+          .map(_.toString).toSeq))
       }
       // full group set
-      check(base.groupBy(col("l_returnflag"), col("l_linestatus"))
+      check(_.groupBy(col("l_returnflag"), col("l_linestatus"))
         .agg(count(lit(1)).as("n"),
           sum(col("l_quantity").cast("decimal(18,2)")).as("s")),
         Seq("l_returnflag", "l_linestatus"))
       // SUBSET of the summary's group columns — re-aggregation collapses
       // the l_linestatus dimension
-      check(base.groupBy(col("l_linestatus"))
+      check(_.groupBy(col("l_linestatus"))
         .agg(count(lit(1)).as("n"),
           sum(col("l_quantity").cast("decimal(18,2)")).as("s")),
         Seq("l_linestatus"))
       // two rewritable aggregates in ONE query (union): each must get a
       // FRESH summary instance — shared exprIds across the two scans
       // would mis-resolve post-analysis
-      def aggOn(c: String) = base.groupBy(col(c))
-        .agg(count(lit(1)).as("n")).select(col("n"))
-      val union = aggOn("l_returnflag").union(aggOn("l_linestatus"))
-      val uPlan = union.queryExecution.analyzed
+      def aggOn(b: DF, c: String) =
+        b.groupBy(col(c)).agg(count(lit(1)).as("n")).select(col("n"))
+      def union(b: DF) =
+        aggOn(b, "l_returnflag").union(aggOn(b, "l_linestatus"))
+      val uPlan = union(base).queryExecution.analyzed
       val uRewritten = SummaryRewrite(uPlan)
       assert(!uRewritten.fastEquals(uPlan), "expected both sides rewritten")
       val scans = uRewritten.collect {
@@ -695,8 +572,7 @@ class PlanSpec extends AnyFunSuite {
       val got = org.apache.spark.sql.graft.DatasetBridge
         .ofRows(spark, uRewritten)
         .collect().map(_.getLong(0)).sorted.toSeq
-      val direct = union.collect().map(_.getLong(0)).sorted.toSeq
-      assert(got == direct)
+      assert(got == direct(union(_).collect().map(_.getLong(0)).sorted.toSeq))
     } finally SummaryRegistry.deregister(s"$sf/lineitem.parquet")
   }
 

@@ -1,8 +1,9 @@
 package graft.xml
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Parity pin for [[XPathMultiExpr]] against Spark's built-in `xpath_*`
   * family — the x13 gate's single-parse extraction must agree with the
@@ -11,13 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * `xpath_*` calls live HERE, on spec-sized data, where their per-row
   * re-parse churn cannot hurt (VERDICT r10 What's-wrong #1).
   */
-class XPathMultiSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class XPathMultiSpec extends AnyFunSuite with SharedSpark {
 
   private val docs = Seq(
     // x13's exact shape

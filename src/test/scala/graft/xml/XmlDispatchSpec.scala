@@ -1,22 +1,16 @@
 package graft.xml
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Dispatch-rule semantics pinned by the reference (Parser.cs:166-187):
   * exact names take priority over globs; among several globs the LAST
   * registered match wins. Plus the container-attribute broadcast wrinkle
   * (Parser.cs:284-287, SURVEY §2.1 #7) and distributed multi-file reads.
   */
-class XmlDispatchSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class XmlDispatchSpec extends AnyFunSuite with SharedSpark {
 
   private def one(xml: String) = {
     import spark.implicits._

@@ -4,6 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SharedSpark
+
 /** Ports of the reference's six NUnit tests
   * (XmlStreamProcessor.Test/UnitTests/Test1.cs) as golden tests over the
   * same XML literals — SURVEY.md §5's rebuild test plan item (a).
@@ -15,17 +17,18 @@ object Golden {
       subclasses: Seq[Sub])
 }
 
-class XmlGoldenSpec extends AnyFunSuite {
+class XmlGoldenSpec extends AnyFunSuite with SharedSpark {
   import Golden._
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  /** Registers `body` twice: in the shared session, and in the rule-off
+    * session, whose plans keep the row memo (`XmlMemoParseExpr` over
+    * `XmlRowMemo`) that a session without GraftExtensions runs. */
+  private def golden(name: String)(body: SparkSession => Unit): Unit = {
+    test(name)(body(spark))
+    test(s"$name (rule-off session)")(ruleOff(body))
+  }
 
-  private def one(xml: String) = {
+  private def one(xml: String)(implicit spark: SparkSession) = {
     import spark.implicits._
     Seq(xml).toDS.toDF("x")
   }
@@ -60,7 +63,8 @@ class XmlGoldenSpec extends AnyFunSuite {
     Sub("subanotherclass", 3, Some(SubSub(None, "subsubclass"))),
     Sub("subclass", 0, None)))
 
-  test("GenericTest (Test1.cs:14-97): nested Type/Array/wildcard/Tag") {
+  golden("GenericTest (Test1.cs:14-97): nested " +
+      "Type/Array/wildcard/Tag") { implicit spark =>
     import spark.implicits._
     val parser = XmlParser.struct("sample2") { a =>
       struct(
@@ -85,7 +89,8 @@ class XmlGoldenSpec extends AnyFunSuite {
     assert(got == expectedSample)
   }
 
-  test("TestCompositeParser (Test1.cs:100-185): parser reuse via custom") {
+  golden("TestCompositeParser (Test1.cs:100-185): parser reuse via " +
+      "custom") { implicit spark =>
     import spark.implicits._
     val subsubclassParser = XmlParser.fragment { a =>
       struct(a.str("somestring").as("someString"), a.tag.as("tag"))
@@ -110,8 +115,8 @@ class XmlGoldenSpec extends AnyFunSuite {
     assert(got == expectedSample)
   }
 
-  test("TestAlternatives (Test1.cs:187-209): heterogeneous children, " +
-      "document order, coalesce arithmetic") {
+  golden("TestAlternatives (Test1.cs:187-209): heterogeneous children, " +
+      "document order, coalesce arithmetic") { implicit spark =>
     import spark.implicits._
     val parser = XmlParser.array { c =>
       coalesce(c.nullInt("item1"), c.nullInt("item2") * 10)
@@ -127,7 +132,8 @@ class XmlGoldenSpec extends AnyFunSuite {
     assert(got == Seq(1, 20, 3))
   }
 
-  test("TestAttributes (Test1.cs:211-231): attr capture + string expr") {
+  golden("TestAttributes (Test1.cs:211-231): attr capture + string " +
+      "expr") { implicit spark =>
     import spark.implicits._
     val parser = XmlParser.struct("sample") { c =>
       concat(c.attribute("b"), c.attribute("a"))
@@ -138,8 +144,8 @@ class XmlGoldenSpec extends AnyFunSuite {
     assert(got == "qwezxc")
   }
 
-  test("TestVariousContent (Test1.cs:233-271): entities, CDATA, char refs, " +
-      "comments, mixed content") {
+  golden("TestVariousContent (Test1.cs:233-271): entities, CDATA, char refs, " +
+      "comments, mixed content") { implicit spark =>
     import spark.implicits._
     val parser = XmlParser.array(c => c.str("Item"))
     val doc =
@@ -167,7 +173,8 @@ class XmlGoldenSpec extends AnyFunSuite {
       "1234567890ABCD"))
   }
 
-  test("TestInnerLambda (Test1.cs:273-293): inner closures traversed") {
+  golden("TestInnerLambda (Test1.cs:273-293): inner closures " +
+      "traversed") { implicit spark =>
     import spark.implicits._
     val parser = XmlParser.struct("root") { b =>
       val inner: () => org.apache.spark.sql.Column = () => b.int("int")
@@ -178,7 +185,7 @@ class XmlGoldenSpec extends AnyFunSuite {
     assert(got == 1)
   }
 
-  test("scalar semantics table (SURVEY.md §1.2)") {
+  golden("scalar semantics table (SURVEY.md §1.2)") { implicit spark =>
     import spark.implicits._
     val parser = XmlParser.struct("r") { a =>
       struct(
@@ -205,7 +212,8 @@ class XmlGoldenSpec extends AnyFunSuite {
     assert(row.isNullAt(7))                 // missing NullInt -> null
   }
 
-  test("nullInt vs nullIntStrict on garbage input (Parser.cs:58-67)") {
+  golden("nullInt vs nullIntStrict on garbage input " +
+      "(Parser.cs:58-67)") { implicit spark =>
     import spark.implicits._
     // lenient default: unparseable non-empty text -> null
     val lenient = XmlParser.struct("r")(a => a.nullInt("v"))
@@ -230,7 +238,8 @@ class XmlGoldenSpec extends AnyFunSuite {
     assert(row.isNullAt(0) && row.isNullAt(1) && row.getInt(2) == 7)
   }
 
-  test("first-wins duplicate elements (Parser.cs:226-227)") {
+  golden("first-wins duplicate elements " +
+      "(Parser.cs:226-227)") { implicit spark =>
     import spark.implicits._
     val parser = XmlParser.struct("r")(a => a.nullInt("v"))
     val got = one("<r><v>5</v><v>7</v></r>")
@@ -238,7 +247,8 @@ class XmlGoldenSpec extends AnyFunSuite {
     assert(got.contains(5))
   }
 
-  test("missing Int -> 0; array absent -> null; empty container -> empty") {
+  golden("missing Int -> 0; array absent -> null; empty container -> " +
+      "empty") { implicit spark =>
     import spark.implicits._
     val p1 = XmlParser.struct("r")(a => a.int("nope"))
     assert(one("<r><x>9</x></r>").select(p1.parse(col("x")).as("r"))
@@ -253,7 +263,8 @@ class XmlGoldenSpec extends AnyFunSuite {
       .as[Option[Seq[Int]]].head().contains(Seq.empty[Int]))
   }
 
-  test("native file read with rowTag (CreateArrayParser ≙ table scan)") {
+  golden("native file read with rowTag (CreateArrayParser ≙ table " +
+      "scan)") { implicit spark =>
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graftxml").toFile
     val f = new java.io.File(dir, "part.xml")

@@ -1,9 +1,10 @@
 package graft.xml
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Property tests (SURVEY.md §5 rebuild plan item b): null-propagation,
   * document order, first-wins, glob dispatch — generated inputs, invariants
@@ -12,19 +13,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * Spark-level properties batch all generated cases into ONE DataFrame pass
   * so the suite stays fast.
   */
-class XmlPropertySpec extends AnyFunSuite {
+class XmlPropertySpec extends AnyFunSuite with SharedSpark {
 
   /** forAll stand-in over raw ScalaCheck Gens (the scalatest-scalacheck
     * bridge is not on the offline classpath). */
   private def forSamples[A](g: Gen[A], n: Int = 100)(body: A => Unit): Unit =
     (1 to n).foreach(i => g.sample.foreach(body))
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   private val word = Gen.alphaLowerStr.suchThat(_.nonEmpty).map(_.take(8))
 

@@ -2,22 +2,17 @@ package graft.xml
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SharedSpark
+
 /** The `graft-xml` WRITE path ([[org.apache.spark.sql.graft.XmlOutputWriter]])
   * and the culture-parity decimal parser — round-trip fidelity through the
   * sink + splittable scan + DSL extraction. */
-class XmlWriteSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class XmlWriteSpec extends AnyFunSuite with SharedSpark {
 
   private def tmp(): String =
     Files.createTempDirectory("graft-xmlwrite").toString
