@@ -10,7 +10,8 @@ string literals are not comment starts. Prints one line per tree:
 import os
 import sys
 
-TREES = ["src/main/scala", "src/main/scala/graft/xml", "src/test/scala"]
+TREES = ["src/main/scala", "src/main/scala/graft/xml",
+         "src/main/scala/graft/plans", "src/test/scala"]
 
 
 def code_lines(text):

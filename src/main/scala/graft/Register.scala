@@ -11,8 +11,9 @@ import graft.xml.{XmlChildrenExpr, XmlElementValueExpr}
   * graft.functions.
   *
   * SQL forms:
-  *   xml_children(xml, 'pat1,pat2', fromRoot) -> array<struct<tag,xml,value>>
-  *   xml_element_value(xml)                   -> string
+  *   xml_children(xml, 'pat1,pat2', fromRoot)
+  *                                  -> array<struct<tag,xml,value,attrs>>
+  *   xml_element_value(xml)         -> string
   */
 object Register {
 

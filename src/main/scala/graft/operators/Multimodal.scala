@@ -450,41 +450,54 @@ object Multimodal {
     sum
   }
 
-  case class ChannelStatsRow(doc_id: Long, channel: Int, n_pixels: Long,
-      c_sum: Long, c_min: Int, c_max: Int)
+  /** One channel's pixel fold: count, sum, sum of squares, min and max. */
+  case class ChannelStats(channel: Int, n: Long, sum: Long, sumSq: Long,
+      min: Int, max: Int)
 
-  /** Per-channel pixel statistics of a 24bpp BMP — the brightness /
-    * color-cast profile an image-curation pipeline screens on (all-black
-    * frames, blown-out scans, single-channel casts). Walks the REAL
+  /** Per-channel pixel statistics of a 24bpp BMP, one pass over the REAL
     * pixel array: data offset from the header (byte 10), 4-aligned rows,
     * padding bytes excluded — so the stats certify the decode geometry,
     * not a raw byte slice. Channel order is BMP storage order (0=B, 1=G,
-    * 2=R). None for payloads that are not 24bpp BMPs. */
-  def bmpChannelStats(m: Array[Byte]): Option[Seq[ChannelStatsRow]] = {
-    val Bmp(width, height, off, rowSize) = bmpGeometry(m).getOrElse(return None)
-    val sums = new Array[Long](3)
+    * 2=R). None for payloads that are not 24bpp BMPs.
+    *
+    * Two screens read it. Sum, min and max are the brightness /
+    * color-cast profile an image-curation pipeline screens on (all-black
+    * frames, blown-out scans, single-channel casts; the m8 gate). Count,
+    * sum and sum of squares are the dataset mean/std constants every
+    * image-training pipeline computes first (the
+    * `transforms.Normalize(mean, std)` numbers; the m28 gate): exact
+    * integers are the MERGEABLE carrier — corpus constants are Σ over
+    * images of these per-image integers (one partial agg), with mean and
+    * the population std the caller's one final float each — so two
+    * engines, or two shards of 100 TB, agree bit-for-bit on the
+    * accumulated state. Sum of squares ≤ 255²·n stays inside int64
+    * through ~1.4·10¹⁴ pixels per image. */
+  def channelStats(m: Array[Byte]): Option[Seq[ChannelStats]] = {
+    val Bmp(w, h, dataOff, rowSize) = bmpGeometry(m).getOrElse(return None)
+    val sum, sq = new Array[Long](3)
     val mins = Array(255, 255, 255)
-    val maxs = Array(0, 0, 0)
-    var y = 0
-    while (y < height) {
-      val row = off + y * rowSize
+    val maxs = new Array[Int](3)
+    var j = 0
+    while (j < h) {
       var x = 0
-      while (x < width) {
+      while (x < w) {
+        val o = dataOff + j * rowSize + 3 * x
         var c = 0
         while (c < 3) {
-          val v = m(row + x * 3 + c) & 0xff
-          sums(c) += v
+          val v = m(o + c) & 0xff
+          sum(c) += v
+          sq(c) += v.toLong * v
           if (v < mins(c)) mins(c) = v
           if (v > maxs(c)) maxs(c) = v
           c += 1
         }
         x += 1
       }
-      y += 1
+      j += 1
     }
-    val n = width.toLong * height
+    val n = w.toLong * h
     Some((0 until 3).map(c =>
-      ChannelStatsRow(0L, c, n, sums(c), mins(c), maxs(c))))
+      ChannelStats(c, n, sum(c), sq(c), mins(c), maxs(c))))
   }
 
   case class LuminanceRow(doc_id: Long, n_pixels: Long, lum_sum: Long,
@@ -816,43 +829,6 @@ object Multimodal {
       py += 1
     }
     Some(out.toSeq)
-  }
-
-  /** PER-CHANNEL NORMALIZATION STATISTICS of a 24bpp BMP — the dataset
-    * mean/std constants every image-training pipeline computes before
-    * anything else (the `transforms.Normalize(mean, std)` numbers):
-    * per channel (B, G, R in BMP storage order) the exact integer
-    * pixel count, value sum and sum of squares over the pixel data —
-    * padding bytes excluded. Sums are the MERGEABLE carrier: corpus
-    * constants are Σ over images of these per-image integers (one
-    * partial agg), with mean and the population std the caller's one
-    * final float each — so two engines, or two shards of 100 TB,
-    * agree bit-for-bit on the accumulated state. Sum of squares
-    * ≤ 255²·n stays inside int64 through ~1.4·10¹⁴ pixels per image.
-    * Returns (channel 0/1/2, n_px, v_sum, v_sumsq); None for non-BMP
-    * payloads. */
-  def channelStats(m: Array[Byte]): Option[Seq[(Int, Long, Long, Long)]] = {
-    val Bmp(w, h, dataOff, rowSize) = bmpGeometry(m).getOrElse(return None)
-    val sum = new Array[Long](3)
-    val sq = new Array[Long](3)
-    var j = 0
-    while (j < h) {
-      var x = 0
-      while (x < w) {
-        val o = dataOff + j * rowSize + 3 * x
-        var c = 0
-        while (c < 3) {
-          val v = (m(o + c) & 0xff).toLong
-          sum(c) += v
-          sq(c) += v * v
-          c += 1
-        }
-        x += 1
-      }
-      j += 1
-    }
-    val n = w.toLong * h
-    Some((0 until 3).map(c => (c, n, sum(c), sq(c))))
   }
 
   /** OTSU BINARIZATION THRESHOLD (Otsu 1979 — the classic automatic

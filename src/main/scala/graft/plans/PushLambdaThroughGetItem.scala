@@ -1,9 +1,13 @@
 package graft.plans
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.catalyst.expressions.{Alias, ArrayTransform,
-  AttributeReference, CaseWhen, CreateNamedStruct, Expression, GetArrayItem,
+  AttributeReference, CaseWhen, CommonExpressionDef, CommonExpressionRef,
+  CreateNamedStruct, Expression, GetArrayItem,
   GetStructField, GreaterThan, If, LambdaFunction, Literal,
-  NamedExpression, NamedLambdaVariable, Size}
+  NamedExpression, NamedLambdaVariable, Size, With}
+import org.apache.spark.sql.catalyst.optimizer.RewriteWithExpression
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.IntegerType
@@ -17,7 +21,10 @@ import org.apache.spark.sql.types.IntegerType
   * runs interpreted per element AND the transform materializes the whole
   * mapped array just to read one slot. After the rewrite the λ body is an
   * ordinary expression over `arr[i]` — whole-stage-codegen'd, and only
-  * the one accessed element is ever computed.
+  * the one accessed element is ever computed. The body reads `arr[i]` at
+  * every use of the lambda variable, so `arr` is bound once in a Catalyst
+  * `With`, which the rule rewrites into a Project below itself: Spark's
+  * own "Rewrite With expression" batch runs before this one.
   *
   * Two auxiliary pushes make the pattern reachable at all: the DSL wraps
   * its parse result in `CASE WHEN input IS NOT NULL THEN struct(...) END`,
@@ -83,8 +90,7 @@ object PushLambdaThroughGetItem extends Rule[LogicalPlan] {
     // only reads FIELDS of it, inline the constructor into those
     // GetStructField sites. Each inlined copy immediately collapses to one
     // field's expression (phase 2 + the builtin extract simplifier), so no
-    // transform body is duplicated; shared heavy XML extractions are
-    // per-thread-memoized and subexpression-eliminated in codegen.
+    // transform body is duplicated.
     val pushed = plan.transformUp {
       case p @ Project(upper, pc @ Project(lower, _)) =>
         val structAliases = lower.collect {
@@ -114,8 +120,11 @@ object PushLambdaThroughGetItem extends Rule[LogicalPlan] {
           }
         }
     }
-    // Phase 2 — expression rewrites
-    pushed.transformAllExpressions {
+    // Phase 2 — expression rewrites. Phase 1 gives each field read its own
+    // copy of the access, so equal arrays share one def: the rewrite binds
+    // a def once per plan node.
+    val defs = mutable.HashMap.empty[Expression, CommonExpressionDef]
+    RewriteWithExpression(pushed.transformAllExpressions {
       // CASE WHEN c THEN struct(...) END .field
       //   -> CASE WHEN c THEN struct(...).field END
       case g @ GetStructField(cw: CaseWhen, _, _)
@@ -132,14 +141,24 @@ object PushLambdaThroughGetItem extends Rule[LogicalPlan] {
           case ArrayTransform(arr,
               LambdaFunction(body, Seq(v: NamedLambdaVariable), _))
               if body.deterministic =>
-            val item = GetArrayItem(arr, idx, failOnError = false)
-            val newBody = body.transform {
-              case nv: NamedLambdaVariable if nv.exprId == v.exprId => item
+            def read(a: Expression): Expression = {
+              val item = GetArrayItem(a, idx, failOnError = false)
+              If(GreaterThan(Size(a, legacySizeOfNull = false), idx),
+                body.transform {
+                  case nv: NamedLambdaVariable if nv.exprId == v.exprId =>
+                    item
+                }, Literal(null, g.dataType))
             }
-            If(GreaterThan(Size(arr, legacySizeOfNull = false), idx),
-              newBody, Literal(null, g.dataType))
+            // an `arr` over an enclosing lambda's variable cannot move to
+            // a Project below
+            if (arr.exists(_.isInstanceOf[NamedLambdaVariable])) read(arr)
+            else {
+              val d = defs.getOrElseUpdate(arr.canonicalized,
+                CommonExpressionDef(arr))
+              With(read(new CommonExpressionRef(d)), Seq(d))
+            }
           case _ => g
         }
-    }
+    })
   }
 }

@@ -6222,8 +6222,8 @@ object ExtensionQueries {
       documents(sp, dir).filter(col("doc_id") % 3 === 0), frameSize = 100)
     media.as[Multimodal.MediaRow]
       .flatMap { r =>
-        Multimodal.channelStats(r.media).toSeq.flatten.map { t =>
-          (r.doc_id, t._1, t._2, t._3, t._4)
+        Multimodal.channelStats(r.media).toSeq.flatten.map { s =>
+          (r.doc_id, s.channel, s.n, s.sum, s.sumSq)
         }
       }
       .toDF("doc_id", "channel", "n_px", "v_sum", "v_sumsq")
@@ -14590,15 +14590,14 @@ object ExtensionQueries {
   /** Wildcard-glob + tag-capture + first-wins ALTERNATIVES on the
     * STREAMING path — x3/x4's semantics (Test1.cs:187-209) re-run under
     * micro-batch re-evaluation. s5 already streams a `v_*` glob; this
-    * gate adds the two remaining DSL capture shapes the StAX expressions
-    * memo-cache per row (graft.xml.XmlRowMemo): the `tag` accessor inside an
-    * array bind (child names are DATA — `q_<returnflag>` — recovered via
-    * glob + Tag()) and a computed alternatives column
+    * gate adds the two remaining DSL capture shapes: the `tag` accessor
+    * inside an array bind (child names are DATA — `q_<returnflag>` —
+    * recovered via glob + Tag()) and a computed alternatives column
     * (`coalesce(item1, item2*10)`) whose member expressions re-read the
     * same per-row parse from separate null-guard branches. A streaming
     * micro-batch re-plans and re-evaluates that projection per batch, so
-    * a memo cache leaking state across rows/batches would corrupt
-    * exactly this shape first. Lineitems are written as XML text shards
+    * per-row state leaking across rows/batches would corrupt exactly this
+    * shape first. Lineitems are written as XML text shards
     * and STREAMED back through the `graft-xml` FileFormat (split-based
     * reads), aggregated per recovered tag in complete mode; the oracle
     * computes the same aggregate straight off lineitem. */
@@ -15309,7 +15308,7 @@ object ExtensionQueries {
       |ORDER BY obs.event_type, obs.dow""".stripMargin
 
   /** Per-channel pixel statistics over the REAL BMP pixel array
-    * ([[Multimodal.bmpChannelStats]]): mean/min/max/sum per B/G/R
+    * ([[Multimodal.channelStats]]): mean/min/max/sum per B/G/R
     * channel with padding bytes excluded — the brightness and color-cast
     * screen of an image curation pipeline (all-black scans, blown
     * highlights, single-channel casts). The oracle recomputes every
@@ -15321,10 +15320,9 @@ object ExtensionQueries {
     val media = Multimodal.attachBlobs(
       documents(sp, dir).filter(col("doc_id") % 3 === 0), frameSize = 100)
     media.as[Multimodal.MediaRow]
-      .flatMap(r => Multimodal.bmpChannelStats(r.media)
+      .flatMap(r => Multimodal.channelStats(r.media)
         .getOrElse(Seq.empty)
-        .map(s => (r.doc_id, s.channel, s.n_pixels, s.c_sum,
-          s.c_min, s.c_max)))
+        .map(s => (r.doc_id, s.channel, s.n, s.sum, s.min, s.max)))
       .toDF("doc_id", "channel", "n_pixels", "c_sum", "c_min", "c_max")
       .withColumn("c_mean", round(
         col("c_sum").cast("double") / col("n_pixels").cast("double"), 4))

@@ -11,34 +11,35 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Catalyst expression: extract matching depth-1 children of an XML string
-  * as `array<struct<tag,xml,value>>`, in document order.
+  * as `array<struct<tag,xml,value,attrs>>`, in document order.
   *
   * This is the one custom operator the native XML source cannot express
   * (SURVEY.md §7.3): the reference's wildcard dispatch + `Tag()` capture +
   * per-child array emit (reference Parser.cs:166-187, 257-316). Evaluation is
   * one byte-level fast scan or one StAX pass per value
-  * ([[XmlChildrenExpr.evalJava]]).
+  * ([[XmlChildrenExpr.extract]]). Typed by `outType` before analysis, so the
+  * DSL binds an extraction several members share once, in a Catalyst
+  * `With`, and each member picks from it ([[XmlPickChildExpr]]).
   *
   * Scale: embarrassingly parallel per row; no state, no shuffle. The returned
   * children carry re-parsable outer XML so downstream exact-member binding
   * stays on the native parse (`xml_flat_parse`).
   */
 case class XmlChildrenExpr(child: Expression, patterns: Seq[String],
-    fromRoot: Boolean, needOuter: Boolean = true, needValue: Boolean = true,
-    memo: Boolean = true)
+    fromRoot: Boolean, needOuter: Boolean = true, needValue: Boolean = true)
   extends UnaryExpression {
 
   override def dataType: DataType = XmlChildrenExpr.outType
   override def nullable: Boolean = true
   override def prettyName: String = "xml_children"
 
-  // computed once per instance; the hot path then hashes only the row
+  // computed once per instance, not per row
   @transient private lazy val specKey: String =
-    XmlChildrenExpr.siteKey(patterns, fromRoot, needOuter, needValue)
+    XmlStax.specKey(patterns, fromRoot, needOuter, needValue)
 
   override def nullSafeEval(input: Any): Any =
     XmlChildrenExpr.extract(input.asInstanceOf[UTF8String], patterns,
-      fromRoot, specKey, needOuter, needValue, memo)
+      fromRoot, specKey, needOuter, needValue)
 
   // a real doGenCode (vs CodegenFallback) keeps the surrounding projection
   // inside whole-stage codegen; the generated code just calls the static
@@ -51,7 +52,7 @@ case class XmlChildrenExpr(child: Expression, patterns: Seq[String],
     nullSafeCodeGen(ctx, ev, c => {
       s"""
          |${ev.value} = graft.xml.XmlChildrenExpr.extract($c, $pats,
-         |  $fromRoot, $key, $needOuter, $needValue, $memo);
+         |  $fromRoot, $key, $needOuter, $needValue);
          |if (${ev.value} == null) { ${ev.isNull} = true; }
        """.stripMargin
     })
@@ -72,55 +73,20 @@ object XmlChildrenExpr {
       valueContainsNull = false), nullable = false)))
   val outType: DataType = ArrayType(elemType, containsNull = false)
 
-  /** Row-memo site key of an extraction; also keys its compiled patterns.
-    * [[XmlFirstChildExpr]] and [[XmlExplodeChildren]] use the same key, so
-    * they share the extraction of an [[XmlChildrenExpr]] with the same
-    * spec. */
-  def siteKey(patterns: Seq[String], fromRoot: Boolean, needOuter: Boolean,
-      needValue: Boolean): String =
-    "children:" + XmlStax.specKey(patterns, fromRoot, needOuter, needValue)
-
-  /** Row-memo site key of a fused container descent. */
-  def siteKeyAt(container: String, patterns: Seq[String],
-      needOuter: Boolean, needValue: Boolean): String =
-    "childrenAt:" + container + "\u0000" +
-      XmlStax.specKey(patterns, fromRoot = true, needOuter, needValue)
-
   /** Static evaluator shared by interpreted eval and generated code, and
     * the one child extraction every expression reads: the byte-level fast
     * path (no decode, no StAX; values and outer XML written straight from
     * the input bytes) first, and anything outside its proven-equivalent
-    * subset through the StAX walk. With `memo`, the StAX result goes
-    * through the row memo ([[XmlRowMemo]]): it is the constructed
-    * ArrayData, because rebuilding UTF8Strings per reference was a
-    * measured hotspot, and it is immutable, so sharing it within a thread
-    * is safe. An extraction evaluated once per row (pulled into its own
-    * Project by `graft.plans.DedupXmlParses`) passes `memo = false`. */
+    * subset through the StAX walk. `specKey` ([[XmlStax.specKey]]) keys
+    * the compiled patterns. */
   def extract(input: UTF8String, patterns: Seq[String], fromRoot: Boolean,
-      specKey: String, needOuter: Boolean, needValue: Boolean,
-      memo: Boolean): ArrayData = {
+      specKey: String, needOuter: Boolean, needValue: Boolean): ArrayData = {
     val fast = XmlFastScan.children(input, patterns, specKey, fromRoot,
       needOuter, needValue)
     if (!(fast eq XmlFastScan.Bail)) fast.asInstanceOf[ArrayData]
-    else if (!memo) stax(input, patterns, fromRoot, specKey, needOuter,
-      needValue)
-    else XmlRowMemo(specKey, input) {
-      stax(input, patterns, fromRoot, specKey, needOuter, needValue)
-    }
-  }
-
-  /** [[extract]] with the row memo. */
-  def evalJava(input: UTF8String, patterns: Seq[String],
-      fromRoot: Boolean, specKey: String, needOuter: Boolean,
-      needValue: Boolean): ArrayData =
-    extract(input, patterns, fromRoot, specKey, needOuter, needValue,
-      memo = true)
-
-  private def stax(input: UTF8String, patterns: Seq[String],
-      fromRoot: Boolean, specKey: String, needOuter: Boolean,
-      needValue: Boolean): ArrayData =
-    build(XmlStax.children(input.toString, patterns, fromRoot, specKey,
+    else build(XmlStax.children(input.toString, patterns, fromRoot, specKey,
       needOuter, needValue))
+  }
 
   // pruned outer/value fields are "" for every child — share one constant
   private def utf8(s: String): UTF8String =
@@ -166,17 +132,15 @@ object XmlChildrenExpr {
   }
 
   /** Static evaluator for [[XmlChildrenAtExpr]]: the same fast scan,
-    * else memoized StAX, for the fused container descent. */
+    * else StAX, for the fused container descent. */
   def evalJavaAt(input: UTF8String, container: String,
       patterns: Seq[String], specKey: String, needOuter: Boolean,
       needValue: Boolean): ArrayData = {
     val fast = XmlFastScan.childrenAt(input, container, patterns, specKey,
       needOuter, needValue)
     if (!(fast eq XmlFastScan.Bail)) fast.asInstanceOf[ArrayData]
-    else XmlRowMemo(specKey, input) {
-      build(XmlStax.childrenAt(input.toString, container, patterns, specKey,
-        needOuter, needValue))
-    }
+    else build(XmlStax.childrenAt(input.toString, container, patterns,
+      specKey, needOuter, needValue))
   }
 }
 
@@ -197,7 +161,7 @@ case class XmlChildrenAtExpr(child: Expression, container: String,
   override def prettyName: String = "xml_children_at"
 
   @transient private lazy val specKey: String =
-    XmlChildrenExpr.siteKeyAt(container, patterns, needOuter, needValue)
+    XmlStax.specKey(patterns, fromRoot = true, needOuter, needValue)
 
   override def nullSafeEval(input: Any): Any =
     XmlChildrenExpr.evalJavaAt(input.asInstanceOf[UTF8String], container,
@@ -223,17 +187,13 @@ case class XmlChildrenAtExpr(child: Expression, container: String,
 }
 
 /** First matching depth-1 child of an XML string as a nullable
-  * `struct<tag,xml,value,attrs>` — the codegen'd form of
-  * `get(filter(xml_children(x), ch => activeCond(name, ch.tag)), 0)`.
+  * `struct<tag,xml,value,attrs>`: [[XmlPickChildExpr]] over its own
+  * extraction ([[XmlChildrenExpr.extract]]), evaluated per reference.
   *
-  * The HOF form evaluates INTERPRETED (higher-order functions are
-  * CodegenFallback) and materializes the filtered array per member
-  * expression; this expression linear-scans the extraction of
-  * [[XmlChildrenExpr.evalJava]] (same site key as an [[XmlChildrenExpr]]
-  * over the same spec, so N members on one row still parse once) and
-  * returns the winner's struct from it ([[XmlChildMatch]]). With
-  * `GraftExtensions`, `DedupXmlParses` pulls the extraction into its own
-  * Project and rewrites each member to an [[XmlPickChildExpr]] over it. */
+  * The DSL no longer emits it: a StAX-path spec binds one extraction for
+  * all its members and picks from it. It stays for the `xmlbench` harness,
+  * which matches it as a fast-path site; ROADMAP item 8 deletes it with
+  * that harness case. */
 case class XmlFirstChildExpr(child: Expression, capturePatterns: Seq[String],
     fromRoot: Boolean, memberName: String, exactNames: Seq[String],
     laterGlobs: Seq[String], needOuter: Boolean = true,
@@ -244,17 +204,13 @@ case class XmlFirstChildExpr(child: Expression, capturePatterns: Seq[String],
   override def prettyName: String = "xml_first_child"
 
   @transient private lazy val specKey: String =
-    XmlChildrenExpr.siteKey(capturePatterns, fromRoot, needOuter, needValue)
+    XmlStax.specKey(capturePatterns, fromRoot, needOuter, needValue)
   @transient private lazy val member =
     new XmlChildMatch(memberName, exactNames, laterGlobs)
 
-  /** The extraction this member reads, evaluated once per row. */
-  def extraction: XmlChildrenExpr = XmlChildrenExpr(child, capturePatterns,
-    fromRoot, needOuter, needValue, memo = false)
-
   /** Instance evaluator referenced directly from the generated code. */
   def firstChild(input: UTF8String): InternalRow =
-    member.first(XmlChildrenExpr.evalJava(input, capturePatterns, fromRoot,
+    member.first(XmlChildrenExpr.extract(input, capturePatterns, fromRoot,
       specKey, needOuter, needValue))
 
   override def nullSafeEval(input: Any): Any =
@@ -276,9 +232,10 @@ case class XmlFirstChildExpr(child: Expression, capturePatterns: Seq[String],
     copy(child = newChild)
 }
 
-/** [[XmlFirstChildExpr]]'s member over an extraction already evaluated:
-  * `child` is the `array<struct<tag,xml,value,attrs>>` of an
-  * [[XmlChildrenExpr]]. */
+/** One member's first matching child ([[XmlChildMatch]]) in an extraction
+  * already evaluated: `child` is the `array<struct<tag,xml,value,attrs>>`
+  * of an [[XmlChildrenExpr]], in the DSL a ref to the extraction its spec
+  * binds once. */
 case class XmlPickChildExpr(child: Expression, memberName: String,
     exactNames: Seq[String], laterGlobs: Seq[String])
   extends UnaryExpression {
@@ -389,11 +346,4 @@ object XmlFunctions {
 
   def xml_element_value(c: Column): Column =
     ColumnBridge.column(XmlElementValueExpr(ColumnBridge.expression(c)))
-
-  /** Column API over [[XmlChildrenAtExpr]] — fused container descent. */
-  def xml_children_at(c: Column, container: String, patterns: Seq[String],
-      needOuter: Boolean = true, needValue: Boolean = true): Column =
-    ColumnBridge.column(
-      XmlChildrenAtExpr(ColumnBridge.expression(c), container, patterns,
-        needOuter, needValue))
 }

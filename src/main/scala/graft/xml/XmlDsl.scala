@@ -3,10 +3,11 @@ package graft.xml
 import scala.collection.mutable
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{CommonExpressionDef,
+  CommonExpressionId, CommonExpressionRef, Expression,
+  UnresolvedNamedLambdaVariable, With, XmlToStructs}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-
-import XmlFunctions._
 
 /** The reference engine's declarative parser DSL (reference
   * XmlStreamProcessor/Parser.cs:501-514, `INode`), re-expressed Spark-first.
@@ -215,56 +216,18 @@ private[xml] final class RecNode(spec: ObjSpec) extends XmlNode {
 // ---------------------------------------------------------------------------
 
 private[xml] object Bind {
-  val xmlOptions: java.util.Map[String, String] = {
-    val m = new java.util.HashMap[String, String]()
-    m.put("attributePrefix", "_")
-    m.put("mode", "PERMISSIVE")
-    m
-  }
+  val xmlOptions: Map[String, String] =
+    Map("attributePrefix" -> "_", "mode" -> "PERMISSIVE")
 
-  /** The per-row record parse for a native read schema:
-    * [[XmlFlatParseExpr]], a one-pass byte scanner with per-row fallback
-    * to Spark's own XML evaluator, an order of magnitude cheaper than
-    * from_xml's per-row Woodstox reader; from_xml itself only for a schema
-    * the scanner cannot serve. Either is wrapped in the per-thread parse
-    * memo — the DSL references the parsed struct once per bound member,
-    * and those references survive as duplicate parses in the optimized
-    * Project (see XmlMemoParseExpr). */
-  def fx(c: Column, st: StructType): Column = {
-    import org.apache.spark.sql.graft.ColumnBridge
-    val parse =
-      if (XmlFastScan.FlatSpec.of(st).isDefined)
-        XmlFlatParseExpr(ColumnBridge.expression(c), st)
-      else ColumnBridge.expression(from_xml(c, st, xmlOptions))
-    ColumnBridge.column(XmlMemoParseExpr(parse))
-  }
+  /** The bindings of the `parse()` call being bound on this thread, so a
+    * `custom` member's parser, called from inside it, joins them. */
+  val current = new scala.util.DynamicVariable[Bind](null)
 
   /** First element's local name of a document/fragment string — for rootless
     * (`fragment`) parsers, ≙ the reference's root-depth bootstrap tag
     * (Parser.cs:123-127). */
   def rootTagOf(xmlC: Column): Column =
     regexp_extract(xmlC, "<([A-Za-z_][A-Za-z0-9_.-]*)", 1)
-
-  /** Bind an obj spec against its raw outer XML (document or extracted
-    * child). Chooses native vs StAX path per spec. */
-  def bindObj(outer: Column, tagC: Column, m: ObjM): Column = {
-    val schema = m.spec.nativeReadSchema
-    if (m.spec.isNative)
-      m.f(new NativeBindNode(fx(outer, schema), tagC, m.spec))
-    else {
-      val parsed = if (schema.nonEmpty) fx(outer, schema) else lit(null)
-      m.f(new StaxBindNode(outer, parsed, tagC, m.spec))
-    }
-    }
-
-  /** Bind an obj member from an extracted child struct<tag,xml,value,attrs>.
-    * Attr/tag-only specs bind straight off the child's `attrs` map captured
-    * during the StAX pass — no from_xml re-parse of the child fragment.
-    * Anything needing sub-elements re-parses the child's outer XML. */
-  def bindKidObj(ch: Column, m: ObjM): Column =
-    if (m.spec.members.isEmpty)
-      m.f(new KidAttrBindNode(ch, m.spec))
-    else bindObj(ch.getField("xml"), ch.getField("tag"), m)
 
   /** Which extracted-child fields an AltBindNode over `spec` can read:
     * (needOuter, needValue). Scalar alternatives read `value`; obj
@@ -289,8 +252,8 @@ private[xml] object Bind {
     * conditions mirror the StaxBindNode dispatch exactly
     * (over-approximation is safe, an under-approximation would serve ""
     * to a live consumer). Arrays that bind natively OR through the fused
-    * container descent ([[bindArrayAt]] — exact name, no container attrs)
-    * never pull the container's outer through firstKid at all. */
+    * container descent ([[Bind.bindArrayAt]] — exact name, no container
+    * attrs) never pull the container's outer through firstKid at all. */
   private[xml] def staxKidNeeds(spec: ObjSpec): (Boolean, Boolean) = {
     var needOuter = false
     var needValue = false
@@ -304,35 +267,6 @@ private[xml] object Bind {
       case (_, _: CustomM) => needOuter = true
     }
     (needOuter, needValue)
-  }
-
-  /** Array semantics over a container's outer XML: one combined value per
-    * matching child, document order (Parser.cs:257-316). */
-  def bindArray(containerOuter: Column, m: ArrM): Column = {
-    val (needOuter, needValue) = altKidNeeds(m.spec)
-    val kids = xml_children(containerOuter, m.spec.members.keys.toSeq,
-      fromRoot = true, needOuter, needValue)
-    val containerAttrs: Option[Column] =
-      if (m.spec.attrs.isEmpty) None
-      else Some(fx(containerOuter, StructType(
-        m.spec.attrs.toSeq.map(a => StructField("_" + a, StringType)))))
-    transform(kids,
-      ch => m.f(new AltBindNode(ch, m.spec, containerAttrs)))
-  }
-
-  /** Fused form of `firstKid(container) -> bindArray(outer)`: the
-    * container's matching children are extracted straight from the
-    * document in ONE StAX pass ([[XmlChildrenAtExpr]]), never serializing
-    * and re-parsing the container's outer XML. Valid whenever the
-    * container name is exact and no container-attribute broadcast is
-    * needed (attrs would require the container's own attributes, which
-    * the descent does not capture). Null when the container is absent —
-    * the `when(ch.isNotNull, …)` semantics of the two-pass form. */
-  def bindArrayAt(docOuter: Column, m: ArrM): Column = {
-    val (needOuter, needValue) = altKidNeeds(m.spec)
-    val kids = xml_children_at(docOuter, m.name, m.spec.members.keys.toSeq,
-      needOuter, needValue)
-    transform(kids, ch => m.f(new AltBindNode(ch, m.spec, None)))
   }
 
   /** Native array member binding (single exact alternative). */
@@ -356,6 +290,135 @@ private[xml] object Bind {
           m.f(new NativeAltObjNode(elemName, x, o, m.spec))
         case _ => throw new IllegalStateException("unreachable")
       }))
+  }
+}
+
+/** The bindings of one `parse()` call. Each per-row parse, and each
+  * extraction the members of a StAX-path spec share, is bound once: a
+  * `CommonExpressionDef` that every member reads through a
+  * `CommonExpressionRef`, typed before analysis by the read schema or by
+  * the extraction's `outType`. [[close]] wraps the bound column in Catalyst
+  * `With`s, and Spark's own "Rewrite With expression" batch evaluates each
+  * def once per row in a Project below the one that reads it, in every
+  * session, with or without `GraftExtensions`; a def read once is inlined
+  * at its reference. */
+private[xml] final class Bind {
+  import org.apache.spark.sql.graft.ColumnBridge.{column, tree}
+
+  private val defs = mutable.LinkedHashMap.empty[CommonExpressionId,
+    CommonExpressionDef]
+
+  /** `e`, bound once per row. An expression over a `transform` lambda's
+    * element stays inline: it cannot be evaluated outside the lambda, so
+    * each of its references evaluates it. */
+  def once(e: Expression): Column =
+    if (e.exists(_.isInstanceOf[UnresolvedNamedLambdaVariable])) column(e)
+    else {
+      val d = CommonExpressionDef(e)
+      defs(d.id) = d
+      column(new CommonExpressionRef(d))
+    }
+
+  /** `c` as the input of an XML expression. The refs it reads are bound
+    * in a local `With` as well, so the expression also evaluates on its
+    * own (the `xmlbench` harness replays each XML expression's input over
+    * the records). Under the enclosing `With`s Spark has made those refs
+    * attributes of a Project below by the time it reaches the local one,
+    * which then binds nothing. */
+  def input(c: Column): Expression = {
+    val e = tree(c)
+    val read = e.collect { case r: CommonExpressionRef => r.id }.toSet
+    val local = defs.values.filter(d => read(d.id)).toSeq
+    if (local.isEmpty) e else With(e, local)
+  }
+
+  /** An XML expression over `c` that may be referenced once: bound once
+    * when its input reads a def. Inline, its local `With` could sit in a
+    * `when` branch, where Spark inlines that `With` before the enclosing
+    * one binds the def, and the def would run twice. */
+  private def site(c: Column)(f: Expression => Expression): Column = {
+    val in = input(c)
+    if (in.isInstanceOf[With]) once(f(in)) else column(f(in))
+  }
+
+  /** `body` with this call's defs bound: one `With` per dependency level,
+    * outermost first, since a def that reads another def's ref is
+    * rewritten only once that ref is an attribute of the Project below. */
+  def close(body: Column): Column = {
+    val levels = mutable.HashMap.empty[CommonExpressionId, Int]
+    def level(d: CommonExpressionDef): Int = levels.getOrElseUpdate(d.id,
+      1 + d.child.collect {
+        case r: CommonExpressionRef if defs.contains(r.id) => level(defs(r.id))
+      }.maxOption.getOrElse(0))
+    column(defs.values.toSeq.groupBy(level).toSeq.sortBy(-_._1)
+      .foldLeft(tree(body)) { case (b, (_, ds)) => With(b, ds) })
+  }
+
+  /** The per-row record parse for a native read schema, bound once:
+    * [[XmlFlatParseExpr]], a one-pass byte scanner with per-row fallback
+    * to Spark's own XML evaluator, an order of magnitude cheaper than
+    * from_xml's per-row Woodstox reader; from_xml (`XmlToStructs`) itself
+    * only for a schema the scanner cannot serve. */
+  def fx(c: Column, st: StructType): Column = once(
+    if (XmlFastScan.FlatSpec.of(st).isDefined)
+      XmlFlatParseExpr(input(c), st)
+    else XmlToStructs(st, Bind.xmlOptions, input(c)))
+
+  /** Bind an obj spec against its raw outer XML (document or extracted
+    * child). Chooses native vs StAX path per spec. */
+  def bindObj(outer: Column, tagC: Column, m: ObjM): Column = {
+    val schema = m.spec.nativeReadSchema
+    if (m.spec.isNative)
+      m.f(new NativeBindNode(fx(outer, schema), tagC, m.spec))
+    else {
+      val parsed = if (schema.nonEmpty) fx(outer, schema) else lit(null)
+      m.f(new StaxBindNode(outer, parsed, tagC, m.spec, this))
+    }
+  }
+
+  /** Bind an obj member from an extracted child struct<tag,xml,value,attrs>.
+    * Attr/tag-only specs bind straight off the child's `attrs` map captured
+    * during the StAX pass — no from_xml re-parse of the child fragment.
+    * Anything needing sub-elements re-parses the child's outer XML. */
+  def bindKidObj(ch: Column, m: ObjM): Column =
+    if (m.spec.members.isEmpty)
+      m.f(new KidAttrBindNode(ch, m.spec))
+    else bindObj(ch.getField("xml"), ch.getField("tag"), m)
+
+  /** Array semantics over a container's outer XML: one combined value per
+    * matching child, document order (Parser.cs:257-316). */
+  def bindArray(containerOuter: Column, m: ArrM): Column = {
+    val (needOuter, needValue) = Bind.altKidNeeds(m.spec)
+    val kids = site(containerOuter)(XmlChildrenExpr(_,
+      m.spec.members.keys.toSeq, fromRoot = true, needOuter, needValue))
+    def bound(containerAttrs: Option[Column]) = transform(kids,
+      ch => m.f(new AltBindNode(ch, m.spec, containerAttrs, this)))
+    if (m.spec.attrs.isEmpty) bound(None)
+    else {
+      // the container's attributes reach the elements as the variable of
+      // a one-element transform, so their parse runs once per row: read in
+      // the element lambda, a def read once is inlined there and runs per
+      // element. The optimizer folds `array(x)[0]` back into `x`, and
+      // PushLambdaThroughGetItem rewrites `get`; neither touches this form
+      val attrs = fx(containerOuter, StructType(
+        m.spec.attrs.toSeq.map(a => StructField("_" + a, StringType))))
+      element_at(transform(array_repeat(attrs, 1), a => bound(Some(a))), 1)
+    }
+  }
+
+  /** Fused form of `firstKid(container) -> bindArray(outer)`: the
+    * container's matching children are extracted straight from the
+    * document in ONE StAX pass ([[XmlChildrenAtExpr]]), never serializing
+    * and re-parsing the container's outer XML. Valid whenever the
+    * container name is exact and no container-attribute broadcast is
+    * needed (attrs would require the container's own attributes, which
+    * the descent does not capture). Null when the container is absent —
+    * the `when(ch.isNotNull, …)` semantics of the two-pass form. */
+  def bindArrayAt(docOuter: Column, m: ArrM): Column = {
+    val (needOuter, needValue) = Bind.altKidNeeds(m.spec)
+    val kids = site(docOuter)(XmlChildrenAtExpr(_, m.name,
+      m.spec.members.keys.toSeq, needOuter, needValue))
+    transform(kids, ch => m.f(new AltBindNode(ch, m.spec, None, this)))
   }
 }
 
@@ -414,26 +477,27 @@ private[xml] final class NativeBindNode(parsed: Column, tagC: Column,
 
 /** StAX-path binding: exact members bind natively via the pre-built
   * `parsed` struct (the native parse of the outer XML); wildcard/custom/
-  * heterogeneous members bind through the codegen'd first-match
-  * expression ([[XmlFirstChildExpr]] — one extraction per row, through
-  * [[XmlChildrenExpr.evalJava]] and the row memo, shared by every member;
-  * no interpreted HOF filters). */
+  * heterogeneous members each pick their first matching child
+  * ([[XmlPickChildExpr]]) from one extraction of the outer XML
+  * ([[XmlChildrenExpr]]) that `b` binds once for the whole spec — no
+  * interpreted HOF filters. */
 private[xml] final class StaxBindNode(outer: Column, parsed: Column,
-    tagC: Column, spec: ObjSpec) extends BaseBindNode(spec) {
+    tagC: Column, spec: ObjSpec, b: Bind) extends BaseBindNode(spec) {
+  import org.apache.spark.sql.graft.ColumnBridge.{column, expression}
 
-  // one extraction serves every member of this spec (shared memo key), so
-  // the capture flags are the UNION of all members' needs
-  private lazy val kidNeeds: (Boolean, Boolean) = Bind.staxKidNeeds(spec)
+  // one extraction serves every member of this spec, so the capture flags
+  // are the UNION of all members' needs
+  private lazy val kids: Column = {
+    val (needOuter, needValue) = Bind.staxKidNeeds(spec)
+    b.once(XmlChildrenExpr(b.input(outer), spec.staxPatterns,
+      fromRoot = true, needOuter, needValue))
+  }
 
   private def firstKid(name: String): Column = {
     val globs = spec.globNames
     val later =
       if (name.contains("*")) globs.drop(globs.indexOf(name) + 1) else Nil
-    org.apache.spark.sql.graft.ColumnBridge.column(
-      XmlFirstChildExpr(
-        org.apache.spark.sql.graft.ColumnBridge.expression(outer),
-        spec.staxPatterns, fromRoot = true, name, spec.exactNames, later,
-        kidNeeds._1, kidNeeds._2))
+    column(XmlPickChildExpr(expression(kids), name, spec.exactNames, later))
   }
 
   override def tag: Column = tagC
@@ -448,16 +512,16 @@ private[xml] final class StaxBindNode(outer: Column, parsed: Column,
       when(sub.isNotNull, m.f(new NativeBindNode(sub, lit(m.name), m.spec)))
     } else {
       val ch = firstKid(m.name)
-      when(ch.isNotNull, Bind.bindKidObj(ch, m))
+      when(ch.isNotNull, b.bindKidObj(ch, m))
     }
   override protected def arrBound(m: ArrM): Column =
     if (!m.name.contains("*") && spec.arrayIsNative(m) && m.spec.attrs.isEmpty) {
       Bind.bindNativeArray(get(parsed.getField(m.name), lit(0)), m)
     } else if (!m.name.contains("*") && m.spec.attrs.isEmpty) {
-      Bind.bindArrayAt(outer, m) // fused one-pass container descent
+      b.bindArrayAt(outer, m) // fused one-pass container descent
     } else {
       val ch = firstKid(m.name)
-      when(ch.isNotNull, Bind.bindArray(ch.getField("xml"), m))
+      when(ch.isNotNull, b.bindArray(ch.getField("xml"), m))
     }
   override protected def customBound(m: CustomM): Column = {
     val ch = firstKid(m.name)
@@ -467,9 +531,9 @@ private[xml] final class StaxBindNode(outer: Column, parsed: Column,
 
 /** Array-element ("alternatives") binding: accessors dispatch on the child's
   * OWN tag (Parser.cs:257-316, Test1.cs:187-209). `ch` is one
-  * struct<tag,xml,value> from xml_children. */
+  * struct<tag,xml,value,attrs> from xml_children. */
 private[xml] final class AltBindNode(ch: Column, spec: ObjSpec,
-    containerAttrs: Option[Column]) extends BaseBindNode(spec) {
+    containerAttrs: Option[Column], b: Bind) extends BaseBindNode(spec) {
   private def active(name: String): Column =
     spec.activeCond(name, ch.getField("tag"))
   override def tag: Column = ch.getField("tag")
@@ -482,9 +546,9 @@ private[xml] final class AltBindNode(ch: Column, spec: ObjSpec,
       case None    => lit(null).cast(StringType)
     }
   override protected def objBound(m: ObjM): Column =
-    when(active(m.name), Bind.bindKidObj(ch, m))
+    when(active(m.name), b.bindKidObj(ch, m))
   override protected def arrBound(m: ArrM): Column =
-    when(active(m.name), Bind.bindArray(ch.getField("xml"), m))
+    when(active(m.name), b.bindArray(ch.getField("xml"), m))
   override protected def customBound(m: CustomM): Column =
     when(active(m.name), m.f(ch.getField("xml")))
 }
@@ -564,19 +628,28 @@ final class CompiledXmlParser private[xml] (
 
   /** Parse a raw XML string column (whole document or element fragment).
     *
-    * Duplicate evaluation note: the bound projection references the per-row
-    * parses from several member expressions, often under `when` branches
-    * where Spark's codegen subexpression elimination does not apply; the
-    * parse and extraction expressions therefore share a per-thread row
-    * memo ([[XmlRowMemo]]) that makes same-row re-evaluation O(1). */
-  def parse(xmlCol: Column): Column = {
+    * The bound projection reads each per-row parse and shared extraction
+    * from several member expressions, often under `when` branches where
+    * Spark's subexpression elimination does not apply; the column binds
+    * each of them once in a Catalyst `With` ([[Bind]]), so it runs once per
+    * row. A parse over a `transform` lambda's element (an array element
+    * holding a non-attribute obj) runs once per reference. */
+  def parse(xmlCol: Column): Column = Bind.current.value match {
+    case null =>
+      val b = new Bind
+      b.close(Bind.current.withValue(b)(bind(xmlCol, b)))
+    // a `custom` member's parser: its parses join the enclosing call's
+    case b => bind(xmlCol, b)
+  }
+
+  private def bind(xmlCol: Column, b: Bind): Column = {
     val x = trim(xmlCol)
     val tagC = rootTag.map(lit(_)).getOrElse(Bind.rootTagOf(x))
     asArray match {
-      case Some(m) => when(x.isNotNull, Bind.bindArray(x, m))
+      case Some(m) => when(x.isNotNull, b.bindArray(x, m))
       case None =>
         when(x.isNotNull,
-          Bind.bindObj(x, tagC,
+          b.bindObj(x, tagC,
             ObjM(rootTag.getOrElse("<fragment>"), combine, spec)))
     }
   }

@@ -15,7 +15,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * (the Aggregator half is functions.MinhashUnionAgg): a real Catalyst
   * generator planned into a `Generate` node, equivalent to
   * `posexplode(xml_children(...))` but emitting rows directly from the
-  * extraction of [[XmlChildrenExpr.evalJava]] — no intermediate array
+  * extraction of [[XmlChildrenExpr.extract]] — no intermediate array
   * column in the plan.
   *
   * Scale: per-row generation, no state, no shuffle; document order is the
@@ -34,13 +34,13 @@ case class XmlExplodeChildren(child: Expression, patterns: Seq[String],
   override def prettyName: String = "xml_explode_children"
 
   @transient private lazy val specKey: String =
-    XmlChildrenExpr.siteKey(patterns, fromRoot, needOuter, needValue)
+    XmlStax.specKey(patterns, fromRoot, needOuter, needValue)
 
   override def eval(input: InternalRow): IterableOnce[InternalRow] = {
     val s = child.eval(input)
     if (s == null) Nil
     else {
-      val kids = XmlChildrenExpr.evalJava(s.asInstanceOf[UTF8String],
+      val kids = XmlChildrenExpr.extract(s.asInstanceOf[UTF8String],
         patterns, fromRoot, specKey, needOuter, needValue)
       if (kids == null) Nil // malformed input: PERMISSIVE, zero rows
       else (0 until kids.numElements()).iterator.map { i =>

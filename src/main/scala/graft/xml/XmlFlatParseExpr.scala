@@ -22,10 +22,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * from_xml's by construction, including mixed-content serialization (x6)
   * and PERMISSIVE handling of corrupt documents (x10).
   *
-  * The expression itself keeps no per-row state: the DSL binds it inside
-  * [[XmlMemoParseExpr]], whose row memo makes a bound projection's
-  * duplicate references O(1), and `graft.plans.DedupXmlParses` pulls it
-  * out of that wrapper into a Project that evaluates it once per row.
+  * The expression keeps no per-row state. Its type is its read schema,
+  * known before analysis, so the DSL binds each parse once in a Catalyst
+  * `With` and every member reads it through a typed ref: Spark's "Rewrite
+  * With expression" batch evaluates it once per row in a Project below.
   */
 case class XmlFlatParseExpr(child: Expression, schema: StructType)
   extends UnaryExpression {
@@ -45,8 +45,6 @@ case class XmlFlatParseExpr(child: Expression, schema: StructType)
   // from_xml path did. TimeZone only affects date/timestamp fields, which
   // a native read schema cannot contain.
   @transient private lazy val fallback = {
-    val opts = Map.newBuilder[String, String]
-    Bind.xmlOptions.forEach((k, v) => opts += (k -> v))
     def nullify(dt: DataType): DataType = dt match {
       case st: StructType => StructType(st.fields.map(f =>
         f.copy(dataType = nullify(f.dataType), nullable = true)))
@@ -54,7 +52,7 @@ case class XmlFlatParseExpr(child: Expression, schema: StructType)
       case other => other
     }
     org.apache.spark.sql.catalyst.expressions.xml.XmlToStructsEvaluator(
-      opts.result(), nullify(schema), "_corrupt_record", Some("UTC"),
+      Bind.xmlOptions, nullify(schema), "_corrupt_record", Some("UTC"),
       Literal(UTF8String.fromString(""), StringType))
   }
 

@@ -71,11 +71,9 @@ object XmlStax {
   private def factory: XMLInputFactory = factoryTL.get()
 
   /** The spec key names one (patterns, fromRoot, capture flags) spec; the
-    * expressions precompute their compiled-pattern and row-memo keys
-    * ([[XmlChildrenExpr.siteKey]]) from it once per instance. The
-    * needOuter/needValue flags are part of the key: a pruned extraction
-    * (empty outer/value) must never be served to a consumer that reads
-    * those fields. */
+    * expressions compute it once per instance, and it keys their compiled
+    * patterns. The needOuter/needValue flags are part of the key, so a
+    * spec's cached state never crosses capture flags. */
   def specKey(patterns: Seq[String], fromRoot: Boolean, needOuter: Boolean,
       needValue: Boolean): String =
     patterns.mkString("\u0000") + "\u0001" + fromRoot + needOuter + needValue

@@ -2,7 +2,8 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.plans.{AsOfJoinStrategy, DedupXmlParses, PushLambdaThroughGetItem}
+import graft.plans.{AsOfJoinStrategy, PushLambdaThroughGetItem,
+  SummaryRewrite}
 
 /** The shared test session plans like the gates: it carries the
   * GraftExtensions rules and strategy, and the rule-off session does not. */
@@ -11,8 +12,7 @@ class SharedSparkSpec extends AnyFunSuite with SharedSpark {
   test("shared session: GraftExtensions optimizer rules and planner " +
       "strategy are registered, with the gate confs") {
     val rules = spark.sessionState.optimizer.extendedOperatorOptimizationRules
-    assert(rules.contains(DedupXmlParses), rules)
-    assert(rules.contains(PushLambdaThroughGetItem), rules)
+    assert(rules == Seq(PushLambdaThroughGetItem, SummaryRewrite), rules)
     assert(spark.sessionState.planner.strategies.contains(AsOfJoinStrategy))
     Sessions.confs(SharedSpark.Cpus).foreach { case (k, v) =>
       assert(spark.conf.get(k) == v, k)
@@ -23,7 +23,7 @@ class SharedSparkSpec extends AnyFunSuite with SharedSpark {
     ruleOff { sp =>
       assert(!(sp eq spark))
       val rules = sp.sessionState.optimizer.extendedOperatorOptimizationRules
-      assert(!rules.contains(DedupXmlParses), rules)
+      assert(!rules.contains(PushLambdaThroughGetItem), rules)
       assert(!sp.sessionState.planner.strategies.contains(AsOfJoinStrategy))
       Sessions.confs(SharedSpark.Cpus).foreach { case (k, v) =>
         assert(sp.conf.get(k) == v, k)

@@ -14,7 +14,6 @@ class BmpHeaderSpec extends AnyFunSuite {
 
   /** Each walker's result, with None, Nil and 0 mapped to None. */
   private def walks(m: Array[Byte]): Seq[(String, Option[Any])] = Seq(
-    "bmpChannelStats" -> bmpChannelStats(m),
     "bmpLuminance" -> bmpLuminance(m),
     "bmpGrayLevels" -> Some(bmpGrayLevels(m)).filter(_.nonEmpty),
     "resizeBmp" -> resizeBmp(m, 2, 2),

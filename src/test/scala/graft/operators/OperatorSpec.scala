@@ -2918,7 +2918,7 @@ class OperatorSpec extends AnyFunSuite with SharedSpark {
       "order B/G/R, exact sums") {
     // 2x2, fill cycles 0..5: rowSize=8 (2 pad bytes per row)
     val bmp = Multimodal.buildBmp(2, 2, Array[Byte](0, 1, 2, 3, 4, 5))
-    val stats = Multimodal.bmpChannelStats(bmp).get
+    val stats = Multimodal.channelStats(bmp).get
     // row0 bytes: px(0,0)=0,1,2 px(1,0)=3,4,5 pad=0,1; row1 starts at
     // offset 8 in the cycle -> 2,3,4 / 5,0,1, pad
     val exp = Map(
@@ -2927,11 +2927,11 @@ class OperatorSpec extends AnyFunSuite with SharedSpark {
       2 -> ((2L + 5 + 4 + 1), 1, 5)) // R: bytes 2,5 / 4,1
     stats.foreach { s =>
       val (sum, mn, mx) = exp(s.channel)
-      assert(s.n_pixels == 4 && s.c_sum == sum &&
-        s.c_min == mn && s.c_max == mx, s"channel ${s.channel}")
+      assert(s.n == 4 && s.sum == sum && s.min == mn && s.max == mx,
+        s"channel ${s.channel}")
     }
     // non-BMP payload refuses
-    assert(Multimodal.bmpChannelStats(Array[Byte](1, 2, 3)).isEmpty)
+    assert(Multimodal.channelStats(Array[Byte](1, 2, 3)).isEmpty)
   }
 
   test("t44 assoc pairMeasures: hand-computed support/confidence/lift, " +
@@ -3037,7 +3037,7 @@ class OperatorSpec extends AnyFunSuite with SharedSpark {
     assert(cb.getInt(18) == 1 && cb.getInt(22) == 2)
     assert(Multimodal.bmpPixelChecksum(clipped) == 2L * (6 + 7 + 8))
     // the crop round-trips through the channel-stats decoder
-    assert(Multimodal.bmpChannelStats(clipped).get.map(_.n_pixels).sum == 6)
+    assert(Multimodal.channelStats(clipped).get.map(_.n).sum == 6)
     // anchor outside the source, or junk payload -> None
     assert(Multimodal.cropBmp(bmp, 3, 0, 1, 1).isEmpty)
     assert(Multimodal.cropBmp(bmp, 0, 2, 1, 1).isEmpty)
@@ -4390,6 +4390,7 @@ class OperatorSpec extends AnyFunSuite with SharedSpark {
     }
     val bmp = Multimodal.buildBmp(2, 2, bytes)
     val got = Multimodal.channelStats(bmp).get
+      .map(s => (s.channel, s.n, s.sum, s.sumSq))
     // B values: 0,1,20,21 -> sum 42, sq 0+1+400+441=842
     // G: 1,2,21,22 -> 46, 1+4+441+484=930; R: 2,3,22,23 -> 50, 1026
     assert(got == Seq((0, 4L, 42L, 842L), (1, 4L, 46L, 930L),

@@ -5,15 +5,9 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SharedSpark
-import graft.xml.{XmlMemoParseExpr, XmlParser}
+import graft.xml.XmlParser
 
 class PlanSpec extends AnyFunSuite with SharedSpark {
-
-  private def parseCount(plan: org.apache.spark.sql.catalyst.plans.logical
-      .LogicalPlan): Int =
-    plan.collect { case p =>
-      p.expressions.map(_.collect { case _: XmlMemoParseExpr => 1 }.sum).sum
-    }.sum
 
   // flat native specs parse via XmlFlatParseExpr instead of from_xml
   private def flatParseCount(plan: org.apache.spark.sql.catalyst.plans
@@ -49,32 +43,29 @@ class PlanSpec extends AnyFunSuite with SharedSpark {
       }.sum).sum
     }.sum
 
-  test("DedupXmlParses rewrites duplicate parses to a single evaluation") {
-    val before = ruleOff(multiMemberQuery(_).queryExecution.optimizedPlan)
+  test("multi-member query: one flat parse with and without " +
+      "GraftExtensions") {
     // the spec is flat (all scalars), so the parse is XmlFlatParseExpr;
-    // every member reference duplicates it in the optimized Project
-    assert(flatParseCount(before) > 1) // the duplication the rule exists for
-    val after = DedupXmlParses(before)
-    // exactly one parse per row survives, nothing behind a memo wrapper
-    assert(flatParseCount(after) == 1)
-    assert(parseCount(after) == 0)
-    assert(rawParseCount(after) == 0)
-    // the rule is idempotent (stable under the fixpoint batch)
-    assert(DedupXmlParses(after).fastEquals(after))
+    // every member reads it through the With the DSL binds it in, which
+    // Spark's own optimizer rewrites, so no session extension is needed
+    for (plan <- Seq(multiMemberQuery(spark).queryExecution.optimizedPlan,
+        ruleOff(multiMemberQuery(_).queryExecution.optimizedPlan))) {
+      assert(flatParseCount(plan) == 1, plan.treeString)
+      assert(rawParseCount(plan) == 0, plan.treeString)
+    }
   }
 
   test("extension-registered session: one parse in the plan, same results") {
     val baseline = ruleOff(multiMemberQuery(_).collect().toSeq)
     val df = multiMemberQuery(spark)
-    assert(parseCount(df.queryExecution.optimizedPlan) == 0)
     assert(flatParseCount(df.queryExecution.optimizedPlan) == 1)
     assert(df.collect().toSeq == baseline)
   }
 
-  test("DedupXmlParses leaves a nested parse inside a transform lambda " +
-      "to the row memo; rows equal the rule-off result") {
-    // array elements holding a nested obj: each element's parse is a
-    // memo-wrapped from_xml over the lambda variable's outer XML
+  test("lambda-element parse stays inline; rows equal the rule-off result") {
+    // array elements holding a nested obj: each element's parse reads the
+    // lambda variable's outer XML, so it cannot be bound outside the
+    // lambda and runs once per reference (a stated limit)
     val parser = XmlParser.array { c =>
       c.obj("item") { it =>
         struct(it.int("id").as("id"),
@@ -96,14 +87,11 @@ class PlanSpec extends AnyFunSuite with SharedSpark {
 
     val df = query(spark)
     val plan = df.queryExecution.optimizedPlan
-    // the rule ran and left nothing to pull ...
-    assert(DedupXmlParses(plan).fastEquals(plan))
-    // ... because every surviving memo-wrapped parse reads the lambda
-    // variable
-    val memos = plan.collect { case p => p.expressions }.flatten
-      .flatMap(_.collect { case m: XmlMemoParseExpr => m })
-    assert(memos.nonEmpty, plan.treeString)
-    assert(memos.forall(_.exists(_.isInstanceOf[
+    // every parse in the plan reads the lambda variable
+    val parses = plan.collect { case p => p.expressions }.flatten
+      .flatMap(_.collect { case p: graft.xml.XmlFlatParseExpr => p })
+    assert(parses.nonEmpty, plan.treeString)
+    assert(parses.forall(_.exists(_.isInstanceOf[
       org.apache.spark.sql.catalyst.expressions.NamedLambdaVariable])))
     assert(df.collect().map(_.toString).sorted.toSeq == baseline)
   }
@@ -116,9 +104,8 @@ class PlanSpec extends AnyFunSuite with SharedSpark {
     val plan = graft.queries.XmlQueries
       .x4FirstWinsAlt(spark, "/root/testdata/sf0.001")
       .queryExecution.optimizedPlan
-    var fromXml, flat, stax, memo = 0
+    var fromXml, flat, stax = 0
     plan.foreach(_.expressions.foreach(_.foreach {
-      case _: XmlMemoParseExpr => memo += 1
       case _: graft.xml.XmlFlatParseExpr => flat += 1
       case _: graft.xml.XmlChildrenExpr => stax += 1
       case _: graft.xml.XmlFirstChildExpr => stax += 1
@@ -127,11 +114,10 @@ class PlanSpec extends AnyFunSuite with SharedSpark {
     }))
     // one flat native parse feeds every struct member (x4's spec — id,
     // v, missing_arr — is flat, so no from_xml remains at all); one
-    // extraction feeds the alternatives array; no memo wrappers
+    // extraction feeds the alternatives array
     assert(flat == 1, s"expected 1 flat parse, got $flat")
     assert(fromXml == 0, s"expected 0 from_xml, got $fromXml")
     assert(stax == 1, s"expected 1 extraction, got $stax")
-    assert(memo == 0, s"expected 0 memo-wrapped parses, got $memo")
   }
 
   test("nested spec optimized plan: no from_xml, one extraction per " +
@@ -194,7 +180,6 @@ class PlanSpec extends AnyFunSuite with SharedSpark {
       exprs.count(e => f.applyOrElse(e, (_: Any) => false))
     assert(count { case e => e.prettyName == "from_xml" } == 0,
       plan.treeString)
-    assert(count { case _: XmlMemoParseExpr => true } == 0, plan.treeString)
     assert(count { case _: graft.xml.XmlFirstChildExpr => true } == 0,
       plan.treeString)
     // one extraction per distinct spec: the document's [lines, ext_*,
@@ -206,15 +191,14 @@ class PlanSpec extends AnyFunSuite with SharedSpark {
       Set(Set("lines", "ext_*", "ship"), Set("item", "fee")),
       plan.treeString)
     assert(extractions.size == 2, plan.treeString)
-    assert(extractions.exists(e => !e.memo && e.needOuter))
+    assert(extractions.exists(_.needOuter))
     // one parse each: the root, the ship fragment and the lines
-    // container's attribute (pulled out of the transform lambda)
+    // container's attribute (bound outside the element lambda)
     val parses = exprs.collect { case e: graft.xml.XmlFlatParseExpr => e }
     assert(parses.size == 3, plan.treeString)
     assert(parses.map(_.schema.fieldNames.toSet).toSet == Set(
       Set("_id", "_region", "cust", "note", "qty"), Set("city", "zip"),
       Set("_count")))
-    assert(DedupXmlParses(plan).fastEquals(plan))
     assert(df.collect().map(_.toString).sorted.toSeq == baseline)
   }
 
@@ -245,6 +229,50 @@ class PlanSpec extends AnyFunSuite with SharedSpark {
     }.sum
     assert(lambdas == 0) // the interpreted transform is gone
     assert(df.collect().toSeq == baseline)
+  }
+
+  test("x3 optimized plan: one fused extraction feeds every read of " +
+      "element 0") {
+    // PushLambdaThroughGetItem reads the element at every use of the
+    // lambda variable, so it binds the array once
+    val plan = graft.queries.XmlQueries
+      .x3WildcardTag(spark, "/root/testdata/sf0.001")
+      .queryExecution.optimizedPlan
+    val at = plan.collect { case p => p.expressions }.flatten
+      .map(_.collect { case _: graft.xml.XmlChildrenAtExpr => 1 }.sum).sum
+    assert(at == 1, plan.treeString)
+  }
+
+  test("XML gates: one parse or extraction per spec, with and without " +
+      "GraftExtensions") {
+    // (flat parses, extractions, fused container descents) per gate
+    val expected = Map(
+      "x1_xml_scan_cast" -> (1, 0, 0), "x2_xml_array_order" -> (0, 1, 0),
+      "x3_xml_wildcard_tag" -> (1, 0, 1), "x4_xml_firstwins_alt" -> (1, 1, 0),
+      "x5_xml_custom_composite" -> (2, 1, 0),
+      "x6_xml_mixed_content" -> (1, 0, 0), "x7_xml_file_wildcard" -> (1, 0, 1),
+      "x9_xml_gzip" -> (1, 0, 1), "x10_xml_malformed" -> (1, 1, 0),
+      "x11_xml_write_roundtrip" -> (1, 0, 0), "x12_xsd_schema" -> (1, 0, 0),
+      "s15_stream_xml_sink" -> (1, 0, 0))
+    def inventory(sp: SparkSession, gate: String) = {
+      val plan = graft.SparkEntry.queries(gate)(sp, "/root/testdata/sf0.001")
+        .queryExecution.optimizedPlan
+      var flat, kids, at, other = 0
+      plan.foreach(_.expressions.foreach(_.foreach {
+        case _: graft.xml.XmlFlatParseExpr => flat += 1
+        case _: graft.xml.XmlChildrenExpr => kids += 1
+        case _: graft.xml.XmlChildrenAtExpr => at += 1
+        case e if e.prettyName == "from_xml" ||
+          e.isInstanceOf[graft.xml.XmlFirstChildExpr] => other += 1
+        case _ =>
+      }))
+      assert(other == 0, plan.treeString)
+      (flat, kids, at)
+    }
+    expected.foreach { case (gate, want) =>
+      assert(inventory(spark, gate) == want, gate)
+      assert(ruleOff(inventory(_, gate)) == want, s"$gate (rule-off)")
+    }
   }
 
   test("AsOfJoinExec: first-class operator matches union-and-carry; " +

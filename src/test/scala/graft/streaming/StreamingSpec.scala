@@ -595,8 +595,8 @@ class StreamingSpec extends AnyFunSuite with SharedSpark {
       .queryName(name).start()
     try {
       // same glob, different data-derived tags, alternating alt branches —
-      // fed as THREE separate micro-batches so the per-thread memo cache
-      // is re-entered under fresh codegen'd projections each time
+      // fed as THREE separate micro-batches so the bound parses are
+      // re-evaluated under fresh codegen'd projections each time
       in.addData("<rec><vals><q_A>1.5</q_A></vals><item1>3</item1></rec>")
       q.processAllAvailable()
       in.addData("<rec><vals><q_B>2.5</q_B></vals><item2>4</item2></rec>")

@@ -140,14 +140,11 @@ class XmlFastScanSpec extends AnyFunSuite {
       StructField("arr", ArrayType(StructType(Seq(
         StructField("zz", ArrayType(StringType))))))))
     val spec = XmlFastScan.FlatSpec.of(schema).get
-    val evaluator = {
-      val opts = Map.newBuilder[String, String]
-      Bind.xmlOptions.forEach((k, v) => opts += (k -> v))
+    val evaluator =
       org.apache.spark.sql.catalyst.expressions.xml.XmlToStructsEvaluator(
-        opts.result(), schema, "_corrupt_record", Some("UTC"),
+        Bind.xmlOptions, schema, "_corrupt_record", Some("UTC"),
         org.apache.spark.sql.catalyst.expressions.Literal(
           UTF8String.fromString(""), StringType))
-    }
     val toScala = org.apache.spark.sql.catalyst.CatalystTypeConverters
       .createToScalaConverter(schema)
     val rnd = new scala.util.Random(4242)
@@ -249,10 +246,8 @@ class XmlFastScanSpec extends AnyFunSuite {
   private def sparkEval(schema: org.apache.spark.sql.types.StructType)
       : String => Any = {
     import org.apache.spark.sql.types.StringType
-    val opts = Map.newBuilder[String, String]
-    Bind.xmlOptions.forEach((k, v) => opts += (k -> v))
     val ev = org.apache.spark.sql.catalyst.expressions.xml
-      .XmlToStructsEvaluator(opts.result(), schema, "_corrupt_record",
+      .XmlToStructsEvaluator(Bind.xmlOptions, schema, "_corrupt_record",
         Some("UTC"), org.apache.spark.sql.catalyst.expressions.Literal(
           UTF8String.fromString(""), StringType))
     val toScala = org.apache.spark.sql.catalyst.CatalystTypeConverters

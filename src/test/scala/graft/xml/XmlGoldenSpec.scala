@@ -21,8 +21,7 @@ class XmlGoldenSpec extends AnyFunSuite with SharedSpark {
   import Golden._
 
   /** Registers `body` twice: in the shared session, and in the rule-off
-    * session, whose plans keep the row memo (`XmlMemoParseExpr` over
-    * `XmlRowMemo`) that a session without GraftExtensions runs. */
+    * session, so results are checked not to depend on GraftExtensions. */
   private def golden(name: String)(body: SparkSession => Unit): Unit = {
     test(name)(body(spark))
     test(s"$name (rule-off session)")(ruleOff(body))

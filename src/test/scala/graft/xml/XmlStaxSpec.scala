@@ -140,7 +140,6 @@ class XmlStaxSpec extends AnyFunSuite {
       XmlStax.children(xml, Seq("k"), fromRoot = true,
         XmlStax.specKey(Seq("k"), fromRoot = true, o, v), o, v).head
     // pruned first, then fuller captures: each read sees its own fields
-    // (the row memo's own keying is pinned by the "row memo" tests)
     val pruned = run(o = false, v = false)
     assert(pruned.tag == "k" && pruned.attrs == Seq(("a", "1")))
     assert(pruned.outer == "" && pruned.value == "")
@@ -154,41 +153,36 @@ class XmlStaxSpec extends AnyFunSuite {
       full.value == "<s>v</s>txt")
   }
 
-  test("row memo: a pruned and a full extraction of one row keep their " +
-      "own fields") {
+  test("StAX fallback: pruned and full extractions of one row keep their " +
+      "fields") {
     // mixed content: the fast scan bails, so every read below goes through
-    // the memoized StAX fallback of XmlChildrenExpr.evalJava
+    // the StAX fallback of XmlChildrenExpr.extract
     val row = UTF8String.fromString("<r><k a='1'><s>v</s>txt</k><j/></r>")
     def first(o: Boolean) = {
-      val key = XmlChildrenExpr.siteKey(Seq("k"), fromRoot = true, o, true)
+      val key = XmlStax.specKey(Seq("k"), fromRoot = true, o, true)
       assert(XmlFastScan.children(row, Seq("k"), key, fromRoot = true, o,
         needValue = true) eq XmlFastScan.Bail)
-      val c = XmlChildrenExpr.evalJava(row, Seq("k"), fromRoot = true, key,
+      val c = XmlChildrenExpr.extract(row, Seq("k"), fromRoot = true, key,
         o, needValue = true).getStruct(0, 4)
       (c.getUTF8String(1).toString, c.getUTF8String(2).toString)
     }
-    val pruned = ("", "<s>v</s>txt")
-    val full = ("<k a=\"1\"><s>v</s>txt</k>", "<s>v</s>txt")
-    assert(first(o = false) == pruned)
-    assert(first(o = true) == full)
-    // second round: both are memo hits now
-    assert(first(o = false) == pruned)
-    assert(first(o = true) == full)
+    assert(first(o = false) == ("", "<s>v</s>txt"))
+    assert(first(o = true) == ("<k a=\"1\"><s>v</s>txt</k>", "<s>v</s>txt"))
   }
 
-  test("row memo: a row over a reused buffer, overwritten with another " +
-      "document of the same length, is never a stale hit") {
-    // each memo entry must own a copy of its key: the first document's
-    // entry still hits (same result object) after the buffer changed
+  test("a row over a reused buffer, overwritten in place, reads the new " +
+      "document") {
+    // the extraction and the flat parse keep no per-row state: a row that
+    // aliases a reused buffer reads whatever the buffer holds now
     val docA = "<r><k a='1'><s>v</s>aaa</k></r>"
     val buf = docA.getBytes("UTF-8")
     val row = UTF8String.fromBytes(buf) // aliases buf, no copy
-    val key = XmlChildrenExpr.siteKey(Seq("k"), fromRoot = true,
+    val key = XmlStax.specKey(Seq("k"), fromRoot = true,
       needOuter = false, needValue = true)
-    // the fast scan bails here, so the StAX result is memoized
+    // the fast scan bails here, so the StAX fallback runs
     assert(XmlFastScan.children(row, Seq("k"), key, fromRoot = true,
       needOuter = false, needValue = true) eq XmlFastScan.Bail)
-    def kids(u: UTF8String) = XmlChildrenExpr.evalJava(u, Seq("k"),
+    def kids(u: UTF8String) = XmlChildrenExpr.extract(u, Seq("k"),
       fromRoot = true, key, needOuter = false, needValue = true)
     def value(a: org.apache.spark.sql.catalyst.util.ArrayData) =
       a.getStruct(0, 4).getUTF8String(2).toString
@@ -197,14 +191,12 @@ class XmlStaxSpec extends AnyFunSuite {
     System.arraycopy("<r><k a='1'><s>v</s>bbb</k></r>".getBytes("UTF-8"), 0,
       buf, 0, buf.length)
     assert(value(kids(row)) == "<s>v</s>bbb")
-    assert(kids(UTF8String.fromString(docA)) eq first)
-    // the parse memo (the DSL's wrapper of every parse) memoizes every
-    // row, fast path included
+    // the flat parse, fast path included
     import org.apache.spark.sql.types._
-    val flat = XmlMemoParseExpr(XmlFlatParseExpr(
+    val flat = XmlFlatParseExpr(
       org.apache.spark.sql.catalyst.expressions.BoundReference(0,
         StringType, nullable = true),
-      StructType(Seq(StructField("s", ArrayType(StringType))))))
+      StructType(Seq(StructField("s", ArrayType(StringType)))))
     def parse(u: UTF8String): AnyRef =
       flat.eval(org.apache.spark.sql.catalyst.InternalRow(u))
         .asInstanceOf[AnyRef]
@@ -219,6 +211,5 @@ class XmlStaxSpec extends AnyFunSuite {
     System.arraycopy("<r><s>ddd</s></r>".getBytes("UTF-8"), 0, buf2, 0,
       buf2.length)
     assert(flatValue(parse(row2)) == "ddd")
-    assert(parse(UTF8String.fromString(docC)) eq firstFlat)
   }
 }
