@@ -9,6 +9,8 @@ import org.apache.spark.sql.catalyst.expressions.{CommonExpressionDef,
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.xml.XmlFastScan.{AttrF, FlatSpec, ObjF, ScalarF}
+
 /** The reference engine's declarative parser DSL (reference
   * XmlStreamProcessor/Parser.cs:501-514, `INode`), re-expressed Spark-first.
   *
@@ -85,7 +87,10 @@ trait XmlNode {
 // ---------------------------------------------------------------------------
 
 private[xml] sealed trait Member { def name: String }
-private[xml] final case class ScalarM(name: String) extends Member
+/** A scalar child, with the [[XmlValues]] parsers its accessors read it by. */
+private[xml] final case class ScalarM(name: String,
+    parsers: mutable.LinkedHashSet[Int] = mutable.LinkedHashSet.empty[Int])
+  extends Member
 private[xml] final case class ObjM(name: String, f: XmlNode => Column,
     spec: ObjSpec) extends Member
 private[xml] final case class ArrM(name: String, f: XmlNode => Column,
@@ -107,14 +112,14 @@ private[xml] final class ObjSpec {
   def arrayIsNative(m: ArrM): Boolean =
     m.spec.members.size == 1 && m.spec.attrs.isEmpty &&
       (m.spec.members.head match {
-        case (n, ScalarM(_))     => !n.contains("*")
+        case (n, _: ScalarM)     => !n.contains("*")
         case (n, o: ObjM)        => !n.contains("*") && o.spec.isNative
         case _                   => false
       })
 
   /** Whole spec expressible as one native read schema. */
   def isNative: Boolean = members.forall {
-    case (n, ScalarM(_)) => !n.contains("*")
+    case (n, _: ScalarM) => !n.contains("*")
     case (n, o: ObjM)    => !n.contains("*") && o.spec.isNative
     case (n, a: ArrM)    => !n.contains("*") && arrayIsNative(a)
     case (_, _: CustomM) => false
@@ -126,13 +131,13 @@ private[xml] final class ObjSpec {
     val fields = mutable.ArrayBuffer.empty[StructField]
     attrs.foreach(a => fields += StructField("_" + a, StringType))
     members.foreach {
-      case (n, ScalarM(_)) if !n.contains("*") =>
+      case (n, _: ScalarM) if !n.contains("*") =>
         fields += StructField(n, ArrayType(StringType))
       case (n, o: ObjM) if !n.contains("*") && o.spec.isNative =>
         fields += StructField(n, ArrayType(o.spec.nativeReadSchema))
       case (n, a: ArrM) if !n.contains("*") && arrayIsNative(a) =>
         val (en, et) = a.spec.members.head match {
-          case (n2, ScalarM(_)) => (n2, StringType: DataType)
+          case (n2, _: ScalarM) => (n2, StringType: DataType)
           case (n2, o: ObjM)    => (n2, o.spec.nativeReadSchema: DataType)
           case _ => throw new IllegalStateException("unreachable")
         }
@@ -143,9 +148,28 @@ private[xml] final class ObjSpec {
     StructType(fields.toSeq)
   }
 
+  /** The typed parse of [[nativeReadSchema]]'s fields, in its order: each
+    * exact scalar read by its parsers (a strict one as `str`,
+    * [[XmlValues.typedBy]]), each native obj and each native
+    * array's container as its first occurrence's struct (a container's
+    * elements: all of them, scalars as strings). */
+  def typedSpec: FlatSpec = FlatSpec(attrs.toSeq.map(AttrF(_)) ++
+    members.toSeq.collect {
+      case (n, s: ScalarM) if !n.contains("*") =>
+        ScalarF(n, s.parsers.toSeq.map(XmlValues.typedBy).distinct)
+      case (n, o: ObjM) if !n.contains("*") && o.spec.isNative =>
+        ObjF(n, o.spec.typedSpec, first = true)
+      case (n, a: ArrM) if !n.contains("*") && arrayIsNative(a) =>
+        val elem = a.spec.members.head match {
+          case (en, o: ObjM) => ObjF(en, o.spec.typedSpec)
+          case (en, _)       => ScalarF(en)
+        }
+        ObjF(n, FlatSpec(Seq(elem)), first = true)
+    })
+
   /** Child-name patterns the StAX extractor must capture. */
   def staxPatterns: Seq[String] = members.collect {
-    case (n, ScalarM(_)) if n.contains("*") => n
+    case (n, _: ScalarM) if n.contains("*") => n
     case (n, o: ObjM) if n.contains("*") || !o.spec.isNative => n
     case (n, a: ArrM) if n.contains("*") || !arrayIsNative(a) => n
     case (n, _: CustomM) => n
@@ -176,18 +200,24 @@ private[xml] final class ObjSpec {
 // ---------------------------------------------------------------------------
 
 private[xml] final class RecNode(spec: ObjSpec) extends XmlNode {
-  private def scalar(name: String): Column = {
-    spec.members.getOrElseUpdate(name, ScalarM(name))
-    lit(null).cast(StringType)
+  private def scalar(name: String, parser: Int): Column = {
+    spec.members.getOrElseUpdate(name, ScalarM(name)) match {
+      case s: ScalarM => s.parsers += parser
+      case _          =>
+    }
+    lit(null).cast(XmlValues.dataType(parser))
   }
-  override def int(name: String): Column = scalar(name).cast("int")
-  override def nullInt(name: String): Column = scalar(name).cast("int")
-  override def nullIntStrict(name: String): Column = scalar(name).cast("int")
-  override def nullBool(name: String): Column = scalar(name).cast("boolean")
+  override def int(name: String): Column = scalar(name, XmlValues.IntStrict)
+  override def nullInt(name: String): Column = scalar(name, XmlValues.NullInt)
+  override def nullIntStrict(name: String): Column =
+    scalar(name, XmlValues.NullIntStrict)
+  override def nullBool(name: String): Column =
+    scalar(name, XmlValues.NullBool)
   override def nullDecimal(name: String): Column =
-    scalar(name).cast(DecimalType(38, 18))
-  override def nullDate(name: String): Column = scalar(name).cast("timestamp")
-  override def str(name: String): Column = scalar(name)
+    scalar(name, XmlValues.NullDecimal)
+  override def nullDate(name: String): Column =
+    scalar(name, XmlValues.nullDateParser)
+  override def str(name: String): Column = scalar(name, XmlValues.Str)
   override def attribute(name: String): Column = {
     spec.attrs += name
     lit(null).cast(StringType)
@@ -269,12 +299,13 @@ private[xml] object Bind {
     (needOuter, needValue)
   }
 
-  /** Native array member binding (single exact alternative). */
+  /** Native array member binding (single exact alternative);
+    * `containerFirst` is the container's typed struct ([[ObjSpec.typedSpec]]). */
   def bindNativeArray(containerFirst: Column, m: ArrM): Column = {
     val (elemName, elemMember) = m.spec.members.head
     val elemType: DataType = elemMember match {
-      case ScalarM(_) => StringType
-      case o: ObjM    => o.spec.nativeReadSchema
+      case _: ScalarM => StringType
+      case o: ObjM    => o.spec.typedSpec.schema
       case _          => throw new IllegalStateException("unreachable")
     }
     val inner = containerFirst.getField(elemName)
@@ -283,7 +314,7 @@ private[xml] object Bind {
     val elems = coalesce(inner, array().cast(ArrayType(elemType)))
     when(containerFirst.isNotNull,
       transform(elems, x => elemMember match {
-        case ScalarM(_) =>
+        case _: ScalarM =>
           // single scalar alternative: λ sees the element's own value
           m.f(new NativeAltScalarNode(elemName, x, m.spec))
         case o: ObjM =>
@@ -354,27 +385,34 @@ private[xml] final class Bind {
       .foldLeft(tree(body)) { case (b, (_, ds)) => With(b, ds) })
   }
 
-  /** The per-row record parse for a native read schema, bound once:
+  /** The per-row record parse for a native read schema:
     * [[XmlFlatParseExpr]], a one-pass byte scanner with per-row fallback
     * to Spark's own XML evaluator, an order of magnitude cheaper than
     * from_xml's per-row Woodstox reader; from_xml (`XmlToStructs`) itself
     * only for a schema the scanner cannot serve. */
-  def fx(c: Column, st: StructType): Column = once(
-    if (XmlFastScan.FlatSpec.of(st).isDefined)
-      XmlFlatParseExpr(input(c), st)
-    else XmlToStructs(st, Bind.xmlOptions, input(c)))
+  private def parseOf(c: Column, st: StructType): Expression =
+    if (XmlFastScan.FlatSpec.of(st).isDefined) XmlFlatParseExpr(input(c), st)
+    else XmlToStructs(st, Bind.xmlOptions, input(c))
+
+  /** The per-row typed parse of `spec`'s native fields, bound once
+    * ([[XmlTypedParseExpr]]): the members read its fields as they are. */
+  def typedParse(c: Column, spec: ObjSpec): Column = {
+    val ts = spec.typedSpec
+    once(XmlTypedParseExpr(parseOf(c, spec.nativeReadSchema), ts,
+      ts.parsersUsed.filter(_ != XmlValues.Str).map(XmlValues.cell)))
+  }
 
   /** Bind an obj spec against its raw outer XML (document or extracted
     * child). Chooses native vs StAX path per spec. */
-  def bindObj(outer: Column, tagC: Column, m: ObjM): Column = {
-    val schema = m.spec.nativeReadSchema
+  def bindObj(outer: Column, tagC: Column, m: ObjM): Column =
     if (m.spec.isNative)
-      m.f(new NativeBindNode(fx(outer, schema), tagC, m.spec))
+      m.f(new NativeBindNode(typedParse(outer, m.spec), tagC, m.spec))
     else {
-      val parsed = if (schema.nonEmpty) fx(outer, schema) else lit(null)
+      val parsed =
+        if (m.spec.nativeReadSchema.nonEmpty) typedParse(outer, m.spec)
+        else lit(null)
       m.f(new StaxBindNode(outer, parsed, tagC, m.spec, this))
     }
-  }
 
   /** Bind an obj member from an extracted child struct<tag,xml,value,attrs>.
     * Attr/tag-only specs bind straight off the child's `attrs` map captured
@@ -400,8 +438,9 @@ private[xml] final class Bind {
       // the element lambda, a def read once is inlined there and runs per
       // element. The optimizer folds `array(x)[0]` back into `x`, and
       // PushLambdaThroughGetItem rewrites `get`; neither touches this form
-      val attrs = fx(containerOuter, StructType(
-        m.spec.attrs.toSeq.map(a => StructField("_" + a, StringType))))
+      val attrsOnly = new ObjSpec
+      attrsOnly.attrs ++= m.spec.attrs
+      val attrs = typedParse(containerOuter, attrsOnly)
       element_at(transform(array_repeat(attrs, 1), a => bound(Some(a))), 1)
     }
   }
@@ -423,6 +462,7 @@ private[xml] final class Bind {
 }
 
 private[xml] abstract class BaseBindNode(spec: ObjSpec) extends XmlNode {
+  /** The raw string of scalar `name`, for nodes over strings. */
   protected def scalarRaw(name: String): Column
   protected def attrRaw(name: String): Column
   protected def objBound(m: ObjM): Column
@@ -434,17 +474,36 @@ private[xml] abstract class BaseBindNode(spec: ObjSpec) extends XmlNode {
       s"graft.xml: '$name' not registered during recording — the parser " +
         "lambda must be deterministic (same accessor calls in both phases)"))
 
-  override def int(name: String): Column = XmlValues.intStrict(scalarRaw(name))
-  override def nullInt(name: String): Column = XmlValues.nullInt(scalarRaw(name))
+  /** Scalar `name` read by `parser`: the raw string through
+    * [[XmlValues.parse]], unless the node reads a typed parse. */
+  protected def scalar(name: String, parser: Int): Column =
+    XmlValues.parse(parser, scalarRaw(name))
+
+  /** Scalar `name` read by `parser` (which the recording registered) from
+    * the typed parse `parsed`: its field, or for a strict parser the
+    * string field through [[XmlValues.parse]]. */
+  protected def typedField(parsed: Column, name: String,
+      parser: Int): Column = member(name) match {
+    case s: ScalarM if s.parsers.exists(XmlValues.current(_) == parser) =>
+      val by = XmlValues.typedBy(parser)
+      val f = parsed.getField(XmlFastScan.typedName(name, by))
+      if (by == parser) f else XmlValues.parse(parser, f)
+    case _ => throw new IllegalStateException(s"graft.xml: '$name' read as " +
+      s"${XmlValues.parserNames(parser)} but not recorded so — the parser " +
+      "lambda must be deterministic (same accessor calls in both phases)")
+  }
+
+  override def int(name: String): Column = scalar(name, XmlValues.IntStrict)
+  override def nullInt(name: String): Column = scalar(name, XmlValues.NullInt)
   override def nullIntStrict(name: String): Column =
-    XmlValues.nullIntStrict(scalarRaw(name))
+    scalar(name, XmlValues.NullIntStrict)
   override def nullBool(name: String): Column =
-    XmlValues.nullBool(scalarRaw(name))
+    scalar(name, XmlValues.NullBool)
   override def nullDecimal(name: String): Column =
-    XmlValues.nullDecimal(scalarRaw(name))
+    scalar(name, XmlValues.NullDecimal)
   override def nullDate(name: String): Column =
-    XmlValues.nullDate(scalarRaw(name))
-  override def str(name: String): Column = XmlValues.str(scalarRaw(name))
+    scalar(name, XmlValues.nullDateParser)
+  override def str(name: String): Column = scalar(name, XmlValues.Str)
   override def attribute(name: String): Column = attrRaw(name)
   override def obj(name: String)(f: XmlNode => Column): Column =
     objBound(member(name).asInstanceOf[ObjM])
@@ -454,29 +513,33 @@ private[xml] abstract class BaseBindNode(spec: ObjSpec) extends XmlNode {
     customBound(member(name).asInstanceOf[CustomM])
 }
 
-/** Fully-native binding: `parsed` is the struct the native parse
-  * ([[Bind.fx]]) produces with this spec's nativeReadSchema. */
+/** Fully-native binding: `parsed` is the typed struct
+  * ([[Bind.typedParse]]) of this spec's [[ObjSpec.typedSpec]], whose
+  * scalars, objs and array containers are already the first occurrence's
+  * (first-wins, Parser.cs:226-227). */
 private[xml] final class NativeBindNode(parsed: Column, tagC: Column,
     spec: ObjSpec) extends BaseBindNode(spec) {
   override def tag: Column = tagC
   override protected def scalarRaw(name: String): Column =
-    get(parsed.getField(name), lit(0)) // first-wins (Parser.cs:226-227)
+    throw new IllegalStateException("unreachable: typed scalars")
+  override protected def scalar(name: String, parser: Int): Column =
+    typedField(parsed, name, parser)
   override protected def attrRaw(name: String): Column =
     parsed.getField("_" + name)
   override protected def objBound(m: ObjM): Column = {
-    val sub = get(parsed.getField(m.name), lit(0))
+    val sub = parsed.getField(m.name)
     when(sub.isNotNull,
       m.f(new NativeBindNode(sub, lit(m.name), m.spec)))
   }
   override protected def arrBound(m: ArrM): Column =
-    Bind.bindNativeArray(get(parsed.getField(m.name), lit(0)), m)
+    Bind.bindNativeArray(parsed.getField(m.name), m)
   override protected def customBound(m: CustomM): Column =
     throw new IllegalStateException(
       "graft.xml: custom() requires the StAX path (unreachable natively)")
 }
 
 /** StAX-path binding: exact members bind natively via the pre-built
-  * `parsed` struct (the native parse of the outer XML); wildcard/custom/
+  * `parsed` struct (the typed parse of the outer XML); wildcard/custom/
   * heterogeneous members each pick their first matching child
   * ([[XmlPickChildExpr]]) from one extraction of the outer XML
   * ([[XmlChildrenExpr]]) that `b` binds once for the whole spec — no
@@ -502,13 +565,15 @@ private[xml] final class StaxBindNode(outer: Column, parsed: Column,
 
   override def tag: Column = tagC
   override protected def scalarRaw(name: String): Column =
-    if (name.contains("*")) firstKid(name).getField("value")
-    else get(parsed.getField(name), lit(0))
+    firstKid(name).getField("value")
+  override protected def scalar(name: String, parser: Int): Column =
+    if (name.contains("*")) super.scalar(name, parser)
+    else typedField(parsed, name, parser)
   override protected def attrRaw(name: String): Column =
     parsed.getField("_" + name)
   override protected def objBound(m: ObjM): Column =
     if (!m.name.contains("*") && m.spec.isNative) {
-      val sub = get(parsed.getField(m.name), lit(0))
+      val sub = parsed.getField(m.name)
       when(sub.isNotNull, m.f(new NativeBindNode(sub, lit(m.name), m.spec)))
     } else {
       val ch = firstKid(m.name)
@@ -516,7 +581,7 @@ private[xml] final class StaxBindNode(outer: Column, parsed: Column,
     }
   override protected def arrBound(m: ArrM): Column =
     if (!m.name.contains("*") && spec.arrayIsNative(m) && m.spec.attrs.isEmpty) {
-      Bind.bindNativeArray(get(parsed.getField(m.name), lit(0)), m)
+      Bind.bindNativeArray(parsed.getField(m.name), m)
     } else if (!m.name.contains("*") && m.spec.attrs.isEmpty) {
       b.bindArrayAt(outer, m) // fused one-pass container descent
     } else {
@@ -589,7 +654,7 @@ private[xml] final class NativeAltScalarNode(elemName: String, x: Column,
 }
 
 /** Native array with a single native-obj alternative: `x` is the element's
-  * parsed struct. */
+  * typed struct. */
 private[xml] final class NativeAltObjNode(elemName: String, x: Column,
     objM: ObjM, spec: ObjSpec) extends BaseBindNode(spec) {
   override def tag: Column = lit(elemName)

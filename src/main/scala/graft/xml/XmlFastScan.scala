@@ -28,7 +28,10 @@ import org.apache.spark.unsafe.types.UTF8String
   *     children only;
   *   - [[flatStruct]] — the native read-schema record shape (attributes,
   *     repeated scalar children and repeated objs of the same shape, to any
-  *     depth), the `from_xml` replacement used by [[XmlFlatParseExpr]].
+  *     depth), the `from_xml` replacement used by [[XmlFlatParseExpr]];
+  *     [[typedStruct]] is the same scan over a typed spec, decoding each
+  *     scalar member's first value with its [[XmlValues]] parsers
+  *     ([[XmlTypedParseExpr]]).
   *
   * Each handles exactly the subset it can prove equivalent to the engine
   * path it replaces and returns [[Bail]] for everything else (the caller
@@ -203,6 +206,11 @@ object XmlFastScan {
     /** The last [[text]] run held a CR / a `>`. */
     var cr: Boolean = false
     var gt: Boolean = false
+    /** The span of the last [[leafSpan]]'s text. */
+    var valStart, valEnd: Int = 0
+    /** A typed scan's reader of the cells the decoders leave undecided. */
+    var cells: XmlValues.Cells = null
+
     /** Name and value spans of the last start tag's attributes. */
     val attrS, attrE, valS, valE = new Array[Int](MaxAttrs)
     var nAttrs: Int = 0
@@ -617,32 +625,74 @@ object XmlFastScan {
   sealed trait FlatField extends Serializable { def name: String }
   /** `_name: string` — an attribute of the element. */
   final case class AttrF(name: String) extends FlatField
-  /** `name: array<string>` — every depth-1 child named `name`, leaf text. */
-  final case class ScalarF(name: String) extends FlatField
+  /** `name: array<string>` — every depth-1 child named `name`, leaf text.
+    * Typed (`parsers` non-empty): the FIRST such child's text read by each
+    * of the [[XmlValues]] parsers, one field `name:parser` per parser; a
+    * strict parser is not among them (its member reads the `str` field). */
+  final case class ScalarF(name: String, parsers: Seq[Int] = Nil)
+    extends FlatField
   /** `name: array<struct<…>>` — one struct per depth-1 child named
     * `name`, parsed with `spec` by the same kernel (a reference `Type`
-    * member, or a native array's container and its elements). */
-  final case class ObjF(name: String, spec: FlatSpec) extends FlatField
+    * member, or a native array's container and its elements). With
+    * `first`: `name: struct<…>`, the first such child's (null when there is
+    * none); later ones are checked but not decoded. */
+  final case class ObjF(name: String, spec: FlatSpec, first: Boolean = false)
+    extends FlatField
 
   private final val AttrK = 0
   private final val ScalarK = 1
   private final val ObjK = 2
+  private final val TypedK = 3 // a typed ScalarF
+  private final val FirstK = 4 // an ObjF with `first`
 
   /** The compiled byte-level form of one struct level: field names and
-    * kinds, precomputed so the kernel never dispatches on field classes. */
-  final class FlatSpec(val fields: Array[FlatField]) extends Serializable {
+    * kinds, precomputed so the kernel never dispatches on field classes.
+    * Output slots follow the fields, a typed scalar filling one per
+    * parser. */
+  final case class FlatSpec(fields: Seq[FlatField]) {
     private[XmlFastScan] val names: Array[Array[Byte]] =
-      fields.map(_.name.getBytes("UTF-8"))
+      fields.map(_.name.getBytes("UTF-8")).toArray
     private[XmlFastScan] val kinds: Array[Int] = fields.map {
-      case _: AttrF   => AttrK
-      case _: ScalarF => ScalarK
-      case _: ObjF    => ObjK
-    }
+      case _: AttrF                    => AttrK
+      case ScalarF(_, ps) if ps.isEmpty => ScalarK
+      case _: ScalarF                  => TypedK
+      case o: ObjF                     => if (o.first) FirstK else ObjK
+    }.toArray
     private[XmlFastScan] val subs: Array[FlatSpec] = fields.map {
-      case ObjF(_, s) => s
-      case _          => null
-    }
+      case o: ObjF => o.spec
+      case _       => null
+    }.toArray
+    private[XmlFastScan] val parsers: Array[Array[Int]] = fields.map {
+      case ScalarF(_, ps) => ps.toArray
+      case _              => null
+    }.toArray
+    /** The first output slot of each field. */
+    private[XmlFastScan] val slots: Array[Int] = fields.indices
+      .map(k => if (kinds(k) == TypedK) parsers(k).length else 1)
+      .scanLeft(0)(_ + _).toArray
     private[XmlFastScan] val hasAttrs: Boolean = kinds.contains(AttrK)
+    // a strict parser's cast raises, so it runs where its member is read
+    require(!parsers.exists(ps => ps != null && ps.exists(XmlValues.strict)),
+      "graft.xml: a typed spec holds no strict parser")
+
+    /** The parsers the typed scalars use, at any depth, in order. */
+    def parsersUsed: Seq[Int] = (fields.flatMap {
+      case ScalarF(_, ps) => ps
+      case o: ObjF        => o.spec.parsersUsed
+      case _              => Nil
+    }).distinct.sorted
+
+    /** The struct the kernel builds for this spec: a read schema when no
+      * field is typed. */
+    lazy val schema: StructType = StructType(fields.flatMap {
+      case AttrF(n) => Seq(StructField("_" + n, StringType))
+      case ScalarF(n, ps) if ps.isEmpty =>
+        Seq(StructField(n, ArrayType(StringType)))
+      case ScalarF(n, ps) =>
+        ps.map(p => StructField(typedName(n, p), XmlValues.dataType(p)))
+      case ObjF(n, sub, first) =>
+        Seq(StructField(n, if (first) sub.schema else ArrayType(sub.schema)))
+    })
 
     /** The element field named b[s, e), or -1. */
     private[XmlFastScan] def element(b: Array[Byte], s: Int, e: Int): Int = {
@@ -654,6 +704,10 @@ object XmlFastScan {
       -1
     }
   }
+
+  /** The field of a typed scalar `name` read by `parser`. */
+  def typedName(name: String, parser: Int): String =
+    name + ":" + XmlValues.parserNames(parser)
 
   object FlatSpec {
     /** A native read schema this scanner can serve, or None: string
@@ -676,7 +730,7 @@ object XmlFastScan {
         }
         i += 1
       }
-      Some(new FlatSpec(fs))
+      Some(new FlatSpec(fs.toSeq))
     }
   }
 
@@ -695,12 +749,15 @@ object XmlFastScan {
     *     attributes and nulls, and text other than whitespace inside an
     *     obj bails (the root's text is ignored, as from_xml ignores it);
     *   - unmatched elements are skipped like from_xml ignores them.
-    * null on bail. */
+    * Typed fields keep their first occurrence only, read by their parsers
+    * when `decode` (a later occurrence is checked with `decode` off); a
+    * cell the decoders leave undecided is read by Spark's own transform
+    * (none of a typed spec's parsers raises). null on bail. */
   private def struct(sc: Scan, spec: FlatSpec, ns: Int, ne: Int,
-      root: Boolean): GenericInternalRow = {
+      root: Boolean, decode: Boolean): GenericInternalRow = {
     val b = sc.b
     val nf = spec.names.length
-    val out = new Array[Any](nf)
+    val out = new Array[Any](spec.slots.last)
     if (spec.hasAttrs) {
       var k = 0
       while (k < nf) {
@@ -714,7 +771,7 @@ object XmlFastScan {
             if (ve > vs && (b(vs) == ' ' || b(ve - 1) == ' ')) {
               sc.bail = true; return null
             }
-            out(k) = slice(b, vs, ve)
+            out(spec.slots(k)) = slice(b, vs, ve)
           }
         }
         k += 1
@@ -725,6 +782,7 @@ object XmlFastScan {
       return new GenericInternalRow(out)
     }
     var acc: Array[java.util.ArrayList[AnyRef]] = null
+    var seen: Array[Boolean] = null
     var done = false
     while (!done) {
       val ts = sc.text()
@@ -744,14 +802,28 @@ object XmlFastScan {
         if (cs < 0) return null
         val ce = sc.i
         val k = spec.element(b, cs, ce)
+        val kind = if (k < 0) -1 else spec.kinds(k)
         if (k < 0) {
           sc.i = save
           if (sc.skipElement() < 0) return null
+        } else if (kind == TypedK || kind == FirstK) {
+          if (seen == null) seen = new Array[Boolean](nf)
+          val first = decode && !seen(k)
+          seen(k) = true
+          if (kind == TypedK) {
+            if (leafSpan(sc, cs, ce) < 0) return null
+            if (first) typedCells(sc, spec, k, out)
+          } else {
+            if (sc.tagTail(null) < 0) return null
+            val v = struct(sc, spec.subs(k), cs, ce, root = false, first)
+            if (v == null) return null
+            if (first) out(spec.slots(k)) = v
+          }
         } else {
           val v: AnyRef =
-            if (spec.kinds(k) == ScalarK) leafValue(sc, cs, ce)
+            if (kind == ScalarK) leafValue(sc, cs, ce)
             else if (sc.tagTail(null) < 0) null
-            else struct(sc, spec.subs(k), cs, ce, root = false)
+            else struct(sc, spec.subs(k), cs, ce, root = false, decode)
           if (v == null) return null
           if (acc == null) acc = new Array[java.util.ArrayList[AnyRef]](nf)
           if (acc(k) == null) acc(k) = new java.util.ArrayList[AnyRef](2)
@@ -762,7 +834,8 @@ object XmlFastScan {
     if (acc != null) {
       var k = 0
       while (k < nf) {
-        if (acc(k) != null) out(k) = new GenericArrayData(acc(k).toArray)
+        if (acc(k) != null)
+          out(spec.slots(k)) = new GenericArrayData(acc(k).toArray)
         k += 1
       }
     }
@@ -771,33 +844,80 @@ object XmlFastScan {
 
   /** A scalar child's text; the scan sits just after its name [cs, ce).
     * The start tag must carry NO attributes (value-semantics ambiguity).
-    * Returns the value or null (+bail via sc). */
-  private def leafValue(sc: Scan, cs: Int, ce: Int): UTF8String = {
+    * Consumes it through the end tag and leaves the text's span in
+    * `sc.valStart`/`sc.valEnd` (`sc.cr`: it holds a CR). -1 (+bail via sc)
+    * on bail. */
+  private def leafSpan(sc: Scan, cs: Int, ce: Int): Int = {
     val b = sc.b
     while (sc.i < sc.n && isWs(b(sc.i))) sc.i += 1
     // '>' must close the tag: an attribute, or `/>` (empty-value
     // ambiguity), bails
-    if (sc.i >= sc.n || b(sc.i) != '>') { sc.bail = true; return null }
+    if (sc.i >= sc.n || b(sc.i) != '>') return sc.fail()
     sc.i += 1
     val ts = sc.text()
-    if (ts < 0) return null
+    if (ts < 0) return -1
     val te = sc.i
     if (te == ts || isWs(b(ts)) || isWs(b(te - 1)) || // empty / padded
-      te + 1 >= sc.n || b(te + 1) != '/') { // nested element
-      sc.bail = true; return null
+      te + 1 >= sc.n || b(te + 1) != '/') // nested element
+      return sc.fail()
+    if (sc.endTag(cs, ce) < 0) return -1
+    sc.valStart = ts
+    sc.valEnd = te
+    ts
+  }
+
+  /** A scalar child's text as a string, or null (+bail via sc). */
+  private def leafValue(sc: Scan, cs: Int, ce: Int): UTF8String = {
+    val ts = leafSpan(sc, cs, ce)
+    if (ts < 0) null else textSlice(sc.b, ts, sc.valEnd, sc.cr)
+  }
+
+  /** The typed scalar field `k` of `spec` from the leaf text [leafSpan]
+    * just read, into `out`: a string for `str`, the decoders' value for the
+    * other parsers, and Spark's where they leave it undecided. */
+  private def typedCells(sc: Scan, spec: FlatSpec, k: Int,
+      out: Array[Any]): Unit = {
+    val ps = spec.parsers(k)
+    var b = sc.b
+    var s = sc.valStart
+    var e = sc.valEnd
+    var text: UTF8String = null
+    if (sc.cr) { // line ends normalized: decode the string the engines read
+      text = textSlice(b, s, e, cr = true)
+      b = text.getBytes; s = 0; e = b.length
     }
-    val cr = sc.cr
-    if (sc.endTag(cs, ce) < 0) return null
-    textSlice(b, ts, te, cr)
+    var j = 0
+    while (j < ps.length) {
+      val slot = spec.slots(k) + j
+      val p = ps(j)
+      if (p == XmlValues.Str) {
+        if (text == null) text = slice(b, s, e)
+        out(slot) = text
+      } else {
+        val v = XmlValues.decode(p, b, s, e, sc.cells.offset)
+        if (v eq XmlValues.Unknown) {
+          if (text == null) text = slice(b, s, e)
+          out(slot) = sc.cells.spark(p, text)
+        } else out(slot) = v
+      }
+      j += 1
+    }
   }
 
   /** Parse a record with a native read schema. Returns a
     * GenericInternalRow in schema order, or [[Bail]] (see [[struct]] for
     * the accepted subset). */
-  def flatStruct(input: UTF8String, spec: FlatSpec): AnyRef = {
+  def flatStruct(input: UTF8String, spec: FlatSpec): AnyRef =
+    typedStruct(input, spec, null)
+
+  /** [[flatStruct]] for a typed spec: `cells` reads what the decoders
+    * leave undecided. */
+  def typedStruct(input: UTF8String, spec: FlatSpec,
+      cells: XmlValues.Cells): AnyRef = {
     val sc = new Scan(input.getBytes)
+    sc.cells = cells
     if (!sc.openRoot()) return Bail
-    val row = struct(sc, spec, sc.rootS, sc.rootE, root = true)
+    val row = struct(sc, spec, sc.rootS, sc.rootE, root = true, decode = true)
     if (row == null) Bail else row
   }
 }

@@ -62,6 +62,52 @@ class PlanSpec extends AnyFunSuite with SharedSpark {
     assert(df.collect().toSeq == baseline)
   }
 
+  test("flat benchmark spec: one typed parse, and no try_cast or trim " +
+      "over its fields") {
+    // xmlbench's flat parser: a root attribute and one child per scalar
+    // parser; the members read the typed parse's fields as they are, but
+    // the strict `int`, which casts its string field at the member
+    val parser = XmlParser.struct("rec") { a =>
+      struct(
+        a.attribute("id").cast("long").as("id"),
+        a.int("seq").as("seq"),
+        a.nullInt("qty").as("qty"),
+        a.nullBool("flag").as("flag"),
+        a.nullDecimal("amt").as("amt"),
+        a.nullDate("ts").as("ts"),
+        a.str("status").as("status"),
+        a.nullInt("missing").as("missing"))
+    }
+    val plan = spark.range(0, 10)
+      .select(concat(lit("<rec id=\""), col("id").cast("string"),
+        lit("\"><qty>q1</qty></rec>")).as("value"))
+      .select(parser.parse(col("value")).as("p")).select(col("p.*"))
+      .queryExecution.optimizedPlan
+    import org.apache.spark.sql.catalyst.expressions.{Cast, EvalMode,
+      Expression, StringTrim}
+    var typed = 0
+    val scalars = scala.collection.mutable.ArrayBuffer.empty[Expression]
+    val outside = scala.collection.mutable.ArrayBuffer.empty[Expression]
+    // a member's scalar parse is walked without its cell, the Spark
+    // transform it runs only on text its decoder leaves undecided
+    def walk(e: Expression): Unit = e match {
+      case s: graft.xml.XmlScalarExpr => scalars += s.child; walk(s.child)
+      case _ if e.prettyName == "xml_typed_parse" => typed += 1
+      case _ => outside += e; e.children.foreach(walk)
+    }
+    plan.foreach(_.expressions.foreach(walk))
+    assert(typed == 1, plan.treeString)
+    assert(scalars.length == 1 && scalars.head.toString.contains("seq:str"),
+      plan.treeString)
+    assert(!outside.exists {
+      case c: Cast => c.evalMode == EvalMode.TRY
+      case _       => false
+    }, plan.treeString)
+    // the one trim left is the DSL's trim of the record itself
+    assert(outside.collect { case t: StringTrim => t.srcStr }
+      .forall(_.references.map(_.name) == Set("value")), plan.treeString)
+  }
+
   test("lambda-element parse stays inline; rows equal the rule-off result") {
     // array elements holding a nested obj: each element's parse reads the
     // lambda variable's outer XML, so it cannot be bound outside the
